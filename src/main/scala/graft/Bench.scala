@@ -457,8 +457,8 @@ object Bench {
     val slowest = sorted.sortBy(-_._2._1).take(12).sortBy(_._1)
     println(
       s"""{"metric":"total_summary","value":${r4(total)},"normalized_total":${r4(normalizedTotal)},"unit":"sec","queries":${qJson(slowest)},"sf":"$sfDir","n_queries":${results.size},"failed":$failedJson,"queries_shown":"slowest_12_of_${results.size}","full_artifact":"$artifactRef"}""")
-    spark.stop()
     println(
       s"""{"metric":"total","value":${r4(total)},"normalized_total":${r4(normalizedTotal)},"unit":"sec","queries":${qJson(sorted)},"sf":"$sfDir","n_queries":${results.size},"failed":$failedJson,"full_artifact":"$artifactRef"}""")
+    spark.stop()
   }
 }

@@ -2,7 +2,10 @@ package graft.ops
 
 import graft.core.ImageEvent
 import graft.kernels._
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import graft.plans.{WideRowsPlan, WideRowsStrategy}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftBridge}
+import org.apache.spark.sql.catalyst.plans.logical.CatalystSerde
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.types._
 
 /** Feature extraction: event → one wide row of float features with the
@@ -24,9 +27,11 @@ import org.apache.spark.sql.types._
   * `if "pixels" in p` guard (features/__init__.py:76-99): every input
   * row appears in the output.
   *
-  * One `Dataset.map` per branch — no shuffle; the row is built in a
-  * single pass and lands in a static schema so downstream relational
-  * ops (column pruning!) see real columns, not a blob.
+  * Every wide table is built by [[wideFrame]]: one plan node per
+  * branch (or one for all fused branches), no shuffle; the row is
+  * computed in a single pass per event and written straight into a
+  * static schema, so downstream relational ops (column pruning!) see
+  * real columns, not a blob.
   */
 object Features {
 
@@ -140,17 +145,30 @@ object Features {
     feats
   }
 
+  /** the loader meta cells every wide row starts with, in [[schema]]
+    * order */
+  def metaCells(e: ImageEvent): Array[Any] = Array[Any](e.path, e.idx, e.group, e.id)
+
   /** extract features for one branch → DataFrame with the declared
     * schema */
   def extract(ds: Dataset[ImageEvent], channelNames: Seq[String],
       types: Seq[String], prefix: String = null): DataFrame = {
-    val sch = schema(channelNames, types, prefix)
     val lay = layout(channelNames, types)
-    val enc = org.apache.spark.sql.Encoders.row(sch)
-    ds.map({ e =>
-      Row.fromSeq(Seq[Any](e.path, e.idx, e.group, e.id) ++
-        featureCells(e, channelNames, lay))
-    })(enc)
+    wideFrame(ds, schema(channelNames, types, prefix))(e =>
+      metaCells(e) ++ featureCells(e, channelNames, lay))
+  }
+
+  /** One row of `schema` per event: `cells` returns the row's values in
+    * schema field order (Scala values: String, Long, Int, Double or
+    * null), and [[graft.plans.WideRowsPlan]] writes them straight into
+    * unsafe rows — no `Row` per record and no per-field serializer
+    * expressions for Catalyst to analyze. */
+  def wideFrame(ds: Dataset[ImageEvent], schema: StructType)(
+      cells: ImageEvent => Array[Any]): DataFrame = {
+    val spark = ds.sparkSession
+    WideRowsStrategy.setup(spark)
+    GraftBridge.ofRows(spark, WideRowsPlan(DataTypeUtils.toAttributes(schema), cells,
+      CatalystSerde.deserialize(ds.queryExecution.analyzed)(ds.encoder)))
   }
 
   /** all requested non-regions families for a pixel-bearing event,

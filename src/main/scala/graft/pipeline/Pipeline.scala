@@ -4,6 +4,7 @@ import graft.core.{ImageEvent, Synthetic}
 import graft.ops._
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 
 /** The pipeline driver — the Spark re-expression of the reference's
   * `main()` fold (main.py:143-275):
@@ -73,16 +74,16 @@ object Pipeline {
       cfg: PipelineConfig): DataFrame =
     runPrepared(spark, prepare(spark, source, cfg), cfg)
 
-  /** [[run]] fused straight into the registry's digest reduction
-    * (r16): for a per-record config (no population filter /
-    * normalization) the wide feature row is never materialized as a
-    * PLANNED schema — the single fused map emits (keys..., row_digest,
-    * schema_digest) directly via [[graft.rel.Digest.fusedDigester]],
-    * collapsing the several-hundred-column encoder + ~5-nodes-per-
-    * column digest projection Catalyst was measured spending ~2.3 s/
-    * cell planning (p01). Aggregate-bearing configs fall back to the
-    * wide path + [[graft.rel.Digest.rows]] — same result either way
-    * (the committed goldens gate both). */
+  /** [[run]] reduced to the registry's digest table `(keys...,
+    * row_digest, schema_digest)`. For a per-record config (no
+    * population filter / normalization) the fused pass digests each
+    * wide row where it is computed ([[graft.rel.Digest.fusedDigester]]),
+    * so the planned schema is keys + 2 strings and Catalyst never sees
+    * the several-hundred-column digest projection [[graft.rel.Digest
+    * .rows]] would plan (measured at ~2.3 s/cell on p01 in r16).
+    * Aggregate-bearing configs digest the wide table with
+    * [[graft.rel.Digest.rows]] — the same result either way (DigestSpec
+    * pins the two digests equal; the committed goldens gate both). */
   def runDigested(spark: SparkSession, source: Dataset[ImageEvent],
       cfg: PipelineConfig, keyCols: Seq[String]): DataFrame = {
     val ds = prepare(spark, source, cfg)
@@ -197,78 +198,60 @@ object Pipeline {
     }
   }
 
-  /** all branches in one per-record pass → one wide Row; each branch
-    * may select its own feature types (the reference's per-branch
-    * feature_extraction map) */
-  private def fusedBranches(ds: org.apache.spark.sql.Dataset[ImageEvent],
-      cfg: PipelineConfig,
-      digestKeys: Option[Seq[String]] = None): DataFrame = {
-    import org.apache.spark.sql.types.{StructField, StructType, StringType}
+  /** the fused wide row: its declared schema (meta ++ every branch's
+    * feature columns ++ raw) and the per-record cells in that order;
+    * each branch may select its own feature types (the reference's
+    * per-branch feature_extraction map) */
+  private[graft] def fusedRow(cfg: PipelineConfig)
+      : (StructType, ImageEvent => Array[Any]) = {
+    val channelNames = cfg.channelNames
     val perBranch = cfg.branches.map { b =>
       val types = b.featureTypes.getOrElse(cfg.featureTypes)
-      val names = Features.featureNames(cfg.channelNames, types)
-      (b, Features.layout(cfg.channelNames, types), names)
+      (b, branchPrefix(b), Features.featureNames(channelNames, types),
+        Features.layout(channelNames, types))
     }
-    val prefixes = cfg.branches.map(branchPrefix)
-    val metaFields = Features.schema(cfg.channelNames, cfg.featureTypes, null)
-      .fields.take(4)
     val rawNames =
-      if (includeRaw(cfg)) Features.featureNames(cfg.channelNames, Seq("raw"))
+      if (includeRaw(cfg)) Features.featureNames(channelNames, Seq("raw"))
       else Seq.empty
-    val featFields = prefixes.zip(perBranch).flatMap { case (p, (_, _, names)) =>
-      names.map(n => org.apache.spark.sql.types.StructField(
-        Features.renamed(n, p, isLoaderMeta = false),
-        org.apache.spark.sql.types.DoubleType))
-    } ++ rawNames.map(n => org.apache.spark.sql.types.StructField(
-      Features.renamed(n, "raw", isLoaderMeta = false),
-      org.apache.spark.sql.types.DoubleType))
-    val sch = StructType(metaFields ++ featFields)
+    val featNames = perBranch.flatMap { case (_, p, names, _) =>
+      names.map(Features.renamed(_, p, isLoaderMeta = false))
+    } ++ rawNames.map(Features.renamed(_, "raw", isLoaderMeta = false))
+    val sch = StructType(
+      Features.schema(channelNames, cfg.featureTypes, null).fields.take(4) ++
+        featNames.map(StructField(_, DoubleType)))
     val mainCh = cfg.mainChannelIndex
     val combined = cfg.combinedIndices
-    val channelNames = cfg.channelNames
     val rawLayout =
       if (rawNames.nonEmpty) Some(Features.layout(channelNames, Seq("raw")))
       else None
-    // the shared per-record wide-row assembly (meta ++ every branch's
-    // feature cells, in schema field order)
-    def rowCells(e: ImageEvent): Array[Any] = {
-      val cells = perBranch.iterator.flatMap { case (b, lay, _) =>
+    val cells = (e: ImageEvent) =>
+      Features.metaCells(e) ++ perBranch.iterator.flatMap { case (b, _, _, lay) =>
         val be = Masking.branchRecord(b.method, mainCh, combined)(e)
         Features.featureCells(be, channelNames, lay)
-      }.toArray ++ rawLayout.toArray.flatMap { lay =>
-        Features.featureCells(e, channelNames, lay)
-      }
-      (Array[Any](e.path, e.idx, e.group, e.id) ++ cells)
-    }
+      } ++ rawLayout.iterator.flatMap(Features.featureCells(e, channelNames, _))
+    (sch, cells)
+  }
+
+  /** all branches in one per-record pass → one wide row, or with
+    * `digestKeys` straight to the digest table: the same cells, reduced
+    * inside the pass by [[graft.rel.Digest.fusedDigester]] */
+  private def fusedBranches(ds: Dataset[ImageEvent], cfg: PipelineConfig,
+      digestKeys: Option[Seq[String]] = None): DataFrame = {
+    val (sch, rowCells) = fusedRow(cfg)
     digestKeys match {
-      case None =>
-        val enc = org.apache.spark.sql.Encoders.row(sch)
-        ds.map({ e =>
-          org.apache.spark.sql.Row.fromSeq(rowCells(e).toSeq)
-        })(enc)
+      case None => Features.wideFrame(ds, sch)(rowCells)
       case Some(keys) =>
-        // fused digest (r16): the wide row exists only as a transient
-        // Array inside the map — the PLANNED schema is keys+2 strings,
-        // so Catalyst never analyzes the wide encoder or a per-column
-        // digest projection (see Digest.fusedDigester)
         val (schemaDigest, digestFn) = graft.rel.Digest.fusedDigester(sch)
-        val byName = sch.fieldNames.zipWithIndex.toMap
-        val keyIdx = keys.map(byName(_)).toArray
+        val keyIdx = keys.map(sch.fieldIndex).toArray
         val outSch = StructType(
-          keys.map(StructField(_, StringType)) ++ Seq(
-            StructField("row_digest", StringType),
-            StructField("schema_digest", StringType)))
-        val enc = org.apache.spark.sql.Encoders.row(outSch)
-        ds.map({ e =>
+          (keys ++ Seq("row_digest", "schema_digest")).map(StructField(_, StringType)))
+        Features.wideFrame(ds, outSch) { e =>
           val all = rowCells(e)
           // cast-to-string key semantics of Digest.rows (null stays
           // null; int/long/string render identically to Spark's cast)
-          val ks = keyIdx.map { i =>
-            val v = all(i); if (v == null) null else v.toString
-          }
-          org.apache.spark.sql.Row.fromSeq(
-            ks.toSeq ++ Seq(digestFn(all), schemaDigest))
-        })(enc).orderBy(keys.map(col): _*)
+          keyIdx.map[Any] { i => val v = all(i); if (v == null) null else v.toString } ++
+            Array[Any](digestFn(all), schemaDigest)
+        }.orderBy(keys.map(col): _*)
     }
   }
 

@@ -60,24 +60,21 @@ object Digest {
   private[graft] def isDigested(df: DataFrame, keyCols: Seq[String]): Boolean =
     df.columns.toSeq == keyCols ++ Seq("row_digest", "schema_digest")
 
-  /** Fused-digest builder (r16, guide §1.2 step 2 after measuring
-    * §7.3-style planning dominance): [[rows]] plans ~5 expression
-    * nodes per wide column on top of a several-hundred-field object
-    * serializer — for the fused imaging cells (p01: ~370 double
-    * columns, 10 rows) Catalyst planning was measured at 2.3 s of a
-    * 2.9 s cell (ObjectSerializerPruning + ResolveReferences/
-    * Functions dominating; RuleExecutor dump in OPTIMIZATION_r16.md).
-    * This factory precompiles the SAME reduction into one driver-built
-    * closure over the wide schema, so the fused map can emit the
-    * digest STRING directly and the planned schema shrinks to
-    * keys+2 strings. Semantics replicate [[rows]] bit for bit:
-    * fields sorted by name, `name=value` joined with "|", doubles as
-    * %.6g via a Locale.US Formatter (what Spark's format_string
-    * uses) after +0.0 canonicalization and null/NaN literals,
-    * non-doubles via cast-to-string, md5 lowercase hex over UTF-8.
-    * Returns (schema_digest, row-in-SCHEMA-FIELD-ORDER => row_digest).
-    * Any divergence fails the committed-golden gate, which compares
-    * these digests value-for-value. */
+  /** [[rows]] as one closure built per wide schema, for a
+    * pass that already holds each row's cells: the fused imaging path
+    * ([[graft.pipeline.Pipeline.runDigested]]) emits the digest string
+    * from its wide-row plan node, so the planned schema is keys + 2
+    * strings instead of the wide row plus ~5 expression nodes per
+    * column that [[rows]] plans (r16: Catalyst spent 2.3 s of a 2.9 s
+    * p01 cell there; RuleExecutor dump in OPTIMIZATION_r16.md).
+    * Semantics replicate [[rows]] bit for bit: fields sorted by name,
+    * `name=value` joined with "|", doubles as %.6g via a Locale.US
+    * Formatter (what Spark's format_string uses) after +0.0
+    * canonicalization and null/NaN literals, non-doubles via
+    * cast-to-string, md5 lowercase hex over UTF-8. Returns
+    * (schema_digest, row-in-SCHEMA-FIELD-ORDER => row_digest).
+    * DigestSpec feeds one frame through both; the committed goldens
+    * compare these digests value for value. */
   private[graft] def fusedDigester(schema: StructType)
       : (String, Array[Any] => String) = {
     val fields = schema.fields.sortBy(_.name)

@@ -1,0 +1,118 @@
+package graft.plans
+
+import graft.SparkSpec
+import graft.core.{ImageEvent, Synthetic}
+import graft.ops.{Features, Masking}
+import graft.pipeline.{MaskBranchConfig, Pipeline, PipelineConfig}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
+import org.apache.spark.sql.execution.SerializeFromObjectExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.types.StructType
+
+/** The wide-row plan node against the `Encoders.row` frame it replaced:
+  * same schema (nullability included), same rows value for value, no
+  * object serializer in the executed plan, and joins over per-branch
+  * wide frames still planned from the child's size estimate. */
+class WideRowsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+
+  private val channels = Seq("ch0", "ch1", "ch2")
+
+  /** the reference's scip_zarr.yml shape: four branches plus raw */
+  private val referenceCfg = PipelineConfig(
+    channelNames = channels,
+    branches = Seq(
+      MaskBranchConfig("circle-1", Masking.Circle),
+      MaskBranchConfig("circle-2", Masking.Circle),
+      MaskBranchConfig("li", Masking.Li(Seq(0.75, 0.75, 0.75))),
+      MaskBranchConfig("spot", Masking.Spot(5))))
+
+  /** a filter no event passes: every event tombstoned, feature cells null */
+  private val tombstoneCfg = PipelineConfig(
+    channelNames = channels,
+    branches = Seq(MaskBranchConfig("b", Masking.Circle)),
+    maskFilters = Seq(Masking.StdFilter(Seq(0), threshold = 1e9)))
+
+  /** the mechanism WideRowsPlan replaced: a `Row` per record through
+    * the row encoder of the declared schema */
+  private def rowEncoderFrame(ds: Dataset[ImageEvent], sch: StructType)(
+      cells: ImageEvent => Array[Any]): DataFrame =
+    ds.map(e => Row.fromSeq(cells(e).toSeq))(Encoders.row(sch))
+
+  /** rows keyed by meta_idx, NaN made comparable to itself */
+  private def keyed(df: DataFrame): Map[Long, Seq[Any]] =
+    df.collect().map { r =>
+      r.getAs[Long]("meta_idx") -> r.toSeq.map {
+        case d: java.lang.Double if d.isNaN => "NaN"
+        case v => v
+      }
+    }.toMap
+
+  /** the pipeline's wide frame equals the row-encoder frame of the same
+    * cells; returns its rows */
+  private def assertSameFrame(cfg: PipelineConfig, nEvents: Int): Map[Long, Seq[Any]] = {
+    val (sch, cells) = Pipeline.fusedRow(cfg)
+    val ds = Pipeline.prepare(spark, Synthetic.conftest(spark, nEvents), cfg)
+    val expected = rowEncoderFrame(ds, sch)(cells)
+    val wide = Pipeline.run(spark, Synthetic.conftest(spark, nEvents), cfg)
+    assert(wide.schema == expected.schema) // StructType equality covers nullability
+    val (a, b) = (keyed(wide), keyed(expected))
+    assert(a.size == nEvents && a == b)
+    val plan = collect(wide.queryExecution.executedPlan) { case p => p }
+    assert(plan.exists(_.isInstanceOf[WideRowsExec]), plan)
+    assert(!plan.exists(_.isInstanceOf[SerializeFromObjectExec]), plan)
+    a
+  }
+
+  test("reference shape (four branches + raw) equals the row-encoder frame") {
+    assertSameFrame(referenceCfg, 6)
+  }
+
+  test("tombstoned events: null feature cells equal the row-encoder frame") {
+    val rows = assertSameFrame(tombstoneCfg, 6)
+    // meta and regions survive; every feature cell is null
+    assert(rows.values.forall(r => r.take(4).forall(_ != null) && r.contains(null)))
+  }
+
+  test("per-branch extract equals the row-encoder frame") {
+    val types = Seq("regions", "bbox", "shape", "raw", "intensity")
+    val channels = this.channels // a local: the closure below must not capture the suite
+    val sch = Features.schema(channels, types, "b")
+    val lay = Features.layout(channels, types)
+    val ds = Masking.branch(Synthetic.conftest(spark, 5), Masking.Spot(3), 0)
+    val wide = Features.extract(ds, channels, types, "b")
+    val expected = rowEncoderFrame(ds, sch)(e =>
+      Features.metaCells(e) ++ Features.featureCells(e, channels, lay))
+    assert(wide.schema == expected.schema)
+    assert(keyed(wide) == keyed(expected))
+  }
+
+  test("aggregate-bearing branches: broadcast joins and partition count unchanged") {
+    // the per-branch frames must inherit their child's size estimate (a
+    // plan without statistics would turn these into sort-merge joins
+    // and let AQE coalesce the output)
+    for ((pop, n) <- Seq((false, 12), (true, 40))) {
+      val cfg = PipelineConfig(
+        channelNames = channels,
+        branches = Seq(MaskBranchConfig("a", Masking.Circle),
+          MaskBranchConfig("b", Masking.Spot(3))),
+        populationFilter = pop, normalize = true,
+        featureTypes = Seq("regions", "bbox", "intensity"))
+      val out = Pipeline.run(spark, Synthetic.conftest(spark, n), cfg)
+      assert(out.collect().length == n)
+      val plan = out.queryExecution.executedPlan
+      // two branches + raw: two joins, both broadcast
+      assert(collect(plan) { case j: BroadcastHashJoinExec => j }.length == 2, plan)
+      assert(collect(plan) { case w: WideRowsExec => w }.length == 3, plan)
+      assert(plan.execute().getNumPartitions == 4)
+      spark.catalog.clearCache()
+    }
+  }
+
+  test("setup installs the strategy once") {
+    val session = spark.newSession()
+    WideRowsStrategy.setup(session)
+    WideRowsStrategy.setup(session)
+    assert(session.experimental.extraStrategies.count(_ == WideRowsStrategy) == 1)
+  }
+}

@@ -57,4 +57,30 @@ class DigestSpec extends SparkSpec {
     val many = Digest.rows(df(rows).repartition(13), Seq("k")).collect().toSeq
     assert(one == many)
   }
+
+  test("fusedDigester equals Digest.rows on one wide frame") {
+    val wide = StructType(Seq(
+      StructField("meta_path", StringType), StructField("meta_idx", LongType),
+      StructField("meta_group", StringType), StructField("meta_id", IntegerType),
+      StructField("feat_b", DoubleType), StructField("feat_a", DoubleType),
+      StructField("feat_c", DoubleType)))
+    val rows = Seq(
+      Row("p/x.zarr", 0L, "g1", 1, 1.5, -0.0, 1e-300),
+      Row("p/x.zarr", 1L, null, 2, null, Double.NaN, -2.25e7),
+      Row("p/ü|y=z", Long.MaxValue, "g|2", -3, 0.0, 1.0 / 3, null),
+      Row(null, -7L, "", Int.MinValue, Double.NaN, null, -0.0))
+    val keys = Seq("meta_path", "meta_idx", "meta_id")
+    val frame = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), wide)
+    val viaRows = Digest.rows(frame, keys).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2)) ->
+        (r.getString(3), r.getString(4))).toMap
+    val (schemaDigest, digestFn) = Digest.fusedDigester(wide)
+    val fused = frame.collect().map { r =>
+      val cells = r.toSeq.toArray[Any]
+      def key(i: Int) = Option(cells(i)).map(_.toString).orNull
+      (key(0), key(1), key(3)) -> (digestFn(cells), schemaDigest)
+    }.toMap
+    assert(viaRows.size == rows.length)
+    assert(fused == viaRows)
+  }
 }
