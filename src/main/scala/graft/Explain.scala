@@ -8,6 +8,10 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage: `runMain graft.Explain <sfDir> <queryName>...`
   *        `runMain graft.Explain <sfDir> all` (plan-shape summary)
+  *
+  * `SPARK_GRAFT_EXPLAIN_CONF=k1=v1,k2=v2` sets session confs before any
+  * query is built. The value is split on every `,`, so a conf value
+  * that itself contains a comma cannot be passed this way.
   */
 object Explain {
   def main(args: Array[String]): Unit = {

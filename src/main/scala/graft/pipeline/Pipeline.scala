@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.core.{ImageEvent, Synthetic}
+import graft.core.{ImageEvent, Overlap, Synthetic}
 import graft.ops._
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
@@ -177,18 +177,8 @@ object Pipeline {
       // jobs cannot compute its partitions twice (the block manager
       // dedupes storage, not computation). Per-chain results are
       // unchanged: each chain's aggregates see the same cached parent.
-      val branchTables =
-        if (thunks.length <= 1) thunks.map(_())
-        else {
-          parent.count()
-          val pool = java.util.concurrent.Executors
-            .newFixedThreadPool(math.min(thunks.length, 4))
-          try thunks.map(t => pool.submit(
-            new java.util.concurrent.Callable[DataFrame] {
-              def call(): DataFrame = t()
-            })).map(_.get())
-          finally pool.shutdown()
-        }
+      if (thunks.length > 1) parent.count()
+      val branchTables = Overlap.all(thunks)
       branchTables.reduceLeft { (a, b) =>
         a.join(b.drop("meta_group"), // group is branch-invariant; keep one copy
           a("meta_path") === b("meta_path") && a("meta_idx") === b("meta_idx") &&

@@ -1,5 +1,6 @@
 package graft.rel
 
+import graft.core.Overlap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -307,11 +308,11 @@ object Cluster {
     // the corpus-side bucketed write is independent of the (expensive)
     // CC assignment build feeding the other — overlapped (guide §2.6):
     // the tiny corpus write rides inside the assignment build's tail
-    ScaleOps.writeBucketedConcurrently(
-      (() => Tables.documents(spark, dir).select("doc_id"),
-        ct, "doc_id", 8),
-      (() => nearDupAssignment(spark, dir)
-        .select("doc_id", "cluster_id", "cluster_size"), at, "doc_id", 8))
+    Overlap.all(Seq(
+      () => ScaleOps.writeBucketed(
+        Tables.documents(spark, dir).select("doc_id"), ct, "doc_id", 8),
+      () => ScaleOps.writeBucketed(nearDupAssignment(spark, dir)
+        .select("doc_id", "cluster_id", "cluster_size"), at, "doc_id", 8)))
     survivorship(spark.table(ct).hint("merge")
       .join(spark.table(at).hint("merge"), Seq("doc_id"), "left"))
   }

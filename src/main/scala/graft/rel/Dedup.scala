@@ -1,5 +1,6 @@
 package graft.rel
 
+import graft.core.Overlap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1092,20 +1093,12 @@ object Dedup {
     // INDEPENDENT corpus passes — compute the two cuts concurrently so
     // the second job backfills the first's task tail. Both are
     // deterministic per doc, so results are bit-identical.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    val (truth, sigs) =
-      try {
-        val jt = pool.submit(new java.util.concurrent.Callable[DataFrame] {
-          def call(): DataFrame = jaccardPairs(spark, docs, D21TruthJ)
-            .select("da", "db")
-            // tiny by construction; feeds two broadcast joins
-            .transform(Lineage.cut)
-        })
-        val js = pool.submit(new java.util.concurrent.Callable[DataFrame] {
-          def call(): DataFrame = Lineage.cut(minhashSignatures(spark, docs))
-        })
-        (jt.get(), js.get())
-      } finally pool.shutdown()
+    val Seq(truth, sigs) = Overlap.all(Seq(
+      () => jaccardPairs(spark, docs, D21TruthJ)
+        .select("da", "db")
+        // tiny by construction; feeds two broadcast joins
+        .transform(Lineage.cut),
+      () => Lineage.cut(minhashSignatures(spark, docs))))
     val withA = sigs.as("sa")
       .join(broadcast(truth), col("da") === col("sa.doc_id"))
       .select(col("da"), col("db"), col("sa.sig").as("siga"))

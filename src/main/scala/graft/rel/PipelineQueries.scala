@@ -1,6 +1,6 @@
 package graft.rel
 
-import graft.core.Synthetic
+import graft.core.{Overlap, Synthetic}
 import graft.ops._
 import graft.pipeline._
 import org.apache.spark.sql.functions._
@@ -2198,14 +2198,6 @@ object PipelineQueries {
       .toDF("j", "i")
   }
 
-  /** Measurement-only accessors for [[graft.tools.P27cStepProfile]]
-    * (the private phase functions, re-exported at package visibility —
-    * never on a timed registry path). */
-  private[graft] def profBandRows(keepers: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = bandRows(keepers)
-  private[graft] def profPairsWithin(banded: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = pairsWithin(banded)
-
   /** Final p27c snapshot from the accumulated state: a reason (j, i)
     * only counts if BOTH ends are still keepers (i may have been
     * replaced by a smaller doc_id after the pair was recorded; j's
@@ -2248,12 +2240,15 @@ object PipelineQueries {
     val base = new java.io.File(d).getName.replaceAll("[^A-Za-z0-9_]", "_")
     val ot = s"p14_orders_${base}_$jvmRunId"
     val lt = s"p14_lineitem_${base}_$jvmRunId"
-    // two independent ingest-side writes, overlapped (guide §2.6)
-    ScaleOps.writeBucketedConcurrently(
-      (() => Tables.orders(s, d).select("o_orderkey", "o_orderpriority"),
+    // two independent ingest-side writes, overlapped: the targets are
+    // distinct tables and SessionCatalog serializes the catalog updates
+    Overlap.all(Seq(
+      () => ScaleOps.writeBucketed(
+        Tables.orders(s, d).select("o_orderkey", "o_orderpriority"),
         ot, "o_orderkey", 8),
-      (() => Tables.lineitem(s, d).select("l_orderkey", "l_quantity"),
-        lt, "l_orderkey", 8))
+      () => ScaleOps.writeBucketed(
+        Tables.lineitem(s, d).select("l_orderkey", "l_quantity"),
+        lt, "l_orderkey", 8)))
     s.table(ot).hint("merge")
       .join(s.table(lt).hint("merge"),
         col("o_orderkey") === col("l_orderkey"))

@@ -40,27 +40,6 @@ object ScaleOps {
     ()
   }
 
-  /** [[writeBucketed]] for several INDEPENDENT tables at once
-    * (guide §2.6): the bucketed demo cells (p14, d24) write two
-    * unrelated tables back-to-back — each write is a small shuffle +
-    * 8-bucket write whose task tail leaves most cores idle, so
-    * submitting them concurrently lets the second job backfill the
-    * first's tail. Catalog ops are synchronized in SessionCatalog;
-    * targets are distinct tables. Results identical, scheduling only. */
-  def writeBucketedConcurrently(
-      specs: (() => DataFrame, String, String, Int)*): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(specs.size)
-    // frame THUNKS, not frames: a source whose construction itself runs
-    // jobs (d24's CC assignment fixpoint) must build on the pool thread
-    // so the sibling write overlaps the build, not just the final write
-    try specs.map { case (df, table, key, buckets) =>
-      pool.submit(new java.util.concurrent.Callable[Unit] {
-        def call(): Unit = writeBucketed(df(), table, key, buckets)
-      })
-    }.foreach(_.get())
-    finally pool.shutdown()
-  }
-
   /** Equi-join two same-bucketed tables on their bucket key. With both
     * sides bucketed by `key` into the same count, the planner emits a
     * SortMergeJoin with zero Exchange operators (asserted in

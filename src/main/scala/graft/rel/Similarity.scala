@@ -1,5 +1,6 @@
 package graft.rel
 
+import graft.core.Overlap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -769,34 +770,6 @@ object Similarity {
     * bounded sample, assign, persist the cell-partitioned index and
     * the centroid table (the stored-layout contract both the append
     * and serve paths depend on — one definition so it cannot drift). */
-  /** Run independent Spark actions concurrently from the driver
-    * (guide §2.6): actions are only sequential because callers invoke
-    * them sequentially — overlapping lets the second job's tasks
-    * backfill the first's straggler tail. Only for actions with NO
-    * data dependency and disjoint write targets. A failure in either
-    * propagates loudly (ExecutionException from Future.get). */
-  private def runConcurrently(fs: (() => Unit)*): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(fs.size)
-    try fs.map(f => pool.submit(new java.util.concurrent.Callable[Unit] {
-      def call(): Unit = f()
-    })).foreach(_.get())
-    finally pool.shutdown()
-  }
-
-  /** [[runConcurrently]] for two independent value-producing actions. */
-  private def par2[A, B](fa: () => A, fb: () => B): (A, B) = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    try {
-      val ja = pool.submit(new java.util.concurrent.Callable[A] {
-        def call(): A = fa()
-      })
-      val jb = pool.submit(new java.util.concurrent.Callable[B] {
-        def call(): B = fb()
-      })
-      (ja.get(), jb.get())
-    } finally pool.shutdown()
-  }
-
   private[graft] def buildIvfIndex(spark: SparkSession, corpus: DataFrame,
       idxPath: String, nList: Int): Unit = {
     import spark.implicits._
@@ -804,9 +777,9 @@ object Similarity {
     val centroids = kmeansCentroids(sample, nList, iters = 8)
     val bcBuild = spark.sparkContext.broadcast(centroids)
     val assignUdf = udf { (v: Array[Float]) => nearestCell(unit(v), bcBuild.value) }
-    // two independent writes (index tree, centroid table) — overlapped,
-    // see runConcurrently; shared by s15/s18/s22/s23
-    runConcurrently(
+    // two independent writes (index tree, centroid table), overlapped;
+    // shared by s15/s18/s22/s23
+    Overlap.all(Seq(
       () => corpus.select(col("vec_id").as("nid"), col("embedding").as("ne"),
           assignUdf(col("embedding")).as("cell"))
         .write.mode("overwrite").partitionBy("cell")
@@ -814,7 +787,7 @@ object Similarity {
       () => centroids.zipWithIndex
         .map { case (c, i) => (i, c.toSeq) }.toSeq
         .toDF("cell", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$idxPath/centroids"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$idxPath/centroids")))
   }
 
   /** Read the STORED centroid table back (the serve/append paths must
@@ -1275,7 +1248,7 @@ object Similarity {
     // the first's task tail (guide §2.6); the lifecycle order the cell
     // demonstrates (build → append → delete → fold) is a DATA
     // dependency chain, and both of these precede the fold either way
-    runConcurrently(
+    Overlap.all(Seq(
       () => batch.select(col("vec_id").as("nid"),
           col("embedding").as("ne"),
           assignStored(col("embedding")).as("cell"))
@@ -1285,7 +1258,7 @@ object Similarity {
         .select(col("vec_id").as("nid"),
           assignStored(col("embedding")).as("cell"))
         .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$idxPath/tombstones"))
+        .parquet(s"$idxPath/tombstones")))
     // the reference result BEFORE compacting: tombstone serve over the
     // appended layout (s22's shape). r15: materialized — nQueries·k
     // rows — because the equivalence audit below consumes it TWICE
@@ -1304,8 +1277,9 @@ object Similarity {
     // stored-layout-only rewrite into version 2 — no corpus read, no
     // retrain; the anti-join is per-cell (both sides cell-partitioned
     // on disk) with the tombstone side broadcast
-    val (viaTombstones, _) = par2(
-      () => serveIvfIndex(spark, e, idxPath, cents,
+    var viaTombstones: DataFrame = null
+    Overlap.all(Seq(
+      () => viaTombstones = serveIvfIndex(spark, e, idxPath, cents,
         nQueries, k, nProbe, tombstones = Some(s"$idxPath/tombstones"),
         sharedProbe = Some(probe))
         .localCheckpoint(),
@@ -1313,7 +1287,7 @@ object Similarity {
         .join(broadcast(spark.read.parquet(s"$idxPath/tombstones")),
           Seq("cell", "nid"), "left_anti")
         .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$idxPath/v2/index"))
+        .parquet(s"$idxPath/v2/index")))
     // the stored centroids carry over VERBATIM (no retrain — probe
     // routing unchanged), so v2's centroid table is a byte-for-byte
     // filesystem copy of v1's, not a Spark write job: compaction
@@ -1338,11 +1312,13 @@ object Similarity {
     // subplan without the cut; nQueries·k rows with it).
     // the v2 serve and the completeness audit both read only v2 (+ the
     // corpus count) — independent, overlapped (guide §2.6)
-    val (annV2, complete) = par2(
-      () => serveIvfIndex(spark, e, s"$idxPath/v2", cents,
+    var annV2: DataFrame = null
+    var complete = false
+    Overlap.all(Seq(
+      () => annV2 = serveIvfIndex(spark, e, s"$idxPath/v2", cents,
         nQueries, k, nProbe, sharedProbe = Some(probe)).localCheckpoint(),
-      () => spark.read.parquet(s"$idxPath/v2/index").count() ==
-        e.filter(!deletePredOn(col("vec_id"))).count())
+      () => complete = spark.read.parquet(s"$idxPath/v2/index").count() ==
+        e.filter(!deletePredOn(col("vec_id"))).count()))
     // post-compaction serve ≡ tombstone serve, row for row (same
     // cents ⇒ same probe cells; same survivor candidate set; same
     // float op order ⇒ bit-identical cosines). Evaluated BEFORE the
