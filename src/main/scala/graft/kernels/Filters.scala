@@ -71,22 +71,40 @@ object Filters {
     out
   }
 
+  /** index table for an axis of length n read up to `pad` past either
+    * end: entry i is border(i − pad, n). The window kernels read through
+    * these instead of calling `reflect`/`mirror` per access. */
+  private def indexTable(n: Int, pad: Int, border: (Int, Int) => Int): Array[Int] = {
+    val t = new Array[Int](n + 2 * pad)
+    var i = 0
+    while (i < t.length) { t(i) = border(i - pad, n); i += 1 }
+    t
+  }
+
+  private def reflectTable(n: Int, pad: Int): Array[Int] = indexTable(n, pad, reflect)
+
   /** Sobel gradient magnitude with skimage's 1/4-normalized kernels
     * and the final 1/sqrt(ndim) magnitude normalization of
     * skimage.filters.sobel (sqrt(gx² + gy²)/sqrt(2) in 2-D), reflect
-    * boundary (ndi.convolve default). */
+    * boundary (ndi.convolve default). The 8 neighbours are read through
+    * one reflect table per axis; the arithmetic is evaluated in the
+    * same order as the textbook expression, so every output is exact. */
   def sobel(img: Array[Float], h: Int, w: Int): Array[Float] = {
     val out = new Array[Float](h * w)
+    if (out.length == 0) return out
+    val rows = reflectTable(h, 1)
+    val cols = reflectTable(w, 1)
     var r = 0
     while (r < h) {
+      val up = rows(r) * w; val mid = rows(r + 1) * w; val dn = rows(r + 2) * w
       var c = 0
       while (c < w) {
-        @inline def p(dr: Int, dc: Int): Double =
-          img(reflect(r + dr, h) * w + reflect(c + dc, w))
-        val gy = ((p(-1, -1) + 2 * p(-1, 0) + p(-1, 1)) -
-          (p(1, -1) + 2 * p(1, 0) + p(1, 1))) / 4.0
-        val gx = ((p(-1, -1) + 2 * p(0, -1) + p(1, -1)) -
-          (p(-1, 1) + 2 * p(0, 1) + p(1, 1))) / 4.0
+        val lf = cols(c); val ct = cols(c + 1); val rt = cols(c + 2)
+        val nw: Double = img(up + lf); val n: Double = img(up + ct); val ne: Double = img(up + rt)
+        val west: Double = img(mid + lf); val east: Double = img(mid + rt)
+        val sw: Double = img(dn + lf); val s: Double = img(dn + ct); val se: Double = img(dn + rt)
+        val gy = ((nw + 2 * n + ne) - (sw + 2 * s + se)) / 4.0
+        val gx = ((nw + 2 * west + sw) - (ne + 2 * east + se)) / 4.0
         out(r * w + c) = (math.sqrt(gx * gx + gy * gy) / math.sqrt(2.0)).toFloat
         c += 1
       }
@@ -95,20 +113,23 @@ object Filters {
     out
   }
 
-  /** disk structuring element offsets: all (dr,dc) with dr²+dc² <= r²
-    * (skimage.morphology.disk) */
-  def diskOffsets(radius: Int): Array[(Int, Int)] = {
-    val buf = Array.newBuilder[(Int, Int)]
-    var dr = -radius
-    while (dr <= radius) {
-      var dc = -radius
-      while (dc <= radius) {
-        if (dr * dr + dc * dc <= radius * radius) buf += ((dr, dc))
-        dc += 1
+  private val halfWidthCache = new java.util.concurrent.ConcurrentHashMap[Int, Array[Int]]()
+
+  /** disk structuring element (skimage.morphology.disk: all (dr, dc)
+    * with dr² + dc² <= r²) as per-row half-widths: entry dr + radius is
+    * ⌊√(radius² − dr²)⌋, the largest |dc| on row dr. Built once per
+    * radius and shared (callers must not mutate it); later calls for a
+    * radius allocate nothing. */
+  def diskHalfWidths(radius: Int): Array[Int] = {
+    require(radius >= 0, s"disk radius $radius < 0")
+    halfWidthCache.computeIfAbsent(radius, { r =>
+      Array.tabulate(2 * r + 1) { i =>
+        val dr = i - r
+        var d = 0
+        while ((d + 1) * (d + 1) + dr * dr <= r * r) d += 1
+        d
       }
-      dr += 1
-    }
-    buf.result()
+    })
   }
 
   /** median filter with a disk footprint, skimage.filters.rank.median
@@ -118,22 +139,23 @@ object Filters {
     * first value whose cumulative count exceeds n/2 — the upper-middle
     * for even n. */
   def medianDisk(img: Array[Float], h: Int, w: Int, radius: Int): Array[Float] = {
-    val offs = diskOffsets(radius)
+    val hw = diskHalfWidths(radius)
     val out = new Array[Float](h * w)
-    val window = new Array[Float](offs.length)
+    val window = new Array[Float](hw.map(2 * _ + 1).sum)
     var r = 0
     while (r < h) {
+      val drLo = math.max(-radius, -r); val drHi = math.min(radius, h - 1 - r)
       var c = 0
       while (c < w) {
+        // in-image footprint pixels in row-major (dr, dc) order
         var n = 0
-        var i = 0
-        while (i < offs.length) {
-          val (dr, dc) = offs(i)
-          val rr = r + dr; val cc = c + dc
-          if (rr >= 0 && rr < h && cc >= 0 && cc < w) {
-            window(n) = img(rr * w + cc); n += 1
-          }
-          i += 1
+        var dr = drLo
+        while (dr <= drHi) {
+          val half = hw(dr + radius)
+          val lo = math.max(c - half, 0); val hi = math.min(c + half, w - 1)
+          System.arraycopy(img, (r + dr) * w + lo, window, n, hi - lo + 1)
+          n += hi - lo + 1
+          dr += 1
         }
         // rank-(n/2) selection — a full O(k log k) sort of the ~81-
         // element window per pixel is pure waste (medianSquare already
@@ -158,6 +180,9 @@ object Filters {
     val n = size * size
     val window = new Array[Float](n)
     val out = new Array[Float](h * w)
+    if (out.length == 0) return out
+    // rows(r + dr − lo) = reflect(r + dr, h); cols likewise
+    val rows = reflectTable(h, -lo); val cols = reflectTable(w, -lo)
     var r = 0
     while (r < h) {
       var c = 0
@@ -165,9 +190,10 @@ object Filters {
         var k = 0
         var dr = lo
         while (dr <= hi) {
+          val base = rows(r + dr - lo) * w
           var dc = lo
           while (dc <= hi) {
-            window(k) = img(reflect(r + dr, h) * w + reflect(c + dc, w))
+            window(k) = img(base + cols(c + dc - lo))
             k += 1
             dc += 1
           }
@@ -240,7 +266,9 @@ object Filters {
     val oddSize = 2 * off + 1
     val s2 = (oddSize * oddSize).toDouble
     val out = new Array[Float](h * w)
-    @inline def at(r: Int, c: Int): Double = img(mirror(r, h) * w + mirror(c, w))
+    val pad = patchDistance + off
+    val rows = indexTable(h, pad, mirror); val cols = indexTable(w, pad, mirror)
+    @inline def at(r: Int, c: Int): Double = img(rows(r + pad) * w + cols(c + pad))
     var r = 0
     while (r < h) {
       var c = 0
@@ -286,28 +314,101 @@ object Filters {
   def dilateGray(img: Array[Float], h: Int, w: Int, radius: Int): Array[Float] =
     rankExtreme(img, h, w, radius, isMin = false)
 
+  /** Grayscale min (isMin) or max over disk(radius), reflect boundary,
+    * with a fixed amount of work per pixel: row spans.
+    *
+    * The plane is reflect-padded by `radius` on every side once. Span k
+    * of a padded row at column j is the extreme of columns j−k .. j+k:
+    * span 0 is the row itself, span 1 combines columns j−1, j and j+1,
+    * and span k ≥ 2 combines span k−1 at j−1 and at j+1, which together
+    * cover j−k .. j+k. A disk is the union of its rows, row dr spanning
+    * half-width [[diskHalfWidths]](dr), so each output pixel combines
+    * 2R+1 spans. Levels are built in place, one at a time, and each is
+    * folded into the output before the next overwrites it: R passes over
+    * the padded plane plus 2R+1 over the output, against ~πR² reflected
+    * reads per pixel for the naive window scan. Max runs as min on the
+    * negated plane (negation is exact).
+    *
+    * NaN and ±0 contract — identical to the naive scan that starts at
+    * the identity (Float.MaxValue for min, Float.MinValue for max) and
+    * takes v only when v < ext (v > ext): NaN never wins, +Inf never
+    * beats Float.MaxValue (−Inf never beats Float.MinValue), and an
+    * all-NaN window returns the identity. Padding clamps every pixel to
+    * the identity in the same way, so the spans fold clamped values and
+    * agree with the scan bit for bit, with one exception: when −0.0 and
+    * +0.0 both hold a window's extreme, the scan keeps the one first in
+    * row-major footprint order and the spans may keep the other. The two
+    * compare equal, so any threshold of the output agrees. */
   private def rankExtreme(img: Array[Float], h: Int, w: Int, radius: Int,
       isMin: Boolean): Array[Float] = {
-    val offs = diskOffsets(radius)
+    val hw = diskHalfWidths(radius)
     val out = new Array[Float](h * w)
-    var r = 0
-    while (r < h) {
-      var c = 0
-      while (c < w) {
-        var ext = if (isMin) Float.MaxValue else Float.MinValue
-        var i = 0
-        while (i < offs.length) {
-          val (dr, dc) = offs(i)
-          val v = img(reflect(r + dr, h) * w + reflect(c + dc, w))
-          if (isMin) { if (v < ext) ext = v } else if (v > ext) ext = v
-          i += 1
-        }
-        out(r * w + c) = ext
-        c += 1
+    if (out.length == 0) return out
+    val sign = if (isMin) 1f else -1f
+    val rows = reflectTable(h, radius)
+    val cols = reflectTable(w, radius)
+    val ph = rows.length; val pw = cols.length
+    val span = new Array[Float](ph * pw)
+    var i = 0
+    while (i < ph) {
+      val src = rows(i) * w; val dst = i * pw
+      var j = 0
+      while (j < pw) {
+        val v = sign * img(src + cols(j))
+        span(dst + j) = if (v < Float.MaxValue) v else Float.MaxValue
+        j += 1
       }
-      r += 1
+      i += 1
+    }
+    java.util.Arrays.fill(out, Float.MaxValue)
+    var k = 0
+    while (k <= radius) {
+      if (k > 0) widenSpans(span, ph, pw, k)
+      var dr = -radius
+      while (dr <= radius) {
+        if (hw(dr + radius) == k) {
+          var r = 0
+          while (r < h) {
+            val src = (r + radius + dr) * pw + radius; val dst = r * w
+            var c = 0
+            while (c < w) {
+              val v = span(src + c)
+              if (v < out(dst + c)) out(dst + c) = v
+              c += 1
+            }
+            r += 1
+          }
+        }
+        dr += 1
+      }
+      k += 1
+    }
+    if (!isMin) {
+      i = 0
+      while (i < out.length) { out(i) = -out(i); i += 1 }
     }
     out
+  }
+
+  /** in place: min-span level k − 1 → level k on every padded row, over
+    * the columns where level k is defined (k .. pw − 1 − k) */
+  private def widenSpans(span: Array[Float], ph: Int, pw: Int, k: Int): Unit = {
+    var i = 0
+    while (i < ph) {
+      val base = i * pw
+      var left = span(base + k - 1) // level k − 1 at j − 1
+      var j = base + k
+      val end = base + pw - k
+      while (j < end) {
+        val cur = span(j); val right = span(j + 1)
+        var m = if (right < left) right else left
+        if (k == 1 && cur < m) m = cur
+        span(j) = m
+        left = cur
+        j += 1
+      }
+      i += 1
+    }
   }
 
   /** grayscale opening = dilate(erode) */

@@ -9,26 +9,70 @@ package graft.kernels
   */
 object Morphology {
 
+  /** binary erosion by disk(radius). Out-of-bounds pixels count as
+    * FOREGROUND: skimage.morphology.binary_erosion passes
+    * border_value=True to ndi, so erosion never eats the image border —
+    * the edge-XOR view (features/intensity.py:80-81) depends on this for
+    * masks touching their bbox crop. */
   def erodeBinary(mask: Array[Boolean], h: Int, w: Int, radius: Int): Array[Boolean] = {
-    val offs = Filters.diskOffsets(radius)
-    val out = new Array[Boolean](h * w)
+    val out = diskHits(mask, h, w, radius, target = false)
+    var i = 0
+    while (i < out.length) { out(i) = !out(i); i += 1 }
+    out
+  }
+
+  /** binary dilation by disk(radius); out-of-bounds pixels are ignored */
+  def dilateBinary(mask: Array[Boolean], h: Int, w: Int, radius: Int): Array[Boolean] =
+    diskHits(mask, h, w, radius, target = true)
+
+  /** whether disk(radius) around each pixel holds an in-image pixel equal
+    * to `target` — the row-span scheme of Filters' grayscale rank kernels
+    * on booleans, with every span width stored at once. `dist` holds, per
+    * pixel, the distance along its row to the nearest in-image `target`
+    * pixel (two passes per row), so the span of half-width k around
+    * (r, c) holds a `target` pixel iff dist(r, c) <= k. A disk is the
+    * union of its rows, row dr of half-width [[Filters.diskHalfWidths]],
+    * so each pixel tests at most 2R+1 rows and stops at the first hit.
+    * Rows and columns outside the image never hit: that is erosion's
+    * foreground border (target = false) and dilation's ignored border
+    * (target = true). */
+  private def diskHits(mask: Array[Boolean], h: Int, w: Int, radius: Int,
+      target: Boolean): Array[Boolean] = {
+    val hw = Filters.diskHalfWidths(radius)
+    val far = Int.MaxValue
+    val dist = new Array[Int](h * w)
     var r = 0
     while (r < h) {
+      val base = r * w
+      var d = far
       var c = 0
       while (c < w) {
-        var all = true
-        var i = 0
-        while (all && i < offs.length) {
-          val rr = r + offs(i)._1; val cc = c + offs(i)._2
-          // out-of-bounds counts as FOREGROUND: skimage.morphology.
-          // binary_erosion passes border_value=True to ndi so erosion
-          // never eats the image border — the edge-XOR view
-          // (features/intensity.py:80-81) depends on this for masks
-          // touching their bbox crop
-          if (rr >= 0 && rr < h && cc >= 0 && cc < w && !mask(rr * w + cc)) all = false
-          i += 1
+        d = if (mask(base + c) == target) 0 else if (d == far) far else d + 1
+        dist(base + c) = d
+        c += 1
+      }
+      d = far
+      c = w - 1
+      while (c >= 0) {
+        d = if (mask(base + c) == target) 0 else if (d == far) far else d + 1
+        if (d < dist(base + c)) dist(base + c) = d
+        c -= 1
+      }
+      r += 1
+    }
+    val out = new Array[Boolean](h * w)
+    r = 0
+    while (r < h) {
+      val drLo = math.max(-radius, -r); val drHi = math.min(radius, h - 1 - r)
+      var c = 0
+      while (c < w) {
+        var hit = false
+        var dr = drLo
+        while (!hit && dr <= drHi) {
+          hit = dist((r + dr) * w + c) <= hw(dr + radius)
+          dr += 1
         }
-        out(r * w + c) = all
+        out(r * w + c) = hit
         c += 1
       }
       r += 1
@@ -36,26 +80,12 @@ object Morphology {
     out
   }
 
-  def dilateBinary(mask: Array[Boolean], h: Int, w: Int, radius: Int): Array[Boolean] = {
-    val offs = Filters.diskOffsets(radius)
-    val out = new Array[Boolean](h * w)
-    var r = 0
-    while (r < h) {
-      var c = 0
-      while (c < w) {
-        var any = false
-        var i = 0
-        while (!any && i < offs.length) {
-          val rr = r + offs(i)._1; val cc = c + offs(i)._2
-          if (rr >= 0 && rr < h && cc >= 0 && cc < w && mask(rr * w + cc)) any = true
-          i += 1
-        }
-        out(r * w + c) = any
-        c += 1
-      }
-      r += 1
-    }
-    out
+  /** whether any element of `mask` is set (a while loop: `exists` on an
+    * Array[Boolean] goes through a generic, boxed predicate) */
+  def any(mask: Array[Boolean]): Boolean = {
+    var i = 0
+    while (i < mask.length) { if (mask(i)) return true; i += 1 }
+    false
   }
 
   def closeBinary(mask: Array[Boolean], h: Int, w: Int, radius: Int): Array[Boolean] =
@@ -77,14 +107,18 @@ object Morphology {
 
   // ---- connected components ---------------------------------------------
 
-  private val off8 = Array((-1, -1), (-1, 0), (-1, 1), (0, -1), (0, 1), (1, -1), (1, 0), (1, 1))
-  private val off4 = Array((-1, 0), (0, -1), (0, 1), (1, 0))
+  // neighbour offsets as (row, column) pairs in flat arrays
+  private val dr8 = Array(-1, -1, -1, 0, 0, 1, 1, 1)
+  private val dc8 = Array(-1, 0, 1, -1, 1, -1, 0, 1)
+  private val dr4 = Array(-1, 0, 0, 1)
+  private val dc4 = Array(0, -1, 1, 0)
 
   /** connected-component labeling, labels 1..n in scan order of first
     * pixel (skimage.measure.label; connectivity 2 = 8-conn default in
     * 2-D, connectivity 1 = 4-conn). BFS flood fill. */
   def label(mask: Array[Boolean], h: Int, w: Int, connectivity: Int = 2): Array[Int] = {
-    val offs = if (connectivity >= 2) off8 else off4
+    val dro = if (connectivity >= 2) dr8 else dr4
+    val dco = if (connectivity >= 2) dc8 else dc4
     val out = new Array[Int](h * w)
     var next = 0
     // primitive int stack: an ArrayDeque[Int] boxes every pixel index
@@ -106,8 +140,8 @@ object Morphology {
           val cur = stack(top)
           val r = cur / w; val c = cur % w
           var i = 0
-          while (i < offs.length) {
-            val rr = r + offs(i)._1; val cc = c + offs(i)._2
+          while (i < dro.length) {
+            val rr = r + dro(i); val cc = c + dco(i)
             if (rr >= 0 && rr < h && cc >= 0 && cc < w) {
               val j = rr * w + cc
               if (mask(j) && out(j) == 0) {

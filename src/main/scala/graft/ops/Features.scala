@@ -185,6 +185,13 @@ object Features {
       var i = 0
       while (i < row.length) { emit(row(i)); i += 1 }
     }
+    // each mask is built once per event, on first use by any family
+    lazy val combined = e.combinedMaskBool
+    val planeMasks = new Array[Array[Boolean]](channelNames.length)
+    def maskOf(c: Int): Array[Boolean] = {
+      if (planeMasks(c) == null) planeMasks(c) = e.maskPlane(c)
+      planeMasks(c)
+    }
     types.foreach {
       case "bbox" =>
         emit(e.bboxMinr.toDouble)
@@ -194,12 +201,12 @@ object Features {
 
       case "shape" =>
         // combined first, then channels (features/shape.py:143-150)
-        emitAll(shapeRow(e.combinedMaskBool, h, w))
+        emitAll(shapeRow(combined, h, w))
         var c = 0
         while (c < channelNames.length) {
-          val mp = e.maskPlane(c)
+          val mp = maskOf(c)
           emitAll(
-            if (mp.exists(identity)) shapeRow(mp, h, w)
+            if (Morphology.any(mp)) shapeRow(mp, h, w)
             else RegionProps.Names.indices.map(i =>
               if (i <= 10) 0.0 else Double.NaN).toArray)
           c += 1
@@ -213,26 +220,25 @@ object Features {
         }
 
       case "intensity" =>
+        val combinedEdge = Morphology.edgeBand(combined, h, w, 6)
         var c = 0
         while (c < channelNames.length) {
-          val rows = intensityViews(e, c)
+          val rows = intensityViews(e, c, maskOf(c), combined, combinedEdge)
           var v = 0
           while (v < 8) { emitAll(rows(v)); v += 1 }
           c += 1
         }
 
       case "texture" =>
-        // combined mask is loop-invariant (one O(H*W) build, not C);
         // each channel plane copies once, not twice
-        val texCombined = e.combinedMaskBool
         var c = 0
         while (c < channelNames.length) {
-          val mp = e.maskPlane(c)
+          val mp = maskOf(c)
           val pl = e.plane(c)
           emitAll(
-            if (mp.exists(identity)) textureRow(pl, mp, h, w)
+            if (Morphology.any(mp)) textureRow(pl, mp, h, w)
             else Array.fill(texRowLen)(Double.NaN))
-          emitAll(textureRow(pl, texCombined, h, w))
+          emitAll(textureRow(pl, combined, h, w))
           c += 1
         }
 
@@ -294,13 +300,14 @@ object Features {
     acc
   }
 
-  /** the 8 intensity views of features/intensity.py:84-164 */
-  private def intensityViews(e: ImageEvent, c: Int): Array[Array[Double]] = {
+  /** the 8 intensity views of features/intensity.py:84-164, over
+    * channel c's mask `mp`, the combined mask `cm` and its edge band
+    * `cedge` */
+  private def intensityViews(e: ImageEvent, c: Int, mp: Array[Boolean],
+      cm: Array[Boolean], cedge: Array[Boolean]): Array[Array[Double]] = {
     val ps = e.planeSize
     val out = Array.fill(8)(new Array[Double](IntensityProps.length))
     val plane = e.plane(c)
-    val mp = e.maskPlane(c)
-    val cm = e.combinedMaskBool
     val bg = if (e.background != null) e.background(c) else 0.0
     val cbg = if (e.combinedBackground != null) e.combinedBackground(c) else 0.0
 
@@ -315,12 +322,12 @@ object Features {
     def minus(v: Array[Float], b: Double): Array[Float] =
       v.map(x => (x - b).toFloat)
 
-    if (mp.exists(identity)) {
+    if (Morphology.any(mp)) {
       val mpx = select(mp)
       out(0) = Stats.intensityRow(mpx)
       out(1) = Stats.intensityRow(minus(mpx, bg))
       val edge = Morphology.edgeBand(mp, e.height, e.width, 6)
-      if (edge.exists(identity)) {
+      if (Morphology.any(edge)) {
         val epx = select(edge)
         out(2) = Stats.intensityRow(epx)
         out(3) = Stats.intensityRow(minus(epx, bg))
@@ -329,8 +336,7 @@ object Features {
     val cpx = select(cm)
     out(4) = Stats.intensityRow(cpx)
     out(5) = Stats.intensityRow(minus(cpx, cbg))
-    val cedge = Morphology.edgeBand(cm, e.height, e.width, 6)
-    if (cedge.exists(identity)) {
+    if (Morphology.any(cedge)) {
       val cepx = select(cedge)
       out(6) = Stats.intensityRow(cepx)
       out(7) = Stats.intensityRow(minus(cepx, cbg))

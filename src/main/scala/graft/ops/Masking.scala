@@ -169,7 +169,7 @@ object Masking {
         val sorted = closed.clone(); java.util.Arrays.sort(sorted)
         val t = Stats.percentile(sorted, q * 100)
         val bin = closed.map(_ > t)
-        if (!bin.exists(identity)) (bin, 0)
+        if (!Morphology.any(bin)) (bin, 0)
         else postProcessed(bin, h, w)
 
       case WatershedMethod(noisyChannels) =>
@@ -288,7 +288,7 @@ object Masking {
     var c = 0
     while (c < e.channels) {
       val plane = e.maskPlane(c)
-      if (plane.exists(identity)) {
+      if (Morphology.any(plane)) {
         val (scrubbed, n) = Morphology.scrubBorder(plane, e.height, e.width)
         var i = 0
         while (i < ps) { if (scrubbed(i)) newMask(c * ps + i) = 1; i += 1 }

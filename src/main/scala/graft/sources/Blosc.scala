@@ -1,5 +1,6 @@
 package graft.sources
 
+import java.io.IOException
 import java.nio.{ByteBuffer, ByteOrder}
 
 /** Blosc v1 frame decoder (the numcodecs/zarr default compressor) with
@@ -25,15 +26,28 @@ object Blosc {
   private val MaxSplits = 16
   private val MinBufferSize = 128
 
-  def decode(frame: Array[Byte]): Array[Byte] = {
+  /** decode one frame. `expected` >= 0 is the decoded size the caller
+    * knows (a fixed-dtype zarr chunk); a header `nbytes` that differs
+    * fails with an IOException before anything is allocated, as does a
+    * memcpyed frame too short to hold `nbytes`. Pass -1 when the size
+    * is unknown (vlen chunks). */
+  def decode(frame: Array[Byte], expected: Long = -1L): Array[Byte] = {
+    if (frame.length < 16)
+      throw new IOException(s"blosc frame of ${frame.length} bytes, shorter than its 16-byte header")
     val bb = ByteBuffer.wrap(frame).order(ByteOrder.LITTLE_ENDIAN)
     val flags = frame(2) & 0xff
     val typesize = frame(3) & 0xff
     val nbytes = bb.getInt(4)
     val blocksize = bb.getInt(8)
     require(nbytes >= 0 && blocksize > 0, s"bad blosc header: n=$nbytes block=$blocksize")
+    if (expected >= 0 && nbytes != expected)
+      throw new IOException(s"blosc header nbytes $nbytes != expected decoded size $expected")
+    val memcpyed = (flags & Memcpyed) != 0
+    if (memcpyed && frame.length < 16L + nbytes)
+      throw new IOException(
+        s"memcpyed blosc frame of ${frame.length} bytes cannot hold 16 + $nbytes")
     val out = new Array[Byte](nbytes)
-    if ((flags & Memcpyed) != 0) {
+    if (memcpyed) {
       System.arraycopy(frame, 16, out, 0, nbytes)
       return out
     }

@@ -3,6 +3,7 @@ package graft.sources
 import graft.core.{Codecs, ImageEvent}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import com.fasterxml.jackson.databind.ObjectMapper
+import java.io.IOException
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
 
@@ -161,13 +162,26 @@ object Zarr {
     case other => throw new IllegalArgumentException(s"unsupported zarr dtype: $other")
   }
 
+  /** decoded bytes of one fixed-dtype chunk, chunks.product × elemSize,
+    * computed in Long so that header dims cannot overflow it */
+  private def chunkBytes(m: ZarrMeta, path: String): Int = {
+    val limit = Int.MaxValue - 8L // the largest JVM byte array
+    val n = m.chunks.foldLeft(elemSize(m.dtype).toLong) { (acc, d) =>
+      if (d < 0) throw new IOException(s"negative zarr chunk dim $d in $path")
+      math.min(acc * d, limit + 1) // acc <= 2^31, d < 2^31: no overflow
+    }
+    if (n > limit) throw new IOException(s"zarr chunk of ${m.chunks.mkString("x")} " +
+      s"${m.dtype} elements in $path exceeds the largest array")
+    n.toInt
+  }
+
   /** zarr v2 semantics: a chunk file that was never written (e.g.
     * write_empty_chunks=False) IS a chunk full of fill_value — crash
     * here and every all-padding chunk kills the partition */
-  private def fillChunk(m: ZarrMeta): Array[Byte] = {
-    val elems = m.chunks.product
+  private def fillChunk(m: ZarrMeta, path: String): Array[Byte] = {
     val es = elemSize(m.dtype)
-    val out = new Array[Byte](elems * es)
+    val out = new Array[Byte](chunkBytes(m, path))
+    val elems = out.length / es
     if (m.fillValue != 0.0) {
       val bb = ByteBuffer.wrap(out).order(ByteOrder.LITTLE_ENDIAN)
       var i = 0
@@ -194,30 +208,50 @@ object Zarr {
       require(m.vlenDtype.isEmpty,
         s"missing vlen chunk $name in $path (zarr treats absent chunks " +
           "as fill_value, which has no defined vlen encoding)")
-      return fillChunk(m)
+      return fillChunk(m, path)
     }
     val bytes = Files.readAllBytes(f)
-    if (m.compressor == "blosc") Blosc.decode(bytes)
-    else if (!m.zlib) bytes
-    else {
-      val inf = new java.util.zip.Inflater()
+    // a fixed-dtype chunk decodes to a known size, which bounds every
+    // allocation below; a vlen chunk's size is only in its own bytes
+    val size = if (m.vlenDtype.isEmpty) chunkBytes(m, path) else -1
+    def where = s"zarr chunk $name in $path"
+    if (m.compressor == "blosc") {
+      try Blosc.decode(bytes, size)
+      catch { case e: IOException => throw new IOException(s"$where: ${e.getMessage}", e) }
+    } else if (!m.zlib) bytes
+    else inflate(bytes, size, where)
+  }
+
+  /** inflate a zlib chunk: into one array of exactly `size` bytes when
+    * the size is known (a longer or shorter stream fails), else into a
+    * growing buffer (vlen chunks) */
+  private def inflate(bytes: Array[Byte], size: Int, where: => String): Array[Byte] = {
+    val inf = new java.util.zip.Inflater()
+    try {
       inf.setInput(bytes)
-      val out = new java.io.ByteArrayOutputStream(bytes.length * 4)
-      val buf = new Array[Byte](65536)
+      var out = new Array[Byte](if (size >= 0) size else math.max(bytes.length * 4, 64))
+      var off = 0
       while (!inf.finished()) {
-        val n = inf.inflate(buf)
+        if (off == out.length) {
+          if (size < 0) out = java.util.Arrays.copyOf(out, out.length * 2)
+          else if (inf.inflate(new Array[Byte](1)) > 0)
+            throw new IOException(s"$where: zlib stream inflates past the $size-byte chunk")
+        }
+        val n = inf.inflate(out, off, out.length - off)
         // any zero-progress state (truncated input, FDICT preset
         // dictionary, corrupt stream) must throw — the loop would
         // otherwise spin forever and hang the task
         if (n == 0 && !inf.finished())
-          throw new java.io.IOException(
-            if (inf.needsDictionary()) "zlib chunk requires a preset dictionary"
-            else "truncated or stalled zlib chunk")
-        out.write(buf, 0, n)
+          throw new IOException(s"$where: " +
+            (if (inf.needsDictionary()) "zlib chunk requires a preset dictionary"
+            else "truncated or stalled zlib chunk"))
+        off += n
       }
-      inf.end()
-      out.toByteArray
-    }
+      if (size < 0) java.util.Arrays.copyOf(out, off)
+      else if (off != size)
+        throw new IOException(s"$where: zlib stream inflates to $off of $size bytes")
+      else out
+    } finally inf.end()
   }
 
   private def sliceFloats(bytes: Array[Byte], dtype: String,

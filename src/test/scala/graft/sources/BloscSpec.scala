@@ -53,6 +53,47 @@ class BloscSpec extends SparkSpec {
     assert(Blosc.decode(bb.array).toSeq == expected.toSeq)
   }
 
+  /** a memcpyed (stored) frame whose header claims `nbytes` and which
+    * carries `payload` bytes after the header */
+  private def memcpyedFrame(nbytes: Int, payload: Int): Array[Byte] = {
+    val bb = java.nio.ByteBuffer.allocate(16 + payload).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    bb.put(2.toByte).put(1.toByte).put(0x2.toByte).put(4.toByte)
+    bb.putInt(nbytes).putInt(nbytes max 1).putInt(16 + payload)
+    bb.array
+  }
+
+  test("corrupted header: an inflated nbytes fails by name before allocating") {
+    val frame = memcpyedFrame(Int.MaxValue - 16, 64)
+    // fixed-dtype chunk: the known size rejects the header outright
+    val known = intercept[java.io.IOException](Blosc.decode(frame, 64L))
+    assert(known.getMessage.contains("nbytes") && known.getMessage.contains("64"))
+    // size unknown (vlen): the frame is too short to hold what it claims
+    val unknown = intercept[java.io.IOException](Blosc.decode(frame))
+    assert(unknown.getMessage.contains("cannot hold"))
+    assert(Blosc.decode(memcpyedFrame(64, 64), 64L).length == 64)
+  }
+
+  test("corrupted header: a short memcpyed frame fails by name") {
+    val ex = intercept[java.io.IOException](Blosc.decode(memcpyedFrame(64, 10), 64L))
+    assert(ex.getMessage.contains("26 bytes cannot hold 16 + 64"))
+    assert(intercept[java.io.IOException](Blosc.decode(new Array[Byte](7)))
+      .getMessage.contains("16-byte header"))
+  }
+
+  test("zarr: a blosc chunk whose header disagrees with .zarray names the chunk") {
+    val dir = Files.createTempDirectory("graft-blosc")
+    Files.writeString(dir.resolve(".zarray"),
+      """{"chunks":[2,8],"compressor":{"id":"blosc","cname":"lz4"},"dtype":"<f4",
+        |"fill_value":0,"filters":null,"order":"C","shape":[2,8],"zarr_format":2}""".stripMargin)
+    Files.writeString(dir.resolve(".zattrs"), """{"object_number":[1,2],"shape":[[2,2,2],[2,2,2]]}""")
+    Files.write(dir.resolve("0.0"), memcpyedFrame(2 * 8 * 4, 2 * 8 * 4))
+    val m = Zarr.readMeta(dir.toString)
+    assert(Zarr.readRow(dir.toString, m, 1).length == 8)
+    Files.write(dir.resolve("0.0"), memcpyedFrame(Int.MaxValue - 16, 64))
+    val ex = intercept[java.io.IOException](Zarr.readRow(dir.toString, m, 1))
+    assert(ex.getMessage.contains(s"zarr chunk 0.0 in $dir"))
+  }
+
   test("reference fixture chunks decode to the exact advertised size") {
     assume(Files.exists(Paths.get(fixture)))
     for (chunk <- Seq("0", "1")) {

@@ -140,6 +140,31 @@ class SourcesSpec extends SparkSpec {
     assert(events(3).pixels.forall(_ == 0f))
   }
 
+  test("zarr: a zlib chunk that inflates to the wrong size names the chunk") {
+    val dir = writeZarr(Seq((2, 2, 2), (2, 2, 2)))
+    val m = Zarr.readMeta(dir.toString)
+    def deflate(n: Int): Array[Byte] = {
+      val d = new java.util.zip.Deflater(5)
+      d.setInput(new Array[Byte](n)); d.finish()
+      val buf = new Array[Byte](n + 64)
+      val len = d.deflate(buf); d.end()
+      buf.take(len)
+    }
+    // the chunk holds 2 rows of 8 <f4 = 64 bytes
+    for ((n, what) <- Seq(65 -> "past the 64-byte chunk", 63 -> "63 of 64 bytes",
+        (1 << 20) -> "past the 64-byte chunk")) {
+      Files.write(dir.resolve("0.0"), deflate(n))
+      val ex = intercept[java.io.IOException](Zarr.readRow(dir.toString, m, 0))
+      assert(ex.getMessage.contains(s"zarr chunk 0.0 in $dir") && ex.getMessage.contains(what),
+        ex.getMessage)
+    }
+    Files.write(dir.resolve("0.0"), deflate(64).dropRight(4))
+    assert(intercept[java.io.IOException](Zarr.readRow(dir.toString, m, 0))
+      .getMessage.contains("truncated"))
+    Files.write(dir.resolve("0.0"), deflate(64))
+    assert(Zarr.readRow(dir.toString, m, 0).forall(_ == 0f))
+  }
+
   test("zarr: unknown filters and out-of-range channels fail loudly") {
     val dir = writeZarr(Seq((2, 2, 2)))
     // out-of-range channel: numpy raises IndexError; we must not hand
