@@ -26,8 +26,22 @@ object Glcm {
     * 0 for the rest, as [[properties]] does. */
   def matrix(q: Array[Int], h: Int, w: Int, levels: Int,
       distance: Int, angleRad: Double): Array[Double] = {
-    val dr = math.round(distance * math.sin(angleRad)).toInt
-    val dc = math.round(distance * math.cos(angleRad)).toInt
+    val (dr, dc) = offset(distance, angleRad)
+    matrixAt(q, h, w, levels, dr, dc)
+  }
+
+  /** (row, col) pixel offset of one (distance, angle), as
+    * graycomatrix rounds it */
+  def offset(distance: Int, angleRad: Double): (Int, Int) =
+    (math.round(distance * math.sin(angleRad)).toInt,
+      math.round(distance * math.cos(angleRad)).toInt)
+
+  /** [[matrix]] for a pixel offset. Offsets (dr, dc) and (-dr, -dc)
+    * pair up the same pixels, and each pair adds 1.0 to both (a, b) and
+    * (b, a), so their matrices are equal bit for bit: the counts are
+    * exact in Double whatever order they are added in. */
+  private def matrixAt(q: Array[Int], h: Int, w: Int, levels: Int,
+      dr: Int, dc: Int): Array[Double] = {
     val m = new Array[Double](levels * levels)
     var r = 0
     var total = 0.0
@@ -98,10 +112,21 @@ object Glcm {
 
   /** mean and std (population) over the four angles for each prop, for
     * one distance: Array(propIdx) = (mean, std) — the
-    * glcm_mean_/glcm_std_ columns of features/texture.py:77-94 */
+    * glcm_mean_/glcm_std_ columns of features/texture.py:77-94. An
+    * angle whose offset negates an earlier angle's (θ + π: 5π/4 after
+    * π/4, 7π/4 after 3π/4) reuses that angle's properties, since the
+    * symmetric matrices are equal (see `matrixAt`). */
   def meanStdOverAngles(q: Array[Int], h: Int, w: Int, levels: Int,
       distance: Int): Array[(Double, Double)] = {
-    val perAngle = Angles.map(a => properties(matrix(q, h, w, levels, distance, a), levels))
+    val offsets = Angles.map(offset(distance, _))
+    val perAngle = new Array[Array[Double]](offsets.length)
+    for (i <- offsets.indices) {
+      val (dr, dc) = offsets(i)
+      val first = offsets.indexWhere(o => o == ((dr, dc)) || o == ((-dr, -dc)))
+      perAngle(i) =
+        if (first < i) perAngle(first)
+        else properties(matrixAt(q, h, w, levels, dr, dc), levels)
+    }
     Array.tabulate(Props.length) { p =>
       val vals = perAngle.map(_(p))
       val m = vals.sum / vals.length

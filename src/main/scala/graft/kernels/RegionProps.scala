@@ -381,20 +381,44 @@ object RegionProps {
     true
   }
 
-  /** convex image: pixels whose centers fall inside (or on) the hull */
+  /** convex image: pixels whose centers fall inside (or on) the hull.
+    *
+    * Filled by row spans. Every hull vertex is a multiple of 0.5, so
+    * along one row each edge's test value in `pointInConvex` is an
+    * exact affine function of the column, a multiple of 0.25. The
+    * columns that pass every edge therefore form one run per row, and
+    * all pixels outside the hull's bounding box fail. Each row's run is
+    * found by walking in from the hull's least and greatest columns
+    * with the same test; the columns between its ends are filled
+    * untested. */
   def convexImage(hull: Array[(Double, Double)], h: Int, w: Int): Array[Boolean] = {
     val out = new Array[Boolean](h * w)
     if (hull.isEmpty) return out
-    var r = 0
-    while (r < h) {
-      var c = 0
-      while (c < w) {
-        out(r * w + c) =
-          if (hull.length <= 2)
-            hull.exists(p => p._1 - 0.5 <= r && r <= p._1 + 0.5 &&
-              p._2 - 0.5 <= c && c <= p._2 + 0.5)
-          else pointInConvex(hull, r.toDouble, c.toDouble)
-        c += 1
+    if (hull.length <= 2) {
+      var r = 0
+      while (r < h) {
+        var c = 0
+        while (c < w) {
+          out(r * w + c) = hull.exists(p => p._1 - 0.5 <= r && r <= p._1 + 0.5 &&
+            p._2 - 0.5 <= c && c <= p._2 + 0.5)
+          c += 1
+        }
+        r += 1
+      }
+      return out
+    }
+    val r0 = math.max(0, math.ceil(hull.map(_._1).min).toInt)
+    val r1 = math.min(h - 1, math.floor(hull.map(_._1).max).toInt)
+    val c0 = math.max(0, math.ceil(hull.map(_._2).min).toInt)
+    val c1 = math.min(w - 1, math.floor(hull.map(_._2).max).toInt)
+    var r = r0
+    while (r <= r1) {
+      var lo = c0
+      while (lo <= c1 && !pointInConvex(hull, r.toDouble, lo.toDouble)) lo += 1
+      if (lo <= c1) {
+        var hi = c1
+        while (!pointInConvex(hull, r.toDouble, hi.toDouble)) hi -= 1
+        java.util.Arrays.fill(out, r * w + lo, r * w + hi + 1, true)
       }
       r += 1
     }

@@ -67,9 +67,7 @@ object Stats {
     else sorted(lo) + (pos - lo) * (sorted(hi) - sorted(lo))
   }
 
-  def median(xs: Array[Float]): Double = {
-    val s = xs.clone(); java.util.Arrays.sort(s); percentile(s, 50)
-  }
+  def median(xs: Array[Float]): Double = selectPercentile(xs.clone(), 50)
 
   /** median absolute deviation (scipy.stats.median_abs_deviation) */
   def mad(xs: Array[Float]): Double = {
@@ -78,7 +76,7 @@ object Stats {
     val dev = new Array[Float](xs.length)
     var i = 0
     while (i < xs.length) { dev(i) = math.abs(xs(i) - med).toFloat; i += 1 }
-    median(dev)
+    selectPercentile(dev, 50)
   }
 
   /** scipy's zero-variance guard: skew/kurtosis are NaN when m2 is at
@@ -115,37 +113,162 @@ object Stats {
     * mean, median, max, min, std, mad, q25, q75, sum, skew, kurtosis. */
   def intensityRow(xs: Array[Float]): Array[Double] = {
     if (xs.length == 0) return Array.fill(11)(0.0) // empty-view default (missing_masks contract)
-    val s = xs.clone(); java.util.Arrays.sort(s)
+    val s = xs.clone()
+    intensityRow(xs, orderStats(s), s)
+  }
+
+  /** [[intensityRow]] of `xs` given its order statistics `os` (the
+    * values [[orderStats]] takes from a copy of `xs`). `scratch`, of
+    * `xs.length` floats, receives the absolute deviations for MAD. The
+    * mean, sum and moments are summed over `xs` in its own order. */
+  def intensityRow(xs: Array[Float], os: Array[Float], scratch: Array[Float]): Array[Double] = {
+    val n = xs.length
+    if (n == 0) return Array.fill(11)(0.0)
     val m = mean(xs)
     // one fused pass for m2/m3/m4 (std, skew, kurtosis all derive from
-    // them — three separate math.pow passes before), and mad reuses
-    // the already-computed median instead of re-sorting for it
+    // them), and mad reuses the median instead of selecting it again
     var m2 = 0.0; var m3 = 0.0; var m4 = 0.0
     var i = 0
-    while (i < xs.length) {
+    while (i < n) {
       val d = xs(i) - m
       val d2 = d * d
       m2 += d2; m3 += d2 * d; m4 += d2 * d2
       i += 1
     }
-    m2 /= xs.length; m3 /= xs.length; m4 /= xs.length
-    val med = percentile(s, 50)
-    val dev = new Array[Float](xs.length)
+    m2 /= n; m3 /= n; m4 /= n
+    val med = fromRanks(50, n, os(4), os(5))
+    val dev = scratch
     i = 0
-    while (i < xs.length) { dev(i) = math.abs(xs(i) - med).toFloat; i += 1 }
-    java.util.Arrays.sort(dev)
+    while (i < n) { dev(i) = math.abs(xs(i) - med).toFloat; i += 1 }
     Array(
       m,
       med,
-      s(s.length - 1).toDouble,
-      s(0).toDouble,
+      os(1).toDouble,
+      os(0).toDouble,
       math.sqrt(m2),
-      percentile(dev, 50),
-      percentile(s, 25),
-      percentile(s, 75),
+      selectPercentile(dev, 50),
+      fromRanks(25, n, os(2), os(3)),
+      fromRanks(75, n, os(6), os(7)),
       sum(xs),
       if (zeroVariance(m2, m)) Double.NaN else m3 / math.pow(m2, 1.5),
       if (zeroVariance(m2, m)) Double.NaN else m4 / (m2 * m2) - 3.0)
+  }
+
+  // ---- order statistics by selection -------------------------------------
+  //
+  // Contract: every order statistic here is the value that
+  // `java.util.Arrays.sort(float[])` of the same vector holds at that
+  // rank. That sort orders by `java.lang.Float.compare`: -0.0 before
+  // +0.0, and NaN after +Inf (all NaNs equal). Selection partitions in
+  // that order, so the value at a rank is the sort's, ties and signed
+  // zeros included. A percentile is numpy's linear interpolation
+  // between the values at ranks floor(pos) and ceil(pos), pos =
+  // q / 100 * (n - 1), with [[percentile]]'s exact expression
+  // `lo + (pos - floor(pos)) * (hi - lo)`: Float + Double * (Float -
+  // Float), and the low value alone when pos is whole.
+
+  /** The order statistics of `s` (n >= 1 values), rearranging `s` in
+    * place: Array(min, max, q25 low, q25 high, q50 low, q50 high, q75
+    * low, q75 high), where "low"/"high" are the values at ranks
+    * floor(pos)/ceil(pos) of that percentile (equal when pos is whole).
+    * q50 is selected over all of `s`, q75 above it and q25 below it; a
+    * high rank is the minimum of the part above its low rank. An empty
+    * `s` gives eight zeros, which [[intensityRow]] never reads. */
+  def orderStats(s: Array[Float]): Array[Float] = {
+    val n = s.length
+    val os = new Array[Float](8)
+    if (n == 0) return os
+    var mn = s(0); var mx = s(0); var i = 1
+    while (i < n) {
+      val v = s(i)
+      if (java.lang.Float.compare(v, mn) < 0) mn = v
+      if (java.lang.Float.compare(v, mx) > 0) mx = v
+      i += 1
+    }
+    os(0) = mn; os(1) = mx
+    // positions [from, until) of `s` hold exactly ranks [from, until),
+    // and position `until` (when < n) holds rank `until`
+    def take(q: Double, slot: Int, from: Int, until: Int): Unit = {
+      val pos = q / 100.0 * (n - 1)
+      val k = math.floor(pos).toInt
+      os(slot) = select(s, from, until, k)
+      os(slot + 1) =
+        if (k == math.ceil(pos).toInt) os(slot)
+        else if (k + 1 < until) minOf(s, k + 1, until)
+        else s(until)
+    }
+    def lowRank(q: Double): Int = math.floor(q / 100.0 * (n - 1)).toInt
+    val k50 = lowRank(50)
+    take(50, 4, 0, n)
+    take(75, 6, if (lowRank(75) > k50) k50 + 1 else k50, n)
+    if (lowRank(25) < k50) take(25, 2, 0, k50) else take(25, 2, k50, n)
+    os
+  }
+
+  /** numpy-linear percentile `q` of `n` values from the values at its
+    * low and high ranks (see the selection contract above) */
+  private def fromRanks(q: Double, n: Int, lo: Float, hi: Float): Double = {
+    val pos = q / 100.0 * (n - 1)
+    val k = math.floor(pos).toInt
+    if (k == math.ceil(pos).toInt) lo else lo + (pos - k) * (hi - lo)
+  }
+
+  /** [[percentile]] of `a` by selection instead of a sort; rearranges
+    * `a` in place. Equal to `percentile(sorted copy of a, q)` bit for
+    * bit (see the selection contract above). */
+  def selectPercentile(a: Array[Float], q: Double): Double = {
+    val n = a.length
+    if (n == 0) return Double.NaN
+    val pos = q / 100.0 * (n - 1)
+    val k = math.floor(pos).toInt
+    val lo = select(a, 0, n, k)
+    if (k == math.ceil(pos).toInt) lo else lo + (pos - k) * (minOf(a, k + 1, n) - lo)
+  }
+
+  /** Rearranges `a(from until until)` so that position `k` holds the
+    * value a sort of that range would put there, with every value
+    * before it no greater and every value after it no smaller
+    * (`Float.compare`), and returns it. Three-way quickselect on a
+    * median-of-three pivot; a range that has not shrunk to one value
+    * after 3·log2(length) rounds is finished by `Arrays.sort`, which
+    * bounds the worst case by the sort it replaces. */
+  def select(a: Array[Float], from: Int, until: Int, k: Int): Float = {
+    var lo = from; var hi = until - 1
+    var rounds = 3 * (32 - Integer.numberOfLeadingZeros(until - from))
+    while (lo < hi) {
+      if (rounds == 0) { java.util.Arrays.sort(a, lo, hi + 1); return a(k) }
+      rounds -= 1
+      val pivot = median3(a(lo), a((lo + hi) >>> 1), a(hi))
+      // [lo, lt) < pivot, [lt, i) == pivot, (gt, hi] > pivot
+      var lt = lo; var gt = hi; var i = lo
+      while (i <= gt) {
+        val v = a(i)
+        val c = java.lang.Float.compare(v, pivot)
+        if (c < 0) { a(i) = a(lt); a(lt) = v; lt += 1; i += 1 }
+        else if (c > 0) { a(i) = a(gt); a(gt) = v; gt -= 1 }
+        else i += 1
+      }
+      if (k < lt) hi = lt - 1
+      else if (k > gt) lo = gt + 1
+      else return a(k)
+    }
+    a(k)
+  }
+
+  private def median3(x: Float, y: Float, z: Float): Float = {
+    import java.lang.Float.compare
+    if (compare(x, y) < 0) {
+      if (compare(y, z) < 0) y else if (compare(x, z) < 0) z else x
+    } else {
+      if (compare(x, z) < 0) x else if (compare(y, z) < 0) z else y
+    }
+  }
+
+  /** smallest of `a(from until until)` in `Float.compare` order */
+  private def minOf(a: Array[Float], from: Int, until: Int): Float = {
+    var m = a(from); var i = from + 1
+    while (i < until) { if (java.lang.Float.compare(a(i), m) < 0) m = a(i); i += 1 }
+    m
   }
 
   // ---- D'Agostino-Pearson normality test --------------------------------

@@ -319,30 +319,41 @@ object Features {
       while (i < ps) { if (m(i)) { v(j) = plane(i); j += 1 }; i += 1 }
       v
     }
-    def minus(v: Array[Float], b: Double): Array[Float] =
-      v.map(x => (x - b).toFloat)
+    // a view's row into out(at), its background-subtracted twin's into
+    // out(at + 1)
+    def viewAndTwin(px: Array[Float], b: Double, at: Int): Unit = {
+      val s = px.clone()
+      val os = Stats.orderStats(s)
+      out(at) = Stats.intensityRow(px, os, s)
+      val twin = px.map(x => (x - b).toFloat)
+      out(at + 1) = Stats.intensityRow(twin, twinOrderStats(os, b, twin), s)
+    }
 
     if (Morphology.any(mp)) {
-      val mpx = select(mp)
-      out(0) = Stats.intensityRow(mpx)
-      out(1) = Stats.intensityRow(minus(mpx, bg))
+      viewAndTwin(select(mp), bg, 0)
       val edge = Morphology.edgeBand(mp, e.height, e.width, 6)
-      if (Morphology.any(edge)) {
-        val epx = select(edge)
-        out(2) = Stats.intensityRow(epx)
-        out(3) = Stats.intensityRow(minus(epx, bg))
-      } // else views 2..3 stay 0 (reference zeroes 2: before recomputing 4+)
+      if (Morphology.any(edge)) viewAndTwin(select(edge), bg, 2)
+      // else views 2..3 stay 0 (reference zeroes 2: before recomputing 4+)
     } // else views 0..3 stay 0
-    val cpx = select(cm)
-    out(4) = Stats.intensityRow(cpx)
-    out(5) = Stats.intensityRow(minus(cpx, cbg))
-    if (Morphology.any(cedge)) {
-      val cepx = select(cedge)
-      out(6) = Stats.intensityRow(cepx)
-      out(7) = Stats.intensityRow(minus(cepx, cbg))
-    }
+    viewAndTwin(select(cm), cbg, 4)
+    if (Morphology.any(cedge)) viewAndTwin(select(cedge), cbg, 6)
     out
   }
+
+  /** Order statistics of a background-subtracted twin `twin(i) = (px(i)
+    * - b).toFloat`, from those of the view `px` ([[Stats.orderStats]]).
+    * The map x ↦ (x - b).toFloat never reverses two values in
+    * `Arrays.sort(float[])`'s order for a finite or NaN `b`: the double
+    * subtraction and the rounding to float are both monotone, a NaN
+    * stays NaN (sorted last), -0.0 maps to a value no greater than
+    * +0.0's, and a difference that rounds to zero keeps its sign. So the
+    * twin's sorted array is the view's sorted array mapped value by
+    * value, and each of its order statistics is the view's mapped.
+    * An infinite `b` breaks that (-Inf - -Inf is NaN, which sorts last),
+    * so the twin's statistics are then selected afresh. */
+  private[graft] def twinOrderStats(os: Array[Float], b: Double, twin: Array[Float]): Array[Float] =
+    if (b.isInfinite) Stats.orderStats(twin.clone())
+    else os.map(x => (x - b).toFloat)
 
   val texRowLen: Int = Glcm.Props.length * 2 * GlcmDistances.length + 4
 

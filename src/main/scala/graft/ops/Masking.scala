@@ -155,8 +155,7 @@ object Masking {
       case Spot(spotSize) =>
         // white tophat disk(spotsize); > q99; label (masking/spot.py:23-49)
         val th = Filters.whiteTophat(x, h, w, spotSize)
-        val sorted = th.clone(); java.util.Arrays.sort(sorted)
-        val q = Stats.percentile(sorted, 99)
+        val q = Stats.selectPercentile(th.clone(), 99)
         val bin = th.map(_ > q)
         val labels = Morphology.label(bin, h, w)
         (bin, Morphology.labelCount(labels))
@@ -166,8 +165,7 @@ object Masking {
         // (masking/sobel.py:24-46)
         val edges = Filters.sobel(x, h, w)
         val closed = Filters.closeGray(edges, h, w, 2)
-        val sorted = closed.clone(); java.util.Arrays.sort(sorted)
-        val t = Stats.percentile(sorted, q * 100)
+        val t = Stats.selectPercentile(closed.clone(), q * 100)
         val bin = closed.map(_ > t)
         if (!Morphology.any(bin)) (bin, 0)
         else postProcessed(bin, h, w)

@@ -3,10 +3,13 @@ package graft.plans
 import graft.core.ImageEvent
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, GenericInternalRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet}
+import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, ObjectConsumer}
 import org.apache.spark.sql.execution.{ObjectConsumerExec, ObjectOperator, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Whole-operator wide row: one record → one row of a declared schema
   * (the imaging feature table: ~2700 columns on the reference config).
@@ -14,8 +17,12 @@ import org.apache.spark.sql.execution.{ObjectConsumerExec, ObjectOperator, Spark
   * `Dataset.map(...)(Encoders.row(schema))` boxes every record into a
   * `Row` and then serializes it through one planned expression per
   * field. This node skips both: `cells` returns the row's values in
-  * schema order, and the exec writes them through one
-  * [[UnsafeProjection]] over the schema. The child is a
+  * schema order, and the exec writes them with one `UnsafeRowWriter`
+  * per partition, by a per-field type code computed once per plan
+  * before any task runs. No projection is generated: with ~2700
+  * fields, building and hashing its Java source cost more per task
+  * than writing the rows.
+  * The child is a
   * `DeserializeToObject` of the event encoder (bound once, by the
   * analyzer), which the optimizer's `EliminateSerialization`
   * removes whenever the input already holds objects (a preceding typed
@@ -61,22 +68,49 @@ case class WideRowsExec(output: Seq[Attribute], cells: ImageEvent => Array[Any],
   override protected def doExecute(): RDD[InternalRow] = {
     val getObject = ObjectOperator.unwrapObjectFromRow(inputObjectType)
     val f = cells
-    val types = output.map(_.dataType).toArray
+    val codes = output.map(a => WideRowsExec.typeCode(a.name, a.dataType)).toArray
     child.execute().mapPartitions { it =>
-      val toCatalyst = types.map(CatalystTypeConverters.createToCatalystConverter)
-      val proj = UnsafeProjection.create(types)
-      val row = new GenericInternalRow(types.length)
+      val writer = new UnsafeRowWriter(codes.length)
       it.map { in =>
         val values = f(getObject(in).asInstanceOf[ImageEvent])
-        if (values.length != types.length) throw new IllegalStateException(
-          s"wide row has ${values.length} cells, schema has ${types.length} fields")
+        if (values.length != codes.length) throw new IllegalStateException(
+          s"wide row has ${values.length} cells, schema has ${codes.length} fields")
+        writer.reset()
+        writer.zeroOutNullBytes()
         var i = 0
         while (i < values.length) {
-          row.update(i, toCatalyst(i)(values(i)))
+          val v = values(i)
+          if (v == null) writer.setNullAt(i)
+          else codes(i) match {
+            case WideRowsExec.DoubleCode => writer.write(i, v.asInstanceOf[Double])
+            case WideRowsExec.LongCode => writer.write(i, v.asInstanceOf[Long])
+            case WideRowsExec.IntCode => writer.write(i, v.asInstanceOf[Int])
+            case WideRowsExec.StringCode =>
+              writer.write(i, UTF8String.fromString(v.asInstanceOf[String]))
+          }
           i += 1
         }
-        proj(row)
+        writer.getRow
       }
     }
+  }
+}
+
+object WideRowsExec {
+  private final val DoubleCode = 0
+  private final val LongCode = 1
+  private final val IntCode = 2
+  private final val StringCode = 3
+
+  /** how a field's cells are written: wide rows carry doubles, longs,
+    * ints and strings only */
+  private def typeCode(field: String, dt: DataType): Int = dt match {
+    case DoubleType => DoubleCode
+    case LongType => LongCode
+    case IntegerType => IntCode
+    case StringType => StringCode
+    case other => throw new UnsupportedOperationException(
+      s"wide row field $field has type ${other.simpleString}; " +
+        "only double, bigint, int and string fields can be written")
   }
 }

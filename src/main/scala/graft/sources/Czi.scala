@@ -2,7 +2,7 @@ package graft.sources
 
 import graft.core.{Codecs, ImageEvent}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import java.io.RandomAccessFile
+import java.io.{IOException, RandomAccessFile}
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets
@@ -188,6 +188,20 @@ object Czi {
     out
   }
 
+  /** a zstd frame that must decode to exactly `n` bytes; a frame that
+    * declares another content size fails before `n` bytes are
+    * allocated for it */
+  private def inflateZstd(comp: Array[Byte], n: Int, codec: String,
+      corrupt: String => IOException): Array[Byte] = {
+    val declared = com.github.luben.zstd.Zstd.getFrameContentSize(comp)
+    if (declared >= 0 && declared != n)
+      throw corrupt(s"$codec frame holds $declared bytes, the stored size needs $n")
+    val dst = new Array[Byte](n)
+    val got = com.github.luben.zstd.Zstd.decompress(dst, comp)
+    require(got == n, s"$codec subblock decoded to $got bytes, expected $n")
+    dst
+  }
+
   /** decode one subblock to a float plane stack; returns (pixels
     * row-major, h, w) for its (possibly 1-deep) Y×X plane. Compression
     * 0 (none), 5 (zstd0: raw zstd frame) and 6 (zstd1: small header +
@@ -195,8 +209,8 @@ object Czi {
     * zstd-jni ships with Spark, so the reader stays dependency-free.
     * JPEG-XR (4) subblocks are rejected: that codec has no JVM
     * implementation here. */
-  private[sources] def readSubBlockPlane(ch: FileChannel,
-      e: SubBlockEntry): (Array[Float], Int, Int) = {
+  private[sources] def readSubBlockPlane(ch: FileChannel, e: SubBlockEntry,
+      path: String): (Array[Float], Int, Int) = {
     require(e.compression == 0 || e.compression == 5 || e.compression == 6,
       if (e.compression == 4)
         "CZI subblock is JPEG-XR-compressed (compression=4). No JVM JPEG-XR " +
@@ -219,33 +233,44 @@ object Czi {
     val entrySize = 32 + 20 * e.dims.length
     val pixelsPos = dataStart + math.max(256, 16 + entrySize) + metadataSize
     val h = e.stored("Y"); val w = e.stored("X")
-    val out = new Array[Float](h * w)
     val bytesPer = e.pixelType match {
       case 0 => 1 // Gray8
       case 1 => 2 // Gray16
       case 2 => 4 // Gray32Float
       case t => throw new IllegalArgumentException(s"unsupported CZI pixel type $t")
     }
-    val nPixelBytes = h * w * bytesPer
+    // every size taken from the headers is checked, in Long, before
+    // anything is allocated: the data size against the bytes the file
+    // holds after the pixel offset, the decoded size against one array
+    // and against the data (uncompressed) or the zstd frame's declared
+    // content size (compressed)
+    def corrupt(what: String) =
+      new IOException(s"corrupt CZI subblock at offset ${e.filePosition} in $path: $what")
+    if (metadataSize < 0) throw corrupt(s"negative metadata size $metadataSize")
+    val available = ch.size() - pixelsPos
+    val nPixelBytes = h.toLong * w * bytesPer
+    if (h < 0 || w < 0) throw corrupt(s"negative stored size ${w}x$h")
+    if (dataSize < 0 || dataSize > available || dataSize > Int.MaxValue)
+      throw corrupt(s"data size $dataSize, but $available bytes follow the pixel offset")
+    if (nPixelBytes > Int.MaxValue)
+      throw corrupt(s"stored size ${w}x$h of $bytesPer-byte pixels exceeds one array")
+    val out = new Array[Float](h * w)
     val bb: ByteBuffer = e.compression match {
       case 0 =>
-        require(dataSize >= nPixelBytes.toLong, s"subblock data too small: $dataSize")
-        readBytes(ch, pixelsPos, nPixelBytes)
+        if (nPixelBytes > dataSize)
+          throw corrupt(s"stored size ${w}x$h needs $nPixelBytes bytes, data size is $dataSize")
+        readBytes(ch, pixelsPos, nPixelBytes.toInt)
       case 5 =>
         val comp = new Array[Byte](dataSize.toInt)
         readBytes(ch, pixelsPos, dataSize.toInt).get(comp)
-        val dst = new Array[Byte](nPixelBytes)
-        val n = com.github.luben.zstd.Zstd.decompress(dst, comp)
-        require(n == nPixelBytes, s"zstd0 subblock decoded to $n bytes, expected $nPixelBytes")
-        ByteBuffer.wrap(dst).order(ByteOrder.LITTLE_ENDIAN)
+        ByteBuffer.wrap(inflateZstd(comp, nPixelBytes.toInt, "zstd0", corrupt))
+          .order(ByteOrder.LITTLE_ENDIAN)
       case 6 =>
         val payload = new Array[Byte](dataSize.toInt)
         readBytes(ch, pixelsPos, dataSize.toInt).get(payload)
         val (hdrSize, packed) = parseZstd1Header(payload)
         val comp = java.util.Arrays.copyOfRange(payload, hdrSize, payload.length)
-        val dst = new Array[Byte](nPixelBytes)
-        val n = com.github.luben.zstd.Zstd.decompress(dst, comp)
-        require(n == nPixelBytes, s"zstd1 subblock decoded to $n bytes, expected $nPixelBytes")
+        val dst = inflateZstd(comp, nPixelBytes.toInt, "zstd1", corrupt)
         val bytes =
           if (packed) {
             require(bytesPer == 2,
@@ -365,7 +390,7 @@ object Czi {
           val b = blocks.find(e => e.start("C") == c && e.start("Z") == z)
             .getOrElse(throw new IllegalStateException(
               s"missing subblock C=$c Z=$z for scene $s tile $tile in $path"))
-          readSubBlockPlane(fc, b)
+          readSubBlockPlane(fc, b, path)
         }
         val (h, w) = (planes.head._2, planes.head._3)
         require(planes.forall(p => p._2 == h && p._3 == w),

@@ -62,4 +62,43 @@ class GlcmEquivalenceSpec extends AnyFunSuite {
     val mine = Glcm.properties(Glcm.matrix(q, 6, 6, 16, 3, Glcm.Angles.head), 16)
     assert(mine.toSeq == Seq(0.0, 0.0, 0.0, 0.0, 1.0, 0.0))
   }
+  /** seeded 30%-masked quantized planes */
+  private def maskedPlanes(seed: Int, levels: Int): Seq[(Array[Int], Int, Int)] = {
+    val rng = new scala.util.Random(seed)
+    Seq.fill(8) {
+      val h = 1 + rng.nextInt(14); val w = 1 + rng.nextInt(14)
+      (Array.fill(h * w)(if (rng.nextDouble() < 0.3) -1 else rng.nextInt(levels)), h, w)
+    }
+  }
+
+  test("θ and θ+π: negated offsets, equal matrices bit for bit") {
+    val levels = 16
+    for (d <- Seq(3, 5); i <- 0 until 2) {
+      val (a, b) = (Glcm.Angles(i), Glcm.Angles(i + 2))
+      val (dr, dc) = Glcm.offset(d, a)
+      assert(Glcm.offset(d, b) == ((-dr, -dc)), s"d=$d angle $i")
+      for ((q, h, w) <- maskedPlanes(17, levels)) {
+        val (m1, m2) = (Glcm.matrix(q, h, w, levels, d, a), Glcm.matrix(q, h, w, levels, d, b))
+        assert(m1.map(java.lang.Double.doubleToLongBits).toSeq ==
+          m2.map(java.lang.Double.doubleToLongBits).toSeq, s"d=$d angle $i ${h}x$w")
+      }
+    }
+  }
+
+  test("meanStdOverAngles equals one matrix per angle, bit for bit") {
+    val levels = 16
+    for (d <- Seq(3, 5); (q, h, w) <- maskedPlanes(23, levels)) {
+      val perAngle = Glcm.Angles.map(a => Glcm.properties(Glcm.matrix(q, h, w, levels, d, a), levels))
+      val want = Array.tabulate(Glcm.Props.length) { p =>
+        val vals = perAngle.map(_(p))
+        val m = vals.sum / vals.length
+        (m, math.sqrt(vals.map(x => (x - m) * (x - m)).sum / vals.length))
+      }
+      val got = Glcm.meanStdOverAngles(q, h, w, levels, d)
+      def bits(xs: Array[(Double, Double)]) = xs.toSeq.map { case (m, s) =>
+        (java.lang.Double.doubleToLongBits(m), java.lang.Double.doubleToLongBits(s))
+      }
+      assert(bits(got) == bits(want), s"d=$d ${h}x$w")
+    }
+  }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.execution.SerializeFromObjectExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types._
 
 /** The wide-row plan node against the `Encoders.row` frame it replaced:
   * same schema (nullability included), same rows value for value, no
@@ -107,6 +107,30 @@ class WideRowsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(plan.execute().getNumPartitions == 4)
       spark.catalog.clearCache()
     }
+  }
+
+  test("nulls of every field type and a non-ASCII string equal the row-encoder frame") {
+    val sch = StructType(Seq(StructField("k", LongType), StructField("s", StringType),
+      StructField("l", LongType), StructField("i", IntegerType), StructField("d", DoubleType)))
+    val cells = (e: ImageEvent) =>
+      if (e.idx % 2 == 0) Array[Any](e.idx, null, null, null, null)
+      else Array[Any](e.idx, "Zellkern · 細胞 · ядро ✓", -e.idx, e.id, -0.0)
+    val ds = Synthetic.conftest(spark, 6)
+    val wide = Features.wideFrame(ds, sch)(cells)
+    val expected = rowEncoderFrame(ds, sch)(cells)
+    assert(wide.schema == expected.schema)
+    def rows(df: DataFrame) = df.collect().map(_.toSeq.map {
+      case d: java.lang.Double => java.lang.Double.doubleToRawLongBits(d)
+      case v => v
+    }).sortBy(_.head.asInstanceOf[Long]).toSeq
+    val got = rows(wide)
+    assert(got == rows(expected))
+    assert(got.count(_.tail.forall(_ == null)) == 3 && got.exists(_.contains("Zellkern · 細胞 · ядро ✓")))
+    val bad = intercept[UnsupportedOperationException] {
+      Features.wideFrame(ds, StructType(Seq(StructField("f", FloatType))))(_ => Array[Any](1.0f))
+        .collect()
+    }
+    assert(bad.getMessage.contains("wide row field f has type float"))
   }
 
   test("setup installs the strategy once") {

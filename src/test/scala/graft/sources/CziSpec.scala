@@ -156,8 +156,59 @@ class CziSpec extends SparkSpec {
       val patched = idx.entries.head.copy(compression = 4)
       Czi.readSubBlockPlane(
         java.nio.channels.FileChannel.open(java.nio.file.Paths.get(p),
-          java.nio.file.StandardOpenOption.READ), patched)
+          java.nio.file.StandardOpenOption.READ), patched, p)
     }
     assert(err.getMessage.contains("bfconvert") && err.getMessage.contains("JPEG-XR"))
+  }
+  /** a one-subblock fixture with little-endian fields of its file
+    * overwritten: `edits` maps (path, entry) to (file offset, bytes) */
+  private def patched(compression: Int)(
+      edits: (String, Czi.SubBlockEntry) => Seq[(Long, Array[Byte])]): (String, Czi.SubBlockEntry) = {
+    val p = Files.createTempDirectory("czi-bound").resolve("patched.czi").toString
+    Czi.writeMinimal(p, Seq("s0"), tiles = 1, channels = 1, depth = 1,
+      h = 3, w = 4, pixel, compression = compression)
+    val todo = edits(p, Czi.readIndex(p).entries.head)
+    val raf = new java.io.RandomAccessFile(p, "rw")
+    try todo.foreach { case (at, bytes) => raf.seek(at); raf.write(bytes) } finally raf.close()
+    (p, Czi.readIndex(p).entries.head)
+  }
+
+  private def le(v: Long, n: Int): Array[Byte] =
+    java.nio.ByteBuffer.allocate(8).order(java.nio.ByteOrder.LITTLE_ENDIAN).putLong(v).array().take(n)
+
+  /** file offset of the directory entry's stored size of dim `dim`
+    * (writeMinimal writes X first, then Y) */
+  private def storedSizeAt(p: String, dim: Int): Long = {
+    val raf = new java.io.RandomAccessFile(p, "r")
+    val dirPos = try { raf.seek(32 + 52); java.lang.Long.reverseBytes(raf.readLong()) } finally raf.close()
+    // segment header, directory fixed part, entry fixed part, 20-byte dims
+    dirPos + 32 + 128 + 32 + 20 * dim + 16
+  }
+
+  private def readPlane(p: String, e: Czi.SubBlockEntry) = {
+    val ch = java.nio.channels.FileChannel.open(java.nio.file.Paths.get(p),
+      java.nio.file.StandardOpenOption.READ)
+    try Czi.readSubBlockPlane(ch, e, p) finally ch.close()
+  }
+
+  test("an inflated subblock data size fails with a named IOException") {
+    for (comp <- Seq(0, 5, 6); size <- Seq(1L << 20, 3L << 30, 1L << 40, -1L)) {
+      // the data size sits 8 bytes into the subblock's fixed part
+      val (p, e) = patched(comp)((_, e) => Seq((e.filePosition + 32 + 8, le(size, 8))))
+      val err = intercept[java.io.IOException](readPlane(p, e))
+      assert(err.getMessage.contains(p) && err.getMessage.contains(s"offset ${e.filePosition}") &&
+        err.getMessage.contains(s"data size $size"), err.getMessage)
+    }
+  }
+
+  test("an inflated stored X/Y fails with a named IOException") {
+    for (comp <- Seq(0, 5, 6); (x, y) <- Seq((4000, 3), (4, 3000), (65536, 65536), (46341, 46341))) {
+      val (p, e) = patched(comp)((p, _) =>
+        Seq((storedSizeAt(p, 0), le(x, 4)), (storedSizeAt(p, 1), le(y, 4))))
+      assert(e.stored("X") == x && e.stored("Y") == y)
+      val err = intercept[java.io.IOException](readPlane(p, e))
+      assert(err.getMessage.contains(p) && err.getMessage.contains(s"offset ${e.filePosition}"),
+        err.getMessage)
+    }
   }
 }
