@@ -3,6 +3,7 @@
 
     python3 scripts/jfr_frames.py REC.jfr [--threads PREFIX] [--skip S]
         [--until U] [--record RUN.json] [--top N] [--match TEXT ...]
+        [--layers]
 
 Reads `jdk.ExecutionSample` events with `jfr print --stack-depth 64`
 (jfr's default depth, 5, cuts a sort sample off from its caller), keeps
@@ -15,7 +16,9 @@ end of its timed runs), and prints the top N frames by self samples
 anywhere in the stack, counted once per sample). Each --match TEXT adds
 a line with the share of samples whose stack holds a frame containing
 TEXT; "A>B" counts samples where a frame containing B is called, at any
-depth, from a frame containing A.
+depth, from a frame containing A. --layers splits the samples into the
+pipeline's layers (LAYERS below): each sample goes to the layer of the
+frame nearest the top of its stack that matches one, or to "rest".
 """
 import argparse
 import collections
@@ -28,6 +31,24 @@ EVENT = re.compile(r"^jdk\.ExecutionSample \{")
 TIME = re.compile(r"^\s*startTime = (\d\d):(\d\d):(\d\d)\.(\d+)")
 THREAD = re.compile(r'^\s*sampledThread = "(.*)" \(')
 FRAME = re.compile(r"^\s+([\w$.<>/\[\]]+)\(.*\)(?:\s+line:.*)?$")
+
+# (layer, frame substrings) in print order
+LAYERS = [
+    ("sink", ("org.apache.parquet", "ParquetWriteSupport")),
+    ("mask branches", ("graft.ops.Masking$.branchRecord",)),
+    ("shape", ("graft.ops.Features$.shapeRow",)),
+    ("texture", ("graft.ops.Features$.textureRow",)),
+    ("intensity", ("graft.ops.Features$.intensityViews",)),
+    ("sources", ("graft.sources.",)),
+]
+
+
+def layer_of(frames):
+    for f in frames:
+        for name, subs in LAYERS:
+            if any(x in f for x in subs):
+                return name
+    return "rest"
 
 
 def samples(path):
@@ -66,6 +87,7 @@ def main():
     ap.add_argument("--record")
     ap.add_argument("--top", type=int, default=25)
     ap.add_argument("--match", action="append", default=[])
+    ap.add_argument("--layers", action="store_true")
     a = ap.parse_args()
     if a.record:
         rec = json.load(open(a.record))
@@ -99,6 +121,12 @@ def main():
             return False
         c = sum(1 for f in kept if hit(f))
         print(f"{100.0 * c / n:6.1f}%  {c:6d}  {m}")
+    if a.layers:
+        counts = collections.Counter(layer_of(f) for f in kept)
+        print("\n-- layers")
+        for name in [x for x, _ in LAYERS] + ["rest"]:
+            c = counts[name]
+            print(f"{100.0 * c / n:6.1f}%  {c:6d}  {name}")
 
 
 if __name__ == "__main__":

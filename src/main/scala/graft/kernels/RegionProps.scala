@@ -320,54 +320,74 @@ object RegionProps {
     * offset_coordinates=True adds (±0.5, 0) and (0, ±0.5) per pixel
     * (`_offsets_diamond`), NOT the four corners: corner points admit
     * centers the diamond hull excludes (e.g. two diagonal pixels) and
-    * inflate convex_area/deflate solidity. Hull in CCW order. */
+    * inflate convex_area/deflate solidity. Hull in CCW order, starting
+    * at the least (row, col) point.
+    *
+    * Runs on doubled coordinates, where every offset point is an
+    * integer: line 2r holds row r's left and right offsets, line 2r±1
+    * the bottom/top offsets of rows r and r±1. On each line only the
+    * outermost two points can be hull vertices; every other point lies
+    * strictly between them on the same line, and the chain's `<= 0`
+    * test pops such a point anyway. So each row's extreme mask columns
+    * give at most two candidates per line, already in sorted order, and
+    * the integer cross products are exact where the half-integer
+    * doubles were: the same vertices in the same order. */
   def convexHull(mask: Array[Boolean], h: Int, w: Int): Array[(Double, Double)] = {
-    val pts = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
-    // candidate points from BOUNDARY pixels only (skimage's
-    // possible_hull idea): every diamond offset of an interior pixel
-    // (all four 4-neighbors set) coincides exactly with an offset of
-    // one of those neighbors, so dropping interior pixels leaves the
-    // candidate SET unchanged while shrinking it from O(area) to
-    // O(perimeter) before the distinct+sort
-    @inline def fg(r: Int, c: Int): Boolean =
-      r >= 0 && r < h && c >= 0 && c < w && mask(r * w + c)
+    // each row's least and greatest mask column, -1 for an empty row
+    val lo = Array.fill(h)(-1); val hi = Array.fill(h)(-1)
     var r = 0
     while (r < h) {
       var c = 0
-      while (c < w) {
-        if (mask(r * w + c) &&
-            !(fg(r - 1, c) && fg(r + 1, c) && fg(r, c - 1) && fg(r, c + 1))) {
-          pts += ((r - 0.5, c.toDouble)); pts += ((r + 0.5, c.toDouble))
-          pts += ((r.toDouble, c - 0.5)); pts += ((r.toDouble, c + 0.5))
-        }
-        c += 1
+      while (c < w && !mask(r * w + c)) c += 1
+      if (c < w) {
+        lo(r) = c
+        var d = w - 1
+        while (!mask(r * w + d)) d -= 1
+        hi(r) = d
       }
       r += 1
     }
-    if (pts.isEmpty) return Array.empty
-    val sorted = pts.distinct.sortBy(identity).toArray
-    if (sorted.length <= 2) return sorted
-    @inline def cross(o: (Double, Double), a: (Double, Double), b: (Double, Double)): Double =
-      (a._1 - o._1) * (b._2 - o._2) - (a._2 - o._2) * (b._1 - o._1)
-    val hull = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
+    // candidates on the doubled lines -1 .. 2h-1, at most two per line
+    val ys = new Array[Int](4 * h + 2); val xs = new Array[Int](4 * h + 2)
+    var n = 0
+    def add(y: Int, x: Int): Unit = { ys(n) = y; xs(n) = x; n += 1 }
+    var y = -1
+    while (y < 2 * h) {
+      if ((y & 1) == 0) {
+        val rr = y >> 1
+        if (lo(rr) >= 0) { add(y, 2 * lo(rr) - 1); add(y, 2 * hi(rr) + 1) }
+      } else {
+        // the bottom offsets of row (y-1)/2, the top offsets of (y+1)/2
+        var a = Int.MaxValue; var b = -1
+        val up = (y - 1) >> 1; val down = (y + 1) >> 1
+        if (up >= 0 && lo(up) >= 0) { a = lo(up); b = hi(up) }
+        if (down < h && lo(down) >= 0) { a = math.min(a, lo(down)); b = math.max(b, hi(down)) }
+        if (b >= 0) { add(y, 2 * a); if (b > a) add(y, 2 * b) }
+      }
+      y += 1
+    }
+    def point(i: Int): (Double, Double) = (ys(i) * 0.5, xs(i) * 0.5)
+    if (n <= 2) return Array.tabulate(n)(point)
+    @inline def cross(o: Int, a: Int, b: Int): Long =
+      (ys(a) - ys(o)).toLong * (xs(b) - xs(o)) - (xs(a) - xs(o)).toLong * (ys(b) - ys(o))
+    val hull = new Array[Int](2 * n)
+    var k = 0
     // lower
-    sorted.foreach { p =>
-      while (hull.length >= 2 && cross(hull(hull.length - 2), hull.last, p) <= 0)
-        hull.remove(hull.length - 1)
-      hull += p
+    var i = 0
+    while (i < n) {
+      while (k >= 2 && cross(hull(k - 2), hull(k - 1), i) <= 0) k -= 1
+      hull(k) = i; k += 1
+      i += 1
     }
     // upper
-    val lowerLen = hull.length + 1
-    var i = sorted.length - 2
+    val lowerLen = k + 1
+    i = n - 2
     while (i >= 0) {
-      val p = sorted(i)
-      while (hull.length >= lowerLen && cross(hull(hull.length - 2), hull.last, p) <= 0)
-        hull.remove(hull.length - 1)
-      hull += p
+      while (k >= lowerLen && cross(hull(k - 2), hull(k - 1), i) <= 0) k -= 1
+      hull(k) = i; k += 1
       i -= 1
     }
-    hull.remove(hull.length - 1)
-    hull.toArray
+    Array.tabulate(k - 1)(j => point(hull(j)))
   }
 
   private def pointInConvex(hull: Array[(Double, Double)], r: Double, c: Double): Boolean = {

@@ -27,6 +27,11 @@ import org.apache.spark.sql.types._
   * `if "pixels" in p` guard (features/__init__.py:76-99): every input
   * row appears in the output.
   *
+  * A channel whose mask equals the combined mask takes its shape,
+  * texture and (when the backgrounds agree) intensity rows from the
+  * combined ones instead of computing them again; see
+  * [[computeFeatures]] for the rule.
+  *
   * Every wide table is built by [[wideFrame]]: one plan node per
   * branch (or one for all fused branches), no shuffle; the row is
   * computed in a single pass per event and written straight into a
@@ -175,7 +180,22 @@ object Features {
     * written straight into `feats` through the layout's slot plan
     * (emission order per family == [[familyNames]] order — the
     * contract [[layout]] documents; later families overwrite shared
-    * slots) */
+    * slots).
+    *
+    * Reuse rule: once per event and channel, channel c's mask plane is
+    * compared by value with the combined mask. When they are equal and
+    * non-empty (every `circle` branch: all planes and their union are
+    * one disk), the channel's rows are the combined rows, computed once:
+    * its shape row is the combined shape row, its texture row the
+    * combined texture row, and its intensity views 0..3 reuse the
+    * combined mask's edge band. Intensity views 4..7 repeat views 0..3
+    * only if also the channel background and the combined background
+    * are the same bits: the two are computed differently (a mask
+    * covering the whole frame has background 0.0 but combined
+    * background NaN, Masking.applyRecord), and a twin view subtracts
+    * its own background. An empty mask keeps the 0/NaN defaults, which
+    * differ from the combined rows of an empty combined mask. Every
+    * value is the one the per-channel computation gives, bit for bit. */
   private def computeFeatures(e: ImageEvent, channelNames: Seq[String],
       types: Array[String], feats: Array[Any], emitIdx: Array[Int]): Unit = {
     val h = e.height; val w = e.width
@@ -192,6 +212,13 @@ object Features {
       if (planeMasks(c) == null) planeMasks(c) = e.maskPlane(c)
       planeMasks(c)
     }
+    // per channel: a non-empty mask equal to the combined mask, whose
+    // rows are the combined rows (the reuse rule above)
+    lazy val isCombined: Array[Boolean] = {
+      val nonEmpty = Morphology.any(combined)
+      Array.tabulate(channelNames.length)(c =>
+        nonEmpty && java.util.Arrays.equals(maskOf(c), combined))
+    }
     types.foreach {
       case "bbox" =>
         emit(e.bboxMinr.toDouble)
@@ -201,12 +228,14 @@ object Features {
 
       case "shape" =>
         // combined first, then channels (features/shape.py:143-150)
-        emitAll(shapeRow(combined, h, w))
+        val combinedRow = shapeRow(combined, h, w)
+        emitAll(combinedRow)
         var c = 0
         while (c < channelNames.length) {
           val mp = maskOf(c)
           emitAll(
-            if (Morphology.any(mp)) shapeRow(mp, h, w)
+            if (isCombined(c)) combinedRow
+            else if (Morphology.any(mp)) shapeRow(mp, h, w)
             else RegionProps.Names.indices.map(i =>
               if (i <= 10) 0.0 else Double.NaN).toArray)
           c += 1
@@ -223,7 +252,7 @@ object Features {
         val combinedEdge = Morphology.edgeBand(combined, h, w, 6)
         var c = 0
         while (c < channelNames.length) {
-          val rows = intensityViews(e, c, maskOf(c), combined, combinedEdge)
+          val rows = intensityViews(e, c, maskOf(c), combined, combinedEdge, isCombined(c))
           var v = 0
           while (v < 8) { emitAll(rows(v)); v += 1 }
           c += 1
@@ -235,10 +264,12 @@ object Features {
         while (c < channelNames.length) {
           val mp = maskOf(c)
           val pl = e.plane(c)
+          val combinedRow = textureRow(pl, combined, h, w)
           emitAll(
-            if (Morphology.any(mp)) textureRow(pl, mp, h, w)
+            if (isCombined(c)) combinedRow
+            else if (Morphology.any(mp)) textureRow(pl, mp, h, w)
             else Array.fill(texRowLen)(Double.NaN))
-          emitAll(textureRow(pl, combined, h, w))
+          emitAll(combinedRow)
           c += 1
         }
 
@@ -252,7 +283,7 @@ object Features {
     * how skimage regionprops crops each region), so regions are
     * cropped to their bboxes first — total cost O(image + Σ bbox)
     * instead of O(regions × image). */
-  private def shapeRow(mask: Array[Boolean], h: Int, w: Int): Array[Double] = {
+  private[graft] def shapeRow(mask: Array[Boolean], h: Int, w: Int): Array[Double] = {
     val labels = Morphology.label(mask, h, w)
     val n = Morphology.labelCount(labels)
     // reference _row on an empty mask: regionprops_table yields empty
@@ -302,9 +333,12 @@ object Features {
 
   /** the 8 intensity views of features/intensity.py:84-164, over
     * channel c's mask `mp`, the combined mask `cm` and its edge band
-    * `cedge` */
-  private def intensityViews(e: ImageEvent, c: Int, mp: Array[Boolean],
-      cm: Array[Boolean], cedge: Array[Boolean]): Array[Array[Double]] = {
+    * `cedge`. `mpIsCombined` says `mp` is non-empty and equal to `cm`;
+    * views 4..7 are then views 0..3 when the two backgrounds agree bit
+    * for bit (see [[computeFeatures]]). */
+  private[graft] def intensityViews(e: ImageEvent, c: Int, mp: Array[Boolean],
+      cm: Array[Boolean], cedge: Array[Boolean],
+      mpIsCombined: Boolean): Array[Array[Double]] = {
     val ps = e.planeSize
     val out = Array.fill(8)(new Array[Double](IntensityProps.length))
     val plane = e.plane(c)
@@ -331,12 +365,17 @@ object Features {
 
     if (Morphology.any(mp)) {
       viewAndTwin(select(mp), bg, 0)
-      val edge = Morphology.edgeBand(mp, e.height, e.width, 6)
+      val edge = if (mpIsCombined) cedge else Morphology.edgeBand(mp, e.height, e.width, 6)
       if (Morphology.any(edge)) viewAndTwin(select(edge), bg, 2)
       // else views 2..3 stay 0 (reference zeroes 2: before recomputing 4+)
     } // else views 0..3 stay 0
-    viewAndTwin(select(cm), cbg, 4)
-    if (Morphology.any(cedge)) viewAndTwin(select(cedge), cbg, 6)
+    if (mpIsCombined &&
+        java.lang.Double.doubleToRawLongBits(bg) == java.lang.Double.doubleToRawLongBits(cbg))
+      System.arraycopy(out, 0, out, 4, 4)
+    else {
+      viewAndTwin(select(cm), cbg, 4)
+      if (Morphology.any(cedge)) viewAndTwin(select(cedge), cbg, 6)
+    }
     out
   }
 
@@ -367,7 +406,7 @@ object Features {
   /** GLCM + sobel stats over a masked view (features/texture.py:52-94):
     * quantize valid pixels to 15 levels (16 with the min-edge level),
     * invalid = -1 dropped pairwise; sobel stats over masked values */
-  private def textureRow(plane: Array[Float], mask: Array[Boolean],
+  private[graft] def textureRow(plane: Array[Float], mask: Array[Boolean],
       h: Int, w: Int): Array[Double] = {
     val out = new Array[Double](texRowLen)
     // range over valid pixels

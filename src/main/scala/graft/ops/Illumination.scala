@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.ImageEvent
+import graft.core.{ImageEvent, RunCaches}
 import graft.core.Codecs._
 import graft.kernels.Filters
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
@@ -121,10 +121,12 @@ object Illumination {
     corr
   }
 
-  /** divide: pixels /= correction[group] (jones_2006.py:96-100) */
+  /** divide: pixels /= correction[group] (jones_2006.py:96-100);
+    * `ds` is cached through `caches` for the correction images and the
+    * divide pass, released by the caller's run boundary */
   def correct(spark: SparkSession, ds: Dataset[ImageEvent],
-      medianSize: Int = 50): Dataset[ImageEvent] = {
-    val cached = ds.cache()
+      medianSize: Int = 50, caches: RunCaches = new RunCaches): Dataset[ImageEvent] = {
+    val cached = caches.cache(ds)
     val corr = correctionImages(spark, cached, medianSize)
     divide(spark, cached, corr)
   }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.ImageEvent
+import graft.core.{ImageEvent, RunCaches}
 import graft.core.Codecs._
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -31,9 +31,12 @@ object PopulationFilter {
     s
   }
 
-  def apply(spark: SparkSession, ds: Dataset[ImageEvent]): Dataset[ImageEvent] = {
+  /** `ds` is cached through `caches` for the stats pass and the
+    * predicate pass, released by the caller's run boundary */
+  def apply(spark: SparkSession, ds: Dataset[ImageEvent],
+      caches: RunCaches = new RunCaches): Dataset[ImageEvent] = {
     import spark.implicits._
-    val cached = ds.cache() // reused: stats pass + predicate pass (main.py:219 persist)
+    val cached = caches.cache(ds) // reused: stats pass + predicate pass (main.py:219 persist)
     val statsRow = cached.filter(_.hasPixels)
       .map(filterSum)
       .toDF("s")

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.ImageEvent
+import graft.core.{ImageEvent, RunCaches}
 import graft.core.Codecs._
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions.rand
@@ -23,12 +23,13 @@ object Sampling {
     * `choices(images, k)`): per-record multinomial replication counts
     * from a seeded hash, then explode. Distributed — no driver
     * collection; the oversample+limit trims the (tiny, whp) surplus. */
-  def sampleWithReplacement(ds: Dataset[ImageEvent], k: Int, seed: Long = 42): Dataset[ImageEvent] = {
+  def sampleWithReplacement(ds: Dataset[ImageEvent], k: Int, seed: Long = 42,
+      caches: RunCaches = new RunCaches): Dataset[ImageEvent] = {
     import ds.sparkSession.implicits._
     // cache: the count, the draw(s), and the final trim each execute
     // the full upstream plan otherwise (released at the run boundary —
-    // Cli's end-of-run clearCache / Verify's per-query scope)
-    val cached = ds.cache()
+    // Cli's RunCaches / Verify's per-query scope)
+    val cached = caches.cache(ds)
     val n = cached.count()
     if (n == 0) return cached
     // Poisson(k/n) replication approximates multinomial; oversample by

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.core.Synthetic
+import graft.core.{RunCaches, Synthetic}
 import graft.export.Export
 import graft.ops._
 import graft.sources.{Tiff, Zarr}
@@ -89,6 +89,9 @@ object Cli {
     } finally spark.stop()
   }
 
+  /** One pipeline run: config → features → exports. The caches the
+    * run creates are dropped when it ends, also on failure; caches the
+    * caller holds are left as they are. */
   def run(spark: SparkSession, outputDir: String, configPath: String,
       cliPaths: Seq[String] = Nil): Unit = {
     // the reference's config IS a YAML file (main.py:119-138) —
@@ -124,6 +127,17 @@ object Cli {
       ()
     }
     val cfg = parseConfig(root)
+    // the stages' caches (Illumination.correct, PopulationFilter,
+    // Normalization.normalize, ...) live until the exports consumed
+    // them; there is no per-dataset completion hook, so the run boundary
+    // is their scope
+    val caches = new RunCaches
+    try runStages(spark, outputDir, root, cfg, caches)
+    finally caches.release()
+  }
+
+  private def runStages(spark: SparkSession, outputDir: String, root: JsonNode,
+      cfg: PipelineConfig, caches: RunCaches): Unit = {
     val source = loadSource(spark, root.get("load"))
     val exportNode = Option(root.get("export"))
     val wantQuantiles =
@@ -134,12 +148,12 @@ object Cli {
     // configured stage (projection, illumination, segmentation,
     // sampling, mask filters) exactly as the branches saw them.
     // cfg.normalize IS parseConfig's reading of normalization.quantile —
-    // one source of truth with the export and unpersist sites below
+    // one source of truth with the export site below
     val cfgNeedsBoundaries = wantQuantiles || cfg.normalize
     val prepared =
-      if (cfgNeedsBoundaries) Pipeline.prepare(spark, source, cfg).cache()
-      else Pipeline.prepare(spark, source, cfg)
-    val table = Pipeline.runPrepared(spark, prepared, cfg)
+      if (cfgNeedsBoundaries) caches.cache(Pipeline.prepare(spark, source, cfg, caches))
+      else Pipeline.prepare(spark, source, cfg, caches)
+    val table = Pipeline.runPrepared(spark, prepared, cfg, caches)
     // through the Hadoop FS layer: outputDir may be a cluster
     // destination (s3a/hdfs) — java.nio would create a literal local
     // "s3a:/..." directory on the driver
@@ -170,7 +184,7 @@ object Cli {
       var firstBranch = Masking.branch(prepared, cfg.branches.head.method,
         cfg.mainChannelIndex, cfg.combinedIndices)
       if (cfg.populationFilter)
-        firstBranch = PopulationFilter(spark, firstBranch)
+        firstBranch = PopulationFilter(spark, firstBranch, caches)
       val mm = Normalization.groupMinMax(spark, firstBranch)
       if (cfg.normalize)
         Export.channelBoundariesCsv(spark, mm, cfg.channelNames,
@@ -178,12 +192,6 @@ object Cli {
       if (wantQuantiles) // legacy long-form export kept under its flag
         Export.quantilesCsv(spark, mm, s"$outputDir/quantiles.csv")
     }
-    if (wantQuantiles || cfg.normalize) prepared.unpersist(false)
-    // release the per-branch caches Normalization.normalize /
-    // Illumination.correct created (their two-pass shape needs the
-    // cache until the export above consumed the result; there is no
-    // per-dataset completion hook, so the run boundary is the scope)
-    spark.catalog.clearCache()
   }
 
   private def strings(n: JsonNode): Seq[String] =

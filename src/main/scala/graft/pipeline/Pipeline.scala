@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.core.{ImageEvent, Overlap, Synthetic}
+import graft.core.{ImageEvent, Overlap, RunCaches, Synthetic}
 import graft.ops._
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
@@ -95,16 +95,18 @@ object Pipeline {
   /** every pre-branch stage (repartition → project → illumination →
     * segment → sample → mask filters) — exposed so export-time extras
     * (Cli's quantiles CSV) compute from the SAME processed stream the
-    * branches consume, not from the raw source. */
+    * branches consume, not from the raw source. The caches a stage
+    * creates (illumination, sampling with replacement) go to `caches`
+    * for the caller to release. */
   def prepare(spark: SparkSession, source: Dataset[ImageEvent],
-      cfg: PipelineConfig): Dataset[ImageEvent] = {
+      cfg: PipelineConfig, caches: RunCaches = new RunCaches): Dataset[ImageEvent] = {
     var ds = if (cfg.nPartitions > 0) source.repartition(cfg.nPartitions) else source
 
     cfg.projectOp.foreach(op => ds = Projection(ds, op))
     cfg.illuminationPrecomputed match {
       case Some(path) => ds = Illumination.correctPrecomputed(spark, ds, path)
       case None if cfg.illuminationCorrection =>
-        ds = Illumination.correct(spark, ds, cfg.illuminationMedianSize)
+        ds = Illumination.correct(spark, ds, cfg.illuminationMedianSize, caches)
       case None =>
     }
     cfg.segment.foreach { spec =>
@@ -126,7 +128,7 @@ object Pipeline {
       ds = Segmentation.toEvents(ds, parentCh)
     }
     cfg.sampleK.foreach { k =>
-      ds = if (cfg.sampleWithReplacement) Sampling.sampleWithReplacement(ds, k)
+      ds = if (cfg.sampleWithReplacement) Sampling.sampleWithReplacement(ds, k, caches = caches)
            else Sampling.sampleExact(ds, k)
     }
 
@@ -136,9 +138,11 @@ object Pipeline {
   }
 
   /** branch fan-out + feature extraction over an already-prepared
-    * stream (see [[prepare]]) */
+    * stream (see [[prepare]]); the caches of the aggregate-bearing
+    * branches (shared parent, population filter, normalization) go to
+    * `caches` */
   def runPrepared(spark: SparkSession, ds: Dataset[ImageEvent],
-      cfg: PipelineConfig): DataFrame = {
+      cfg: PipelineConfig, caches: RunCaches = new RunCaches): DataFrame = {
     // mask fan-out X2. When every branch stage is per-record (no
     // population filter / normalization aggregates), ALL branches fuse
     // into ONE map pass producing the full wide row — no joins, no
@@ -150,11 +154,11 @@ object Pipeline {
       // aggregate-bearing branches: per-branch plans from one cached
       // parent, joined on the stable event UID
       val multiConsumer = cfg.branches.length > 1 || includeRaw(cfg)
-      val parent = if (multiConsumer) ds.cache() else ds
+      val parent = if (multiConsumer) caches.cache(ds) else ds
       def buildBranch(b: MaskBranchConfig): DataFrame = {
         var branch = Masking.branch(parent, b.method, cfg.mainChannelIndex, cfg.combinedIndices)
-        if (cfg.populationFilter) branch = PopulationFilter(spark, branch)
-        if (cfg.normalize) branch = Normalization.normalize(spark, branch)
+        if (cfg.populationFilter) branch = PopulationFilter(spark, branch, caches)
+        if (cfg.normalize) branch = Normalization.normalize(spark, branch, caches)
         Features.extract(branch, cfg.channelNames,
           b.featureTypes.getOrElse(cfg.featureTypes), branchPrefix(b))
       }
@@ -162,8 +166,8 @@ object Pipeline {
       // loop (filter + normalization) WITHOUT any masking
       def buildRaw(): DataFrame = {
         var raw = parent
-        if (cfg.populationFilter) raw = PopulationFilter(spark, raw)
-        if (cfg.normalize) raw = Normalization.normalize(spark, raw)
+        if (cfg.populationFilter) raw = PopulationFilter(spark, raw, caches)
+        if (cfg.normalize) raw = Normalization.normalize(spark, raw, caches)
         Features.extract(raw, cfg.channelNames, Seq("raw"), "raw")
       }
       val thunks: Seq[() => DataFrame] =

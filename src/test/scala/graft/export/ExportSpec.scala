@@ -30,4 +30,44 @@ class ExportSpec extends SparkSpec {
     val names = new java.io.File(dir).listFiles().map(_.getName).toSet
     assert(names.contains("other.0.parquet") && names.contains("features.0.parquet"))
   }
+
+  test("part files carry no dictionary; doubles read back bit for bit") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val dir = Files.createTempDirectory("export-nodict").toString
+    // repeats dictionary-encode well: the parquet default writes them
+    // through a dictionary page
+    val values: Seq[java.lang.Double] = Seq(Double.NaN, -0.0, 0.0, null, 1.5, 1.5, 1.5,
+      Double.PositiveInfinity, Double.NegativeInfinity, Double.MinPositiveValue, 1.5, null)
+      .map(v => v.asInstanceOf[java.lang.Double])
+    val rows = (0 until 240).map(i => Row(i.toLong, s"k${i % 3}", values(i % values.length),
+      (i % 4).toDouble))
+    val schema = StructType(Seq(StructField("id", LongType), StructField("key", StringType),
+      StructField("v", DoubleType), StructField("repeat", DoubleType)))
+    Export.parquetPartFiles(spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema),
+      dir, "features")
+    val parts = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
+    assert(parts.length == 3)
+    val conf = spark.sparkContext.hadoopConfiguration
+    for (f <- parts) {
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.toString), conf))
+      try for (block <- reader.getFooter.getBlocks.asScala; col <- block.getColumns.asScala) {
+        val what = s"${f.getName} ${col.getPath}"
+        assert(!col.hasDictionaryPage, what)
+        assert(!col.getEncodings.asScala.exists(_.name.endsWith("_DICTIONARY")),
+          s"$what: ${col.getEncodings}")
+      } finally reader.close()
+    }
+    def bits(v: Any): Any = v match {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case other => other
+    }
+    val back = spark.read.parquet(parts.map(_.toString): _*).collect()
+      .map(r => (r.getLong(0), (0 until 4).map(i => bits(r.get(i))))).sortBy(_._1).map(_._2).toSeq
+    assert(back == rows.map(r => (0 until 4).map(i => bits(r.get(i)))))
+  }
 }

@@ -230,4 +230,101 @@ class CliSpec extends SparkSpec {
     assert(root.children.contains("X") && root.children.contains("obs"))
     assert(root.children("X").dims.head > 0, "per-cell rows expected")
   }
+
+  /** a (N, maxLen) <f4 zlib zarr v2 store of three-channel cell events
+    * (a dark brightfield disk, a DAPI blob, noise), ragged around 40x40 */
+  private def writeCellZarr(dir: java.nio.file.Path, n: Int): Unit = {
+    val rng = new scala.util.Random(17)
+    val events = (0 until n).map { _ =>
+      val h = 36 + rng.nextInt(8); val w = 36 + rng.nextInt(8)
+      val (cy, cx) = (h / 2 + rng.nextInt(3) - 1, w / 2 + rng.nextInt(3) - 1)
+      val px = new Array[Float](3 * h * w)
+      for (r <- 0 until h; c <- 0 until w) {
+        val d2 = (r - cy) * (r - cy) + (c - cx) * (c - cx)
+        px(r * w + c) = (100 + 3 * rng.nextGaussian() - 50 * math.exp(-d2 / 40.0)).toFloat
+        px(h * w + r * w + c) = (10 + rng.nextGaussian() + 40 * math.exp(-d2 / 12.0)).toFloat
+        px(2 * h * w + r * w + c) = (10 + rng.nextGaussian() + 90 * math.exp(-d2 / 8.0)).toFloat
+      }
+      (h, w, px)
+    }
+    val maxLen = events.map(_._3.length).max
+    Files.createDirectories(dir)
+    Files.writeString(dir.resolve(".zarray"),
+      s"""{"chunks":[$n,$maxLen],"compressor":{"id":"zlib","level":5},"dtype":"<f4",
+         |"fill_value":0,"filters":null,"order":"C","shape":[$n,$maxLen],"zarr_format":2}""".stripMargin)
+    Files.writeString(dir.resolve(".zattrs"),
+      s"""{"object_number":[${(0 until n).mkString(",")}],""" +
+        s""""shape":[${events.map { case (h, w, _) => s"[3,$h,$w]" }.mkString(",")}]}""")
+    val bb = java.nio.ByteBuffer.allocate(n * maxLen * 4).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    events.zipWithIndex.foreach { case ((_, _, px), i) =>
+      bb.position(i * maxLen * 4); px.foreach(bb.putFloat)
+    }
+    val deflater = new java.util.zip.Deflater(5)
+    deflater.setInput(bb.array()); deflater.finish()
+    val out = new java.io.ByteArrayOutputStream()
+    val buf = new Array[Byte](65536)
+    while (!deflater.finished()) out.write(buf, 0, deflater.deflate(buf))
+    Files.write(dir.resolve("0.0"), out.toByteArray)
+  }
+
+  test("a run drops only the caches it created, never the caller's") {
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    val callers = spark.range(40).selectExpr("id * 3 AS v").cache()
+    callers.count()
+    val level = callers.storageLevel
+    assert(level != org.apache.spark.storage.StorageLevel.NONE)
+    // illumination, population filter, normalization and the shared
+    // parent of the aggregate-bearing branches all cache
+    val normalizing = Files.createTempFile("cli-caches", ".json")
+    Files.writeString(normalizing,
+      """{ "load": {"format": "synthetic", "kind": "cells", "n": 8, "channels": 2},
+        |  "illumination_correction": {"median_filter_size": 5},
+        |  "mask": [{"name": "circle", "method": "circle"},
+        |           {"name": "li", "method": "li", "smooth": [1.0, 1.0]}],
+        |  "filter": {"population": true},
+        |  "normalization": {"quantile": true},
+        |  "feature_extraction": {"types": ["regions", "intensity"]},
+        |  "export": {"coalesce": 1} }""".stripMargin)
+    val zarr = Files.createTempDirectory("cli-caches-zarr").resolve("sample.zarr")
+    writeCellZarr(zarr, 6)
+    val zarrConfig = Files.createTempFile("cli-caches", ".yml")
+    Files.writeString(zarrConfig,
+      """load:
+        |  format: zarr
+        |  channels: [0, 1, 2]
+        |  channel_names: [BF, PI, DAPI]
+        |mask:
+        |  main_channel_index: 0
+        |  combined_indices: [0, 1, 2]
+        |  methods:
+        |    - method: circle
+        |      name: circle-1
+        |    - method: circle
+        |      name: circle-2
+        |    - method: li
+        |      name: li
+        |      kwargs:
+        |        smooth: [0.75, 0.75, 0.75]
+        |    - method: spot
+        |      name: spot
+        |      kwargs:
+        |        spotsize: 5
+        |feature_extraction:
+        |  types: [regions, bbox, shape, intensity, texture]
+        |export:
+        |  format: parquet
+        |""".stripMargin)
+    for ((config, paths) <- Seq(normalizing -> Nil, zarrConfig -> Seq(zarr.toString))) {
+      val out = Files.createTempDirectory("cli-caches-out").toString
+      Cli.run(spark, out, config.toString, cliPaths = paths)
+      assert(spark.read.parquet(s"$out/features.*.parquet").count() > 0, config)
+      assert(callers.storageLevel == level, s"caller's cache dropped by $config")
+      assert(callers.count() == 40)
+    }
+    // and the runs left no cache of their own behind
+    callers.unpersist(blocking = true)
+    assert(cacheManager.isEmpty)
+  }
 }
