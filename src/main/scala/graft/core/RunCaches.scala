@@ -6,8 +6,8 @@ import org.apache.spark.storage.StorageLevel
 /** The caches one run creates, so that the run can drop exactly those
   * at its end and leave every cache its caller holds in place. A stage
   * that needs its input twice caches it through [[cache]]; the run
-  * calls [[release]] once its outputs are written. Thread-safe: the
-  * aggregate-bearing branches cache concurrently (Overlap.all).
+  * calls [[release]] once its outputs are written. Thread-safe, so
+  * stages built on several threads may share one.
   */
 final class RunCaches {
   private val created = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]

@@ -7,11 +7,11 @@ import java.nio.file.{Files, Paths}
 
 /** Sinks — reference K1-K6 (SURVEY.md §2.1).
   *
-  * K1 (parquet) is the built-in writer; K2 (AnnData .h5ad) is
-  * deliberately deferred: HDF5 writing has no JVM-stdlib path and the
-  * reference ships it as a per-partition side write — the parquet
-  * feature table carries identical content (export/anndata.py:12-60
-  * splits the same columns by the meta_/feat_ prefix).
+  * K1 (parquet) is the built-in writer; K2 (AnnData `.h5ad`, one per
+  * partition like the reference's side write, export/anndata.py:12-60)
+  * is [[AnnData.export]] over the HDF5 writer in [[Hdf5]]; K3-K6 (the
+  * extent CSVs, `.npy` masks, correction images and timing JSON) are
+  * below.
   */
 object Export {
 
@@ -77,18 +77,31 @@ object Export {
     * on the zarr reference shape (4 part files): 160 events write
     * 6,104,364 bytes instead of 6,140,902 (-0.6%), 1,600 events
     * 26,114,890 instead of 25,499,175 (+2.4%); the larger the part
-    * file, the more the dictionary would have saved. */
+    * file, the more the dictionary would have saved.
+    *
+    * A `file:` destination is written and renamed through the raw local
+    * filesystem, for this write only: the checksummed one Hadoop
+    * resolves for `file:` leaves a `.{name}.crc` sidecar next to every
+    * part file, which the reference does not write, and pays a CRC32 on
+    * every written byte. */
   def parquetPartFiles(df: DataFrame, outputDir: String, filename: String,
       coalesce: Int = 0): Unit = {
-    val scratch = s"$outputDir/.${filename}_spark_tmp"
+    val scratch = new org.apache.hadoop.fs.Path(s"$outputDir/.${filename}_spark_tmp")
     val out = if (coalesce > 0) df.coalesce(coalesce) else df
-    out.write.option("parquet.enable.dictionary", "false").mode("overwrite").parquet(scratch)
     // Path(...).toUri escapes spaces etc.; a raw new URI(path) throws
     // URISyntaxException on them AFTER the parquet write succeeded
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new org.apache.hadoop.fs.Path(scratch).toUri,
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    val parts = fs.listStatus(new org.apache.hadoop.fs.Path(scratch))
+    val (fs, writer) = org.apache.hadoop.fs.FileSystem.get(scratch.toUri,
+      df.sparkSession.sparkContext.hadoopConfiguration) match {
+      case local: org.apache.hadoop.fs.LocalFileSystem =>
+        // set on this write's job configuration only: the cached
+        // `file:` instance everyone else gets stays checksummed
+        (local.getRaw, out.write
+          .option("fs.file.impl", classOf[org.apache.hadoop.fs.RawLocalFileSystem].getName)
+          .option("fs.file.impl.disable.cache", "true"))
+      case other => (other, out.write)
+    }
+    writer.option("parquet.enable.dictionary", "false").mode("overwrite").parquet(scratch.toString)
+    val parts = fs.listStatus(scratch)
       .filter(_.getPath.getName.startsWith("part-"))
       .sortBy(_.getPath.getName)
     scrubStale(fs, new org.apache.hadoop.fs.Path(outputDir), filename, "parquet")
@@ -96,7 +109,7 @@ object Export {
       val target = new org.apache.hadoop.fs.Path(s"$outputDir/$filename.$i.parquet")
       require(fs.rename(st.getPath, target), s"rename ${st.getPath} -> $target failed")
     }
-    fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
+    fs.delete(scratch, true)
   }
 
   /** channel_boundaries.csv exactly as the reference writes it

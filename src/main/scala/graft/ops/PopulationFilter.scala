@@ -11,9 +11,11 @@ import org.apache.spark.sql.functions._
   * keep records with stat > Φ⁻¹(0.05; μ, σ), tombstone the rest.
   *
   * The aggregate-then-filter shape: stats are one partial+final
-  * aggregate (2 doubles shuffled), broadcast back into the row pass —
-  * the decorrelated-scalar-subquery plan Catalyst would build for the
-  * SQL equivalent (see rel.RelQueries q18).
+  * aggregate (2 doubles shuffled per key), broadcast back into the row
+  * pass — the decorrelated-scalar-subquery plan Catalyst would build
+  * for the SQL equivalent (see rel.RelQueries q18). The fused pipeline
+  * takes the thresholds of all its branch chains in one such aggregate,
+  * keyed by chain ([[thresholds]]).
   */
 object PopulationFilter {
 
@@ -31,23 +33,29 @@ object PopulationFilter {
     s
   }
 
+  /** The threshold μ + Φ⁻¹(0.05)·σ of each key's filter sums, from
+    * (key, [[filterSum]]) pairs of pixel-bearing records. A key without
+    * any such record is absent: its threshold is −∞ and keeps all. */
+  def thresholds(sums: Dataset[(Int, Double)]): Map[Int, Double] =
+    sums.toDF("key", "s").groupBy("key")
+      // dask.bag.std is the population std (ddof=0)
+      .agg(avg("s"), stddev_pop("s"))
+      .collect()
+      .map(r => r.getInt(0) -> (r.getDouble(1) + Z05 * r.getDouble(2)))
+      .toMap
+
+  /** `e` itself when its filter sum is above `q5`, else its tombstone */
+  def keepRecord(q5: Double)(e: ImageEvent): ImageEvent =
+    if (!e.hasPixels || filterSum(e) > q5) e else e.tombstone
+
   /** `ds` is cached through `caches` for the stats pass and the
     * predicate pass, released by the caller's run boundary */
   def apply(spark: SparkSession, ds: Dataset[ImageEvent],
       caches: RunCaches = new RunCaches): Dataset[ImageEvent] = {
     import spark.implicits._
     val cached = caches.cache(ds) // reused: stats pass + predicate pass (main.py:219 persist)
-    val statsRow = cached.filter(_.hasPixels)
-      .map(filterSum)
-      .toDF("s")
-      // dask.bag.std is the population std (ddof=0)
-      .agg(avg("s").as("mu"), stddev_pop("s").as("std"))
-      .head()
-    val q5 =
-      if (statsRow.isNullAt(0)) Double.NegativeInfinity
-      else statsRow.getDouble(0) + Z05 * statsRow.getDouble(1)
-    cached.map(ImageEvent.whenPixels { e =>
-      if (filterSum(e) > q5) e else e.tombstone
-    })
+    val q5 = thresholds(cached.filter(_.hasPixels).map(e => (0, filterSum(e))))
+      .getOrElse(0, Double.NegativeInfinity)
+    cached.map(keepRecord(q5))
   }
 }

@@ -127,8 +127,8 @@ object Cli {
       ()
     }
     val cfg = parseConfig(root)
-    // the stages' caches (Illumination.correct, PopulationFilter,
-    // Normalization.normalize, ...) live until the exports consumed
+    // the stages' caches (Illumination.correct, the prepared stream of
+    // a config with aggregates, ...) live until the exports consumed
     // them; there is no per-dataset completion hook, so the run boundary
     // is their scope
     val caches = new RunCaches
@@ -143,17 +143,12 @@ object Cli {
     val wantQuantiles =
       exportNode.flatMap(e => Option(e.get("quantiles_csv"))).exists(_.asBoolean())
 
-    // the processed pre-branch stream is shared between the feature run
-    // and the quantiles export, so the exported extents reflect every
-    // configured stage (projection, illumination, segmentation,
-    // sampling, mask filters) exactly as the branches saw them.
-    // cfg.normalize IS parseConfig's reading of normalization.quantile —
-    // one source of truth with the export site below
-    val cfgNeedsBoundaries = wantQuantiles || cfg.normalize
-    val prepared =
-      if (cfgNeedsBoundaries) caches.cache(Pipeline.prepare(spark, source, cfg, caches))
-      else Pipeline.prepare(spark, source, cfg, caches)
-    val table = Pipeline.runPrepared(spark, prepared, cfg, caches)
+    // channel_boundaries.csv whenever normalization runs
+    // (main.py:49-60,240) and quantiles.csv under its legacy flag: the
+    // first branch's extents, the ones its normalization consumed —
+    // after masking and the population filter, as in the reference
+    val (table, extents) = Pipeline.runPrepared(spark,
+      Pipeline.prepare(spark, source, cfg, caches), cfg, caches, withExtents = wantQuantiles)
     // through the Hadoop FS layer: outputDir may be a cluster
     // destination (s3a/hdfs) — java.nio would create a literal local
     // "s3a:/..." directory on the driver
@@ -174,23 +169,11 @@ object Cli {
         Export.parquetPartFiles(table, outputDir, filename, coalesce)
     }
 
-    if (cfg.normalize || wantQuantiles) {
-      // channel_boundaries.csv whenever normalization runs
-      // (main.py:49-60,240): wide {channel}_min/{channel}_max columns
-      // indexed by group. The reference emits the SAME quantiles the
-      // normalization consumed — which run after masking AND the
-      // population filter — so the filter must apply here too, or the
-      // CSV would report extents including tombstoned events
-      var firstBranch = Masking.branch(prepared, cfg.branches.head.method,
-        cfg.mainChannelIndex, cfg.combinedIndices)
-      if (cfg.populationFilter)
-        firstBranch = PopulationFilter(spark, firstBranch, caches)
-      val mm = Normalization.groupMinMax(spark, firstBranch)
-      if (cfg.normalize)
+    extents.foreach { mm =>
+      if (cfg.normalize) // wide {channel}_min/{channel}_max columns indexed by group
         Export.channelBoundariesCsv(spark, mm, cfg.channelNames,
           s"$outputDir/channel_boundaries.csv")
-      if (wantQuantiles) // legacy long-form export kept under its flag
-        Export.quantilesCsv(spark, mm, s"$outputDir/quantiles.csv")
+      if (wantQuantiles) Export.quantilesCsv(spark, mm, s"$outputDir/quantiles.csv")
     }
   }
 

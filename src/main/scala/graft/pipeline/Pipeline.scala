@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import graft.core.{ImageEvent, Overlap, RunCaches, Synthetic}
+import graft.core.{ImageEvent, RunCaches, Synthetic}
 import graft.ops._
+import graft.ops.Normalization.Extents
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
@@ -11,17 +12,21 @@ import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructTy
   *
   * {{{
   * source → repartition → [project] → [illumination-correct]
-  *   → [segment] → [sample/limit] → N mask branches, per branch:
-  *     [filters] → method → border-scrub → bbox → apply
-  *     → [population filter] → [normalize] → features
-  *   → join branches on the event UID → coalesce → export
+  *   → [segment] → [sample/limit] → [mask filters]
+  *   → one per-record pass: meta ++ per chain (N mask branches, then raw)
+  *       [method → border-scrub → bbox → apply]
+  *       → [population filter] → [normalize] → features
+  *   → coalesce → export
   * }}}
   *
   * Branch concat: the reference concatenates branch feature tables
   * column-wise relying on identical partitioning (main.py:260-268, J3).
-  * Here every branch's feature table carries the stable event UID
-  * (path, idx, id) and branches are equi-joined on it — order-safe by
-  * construction; with one branch no join happens at all.
+  * Here every chain runs on the same record inside one map, so one
+  * event's columns form one row by construction — no join. The
+  * population filter and normalization are group-keyed aggregates:
+  * each is taken for every chain in one job over the cached prepared
+  * stream, keyed by chain, and its small result rides in that pass's
+  * closure.
   */
 final case class MaskBranchConfig(
     name: String,
@@ -72,32 +77,23 @@ object Pipeline {
   /** run the full pipeline on a source dataset → wide feature table */
   def run(spark: SparkSession, source: Dataset[ImageEvent],
       cfg: PipelineConfig): DataFrame =
-    runPrepared(spark, prepare(spark, source, cfg), cfg)
+    runPrepared(spark, prepare(spark, source, cfg), cfg)._1
 
   /** [[run]] reduced to the registry's digest table `(keys...,
-    * row_digest, schema_digest)`. For a per-record config (no
-    * population filter / normalization) the fused pass digests each
-    * wide row where it is computed ([[graft.rel.Digest.fusedDigester]]),
-    * so the planned schema is keys + 2 strings and Catalyst never sees
-    * the several-hundred-column digest projection [[graft.rel.Digest
-    * .rows]] would plan (measured at ~2.3 s/cell on p01 in r16).
-    * Aggregate-bearing configs digest the wide table with
-    * [[graft.rel.Digest.rows]] — the same result either way (DigestSpec
-    * pins the two digests equal; the committed goldens gate both). */
+    * row_digest, schema_digest)`: the fused pass digests each wide row
+    * where it is computed ([[graft.rel.Digest.fusedDigester]]), so the
+    * planned schema is keys + 2 strings and Catalyst never sees the
+    * several-hundred-column digest projection [[graft.rel.Digest.rows]]
+    * would plan (measured at ~2.3 s/cell on p01 in r16). DigestSpec
+    * pins the two digests equal. */
   def runDigested(spark: SparkSession, source: Dataset[ImageEvent],
-      cfg: PipelineConfig, keyCols: Seq[String]): DataFrame = {
-    val ds = prepare(spark, source, cfg)
-    if (!cfg.populationFilter && !cfg.normalize)
-      fusedBranches(ds, cfg, digestKeys = Some(keyCols))
-    else graft.rel.Digest.rows(runPrepared(spark, ds, cfg), keyCols)
-  }
+      cfg: PipelineConfig, keyCols: Seq[String]): DataFrame =
+    runPrepared(spark, prepare(spark, source, cfg), cfg, digestKeys = Some(keyCols))._1
 
   /** every pre-branch stage (repartition → project → illumination →
-    * segment → sample → mask filters) — exposed so export-time extras
-    * (Cli's quantiles CSV) compute from the SAME processed stream the
-    * branches consume, not from the raw source. The caches a stage
-    * creates (illumination, sampling with replacement) go to `caches`
-    * for the caller to release. */
+    * segment → sample → mask filters): the stream [[runPrepared]] reads.
+    * The caches a stage creates (illumination, sampling with
+    * replacement) go to `caches` for the caller to release. */
   def prepare(spark: SparkSession, source: Dataset[ImageEvent],
       cfg: PipelineConfig, caches: RunCaches = new RunCaches): Dataset[ImageEvent] = {
     var ds = if (cfg.nPartitions > 0) source.repartition(cfg.nPartitions) else source
@@ -137,101 +133,90 @@ object Pipeline {
     ds
   }
 
-  /** branch fan-out + feature extraction over an already-prepared
-    * stream (see [[prepare]]); the caches of the aggregate-bearing
-    * branches (shared parent, population filter, normalization) go to
-    * `caches` */
+  /** Every branch chain and its features over an already-prepared
+    * stream (see [[prepare]]), in one per-record pass → the wide
+    * feature table, or with `digestKeys` its digest table. Also returns
+    * chain 0's extents (the first mask branch's) when normalization or
+    * `withExtents` took them; Cli writes channel_boundaries.csv and
+    * quantiles.csv from these. A config with an aggregate caches `ds`
+    * through `caches`. */
   def runPrepared(spark: SparkSession, ds: Dataset[ImageEvent],
-      cfg: PipelineConfig, caches: RunCaches = new RunCaches): DataFrame = {
-    // mask fan-out X2. When every branch stage is per-record (no
-    // population filter / normalization aggregates), ALL branches fuse
-    // into ONE map pass producing the full wide row — no joins, no
-    // repeated parent passes, and column-aligned concat is correct by
-    // construction (SURVEY.md J3: the preferred replacement for the
-    // reference's row-order-dependent axis-1 concat).
-    if (!cfg.populationFilter && !cfg.normalize) fusedBranches(ds, cfg)
+      cfg: PipelineConfig, caches: RunCaches = new RunCaches,
+      withExtents: Boolean = false, digestKeys: Option[Seq[String]] = None)
+      : (DataFrame, Option[Extents]) = {
+    val src =
+      if (cfg.populationFilter || cfg.normalize || withExtents) caches.cache(ds) else ds
+    val (steps, extents) = chains(src, cfg, withExtents)
+    (fusedBranches(src, cfg, steps, digestKeys), extents)
+  }
+
+  /** every chain's masking step: the mask branches in config order,
+    * then raw (the unmasked record) */
+  private[graft] def maskSteps(cfg: PipelineConfig): Seq[ImageEvent => ImageEvent] =
+    cfg.branches.map(b =>
+      Masking.branchRecord(b.method, cfg.mainChannelIndex, cfg.combinedIndices) _) ++
+      (if (includeRaw(cfg)) Seq((e: ImageEvent) => e) else Nil)
+
+  /** Every chain as one per-record function: `branchRecord →
+    * population filter → normalize`. Their aggregates are keyed by
+    * chain: one job takes every chain's filter stats, one every
+    * chain's per-group, per-channel extents over the records its filter
+    * keeps, however many chains there are. Each job recomputes the
+    * masks from `ds`. Also returns chain 0's extents when taken. */
+  private def chains(ds: Dataset[ImageEvent], cfg: PipelineConfig, withExtents: Boolean)
+      : (Seq[ImageEvent => ImageEvent], Option[Extents]) = {
+    import ds.sparkSession.implicits._
+    def keyed(steps: Seq[ImageEvent => ImageEvent])(e: ImageEvent) =
+      steps.indices.iterator.map(i => (i, steps(i)(e)))
+    val masked = maskSteps(cfg)
+    val filtered = if (!cfg.populationFilter) masked else {
+      val q5 = PopulationFilter.thresholds(ds.flatMap(keyed(masked)(_).collect {
+        case (i, r) if r.hasPixels => (i, PopulationFilter.filterSum(r))
+      }))
+      masked.indices.map(i => masked(i).andThen(
+        PopulationFilter.keepRecord(q5.getOrElse(i, Double.NegativeInfinity))))
+    }
+    if (!cfg.normalize && !withExtents) (filtered, None)
     else {
-      // aggregate-bearing branches: per-branch plans from one cached
-      // parent, joined on the stable event UID
-      val multiConsumer = cfg.branches.length > 1 || includeRaw(cfg)
-      val parent = if (multiConsumer) caches.cache(ds) else ds
-      def buildBranch(b: MaskBranchConfig): DataFrame = {
-        var branch = Masking.branch(parent, b.method, cfg.mainChannelIndex, cfg.combinedIndices)
-        if (cfg.populationFilter) branch = PopulationFilter(spark, branch, caches)
-        if (cfg.normalize) branch = Normalization.normalize(spark, branch, caches)
-        Features.extract(branch, cfg.channelNames,
-          b.featureTypes.getOrElse(cfg.featureTypes), branchPrefix(b))
-      }
-      // the reference's raw branch rides through the same per-branch
-      // loop (filter + normalization) WITHOUT any masking
-      def buildRaw(): DataFrame = {
-        var raw = parent
-        if (cfg.populationFilter) raw = PopulationFilter(spark, raw, caches)
-        if (cfg.normalize) raw = Normalization.normalize(spark, raw, caches)
-        Features.extract(raw, cfg.channelNames, Seq("raw"), "raw")
-      }
-      val thunks: Seq[() => DataFrame] =
-        cfg.branches.map(b => () => buildBranch(b)) ++
-          (if (includeRaw(cfg)) Seq(() => buildRaw()) else Nil)
-      // r16 (guide §2.6): every aggregate-bearing chain BLOCKS the
-      // driver on its stats jobs (population-filter head, normalization
-      // extent collect) — the chains are independent, so build them
-      // concurrently instead of serializing 2×(chains) small jobs.
-      // The shared parent is materialized FIRST so concurrent first
-      // jobs cannot compute its partitions twice (the block manager
-      // dedupes storage, not computation). Per-chain results are
-      // unchanged: each chain's aggregates see the same cached parent.
-      if (thunks.length > 1) parent.count()
-      val branchTables = Overlap.all(thunks)
-      branchTables.reduceLeft { (a, b) =>
-        a.join(b.drop("meta_group"), // group is branch-invariant; keep one copy
-          a("meta_path") === b("meta_path") && a("meta_idx") === b("meta_idx") &&
-            a("meta_id") === b("meta_id"))
-          .drop(b("meta_path")).drop(b("meta_idx")).drop(b("meta_id"))
-      }
+      val extents = Normalization.keyedExtents(ds.flatMap(keyed(filtered)(_).flatMap {
+        case (i, r) => Normalization.extentRows(i)(r)
+      }))
+      val normalized = if (!cfg.normalize) filtered else filtered.indices.map(i =>
+        filtered(i).andThen(Normalization.normalizeRecord(extents.getOrElse(i, Map.empty))))
+      (normalized, Some(extents.getOrElse(0, Map.empty)))
     }
   }
 
   /** the fused wide row: its declared schema (meta ++ every branch's
-    * feature columns ++ raw) and the per-record cells in that order;
-    * each branch may select its own feature types (the reference's
-    * per-branch feature_extraction map) */
-  private[graft] def fusedRow(cfg: PipelineConfig)
-      : (StructType, ImageEvent => Array[Any]) = {
+    * feature columns ++ raw) and the per-record cells in that order,
+    * each chain's cells from its record under `chains` ([[maskSteps]]
+    * for a config without aggregates); each branch may select its own
+    * feature types (the reference's per-branch feature_extraction map) */
+  private[graft] def fusedRow(cfg: PipelineConfig,
+      chains: Seq[ImageEvent => ImageEvent]): (StructType, ImageEvent => Array[Any]) = {
     val channelNames = cfg.channelNames
-    val perBranch = cfg.branches.map { b =>
-      val types = b.featureTypes.getOrElse(cfg.featureTypes)
-      (b, branchPrefix(b), Features.featureNames(channelNames, types),
-        Features.layout(channelNames, types))
+    val perChain =
+      cfg.branches.map(b => (branchPrefix(b), b.featureTypes.getOrElse(cfg.featureTypes))) ++
+        (if (includeRaw(cfg)) Seq(("raw", Seq("raw"))) else Nil)
+    val featNames = perChain.flatMap { case (p, types) =>
+      Features.featureNames(channelNames, types).map(Features.renamed(_, p, isLoaderMeta = false))
     }
-    val rawNames =
-      if (includeRaw(cfg)) Features.featureNames(channelNames, Seq("raw"))
-      else Seq.empty
-    val featNames = perBranch.flatMap { case (_, p, names, _) =>
-      names.map(Features.renamed(_, p, isLoaderMeta = false))
-    } ++ rawNames.map(Features.renamed(_, "raw", isLoaderMeta = false))
     val sch = StructType(
       Features.schema(channelNames, cfg.featureTypes, null).fields.take(4) ++
         featNames.map(StructField(_, DoubleType)))
-    val mainCh = cfg.mainChannelIndex
-    val combined = cfg.combinedIndices
-    val rawLayout =
-      if (rawNames.nonEmpty) Some(Features.layout(channelNames, Seq("raw")))
-      else None
+    val layouts = perChain.map { case (_, types) => Features.layout(channelNames, types) }
     val cells = (e: ImageEvent) =>
-      Features.metaCells(e) ++ perBranch.iterator.flatMap { case (b, _, _, lay) =>
-        val be = Masking.branchRecord(b.method, mainCh, combined)(e)
-        Features.featureCells(be, channelNames, lay)
-      } ++ rawLayout.iterator.flatMap(Features.featureCells(e, channelNames, _))
+      Features.metaCells(e) ++ chains.indices.iterator.flatMap(i =>
+        Features.featureCells(chains(i)(e), channelNames, layouts(i)))
     (sch, cells)
   }
 
-  /** all branches in one per-record pass → one wide row, or with
+  /** all chains in one per-record pass → one wide row, or with
     * `digestKeys` straight to the digest table: the same cells, reduced
     * inside the pass by [[graft.rel.Digest.fusedDigester]] */
   private def fusedBranches(ds: Dataset[ImageEvent], cfg: PipelineConfig,
-      digestKeys: Option[Seq[String]] = None): DataFrame = {
-    val (sch, rowCells) = fusedRow(cfg)
+      chains: Seq[ImageEvent => ImageEvent], digestKeys: Option[Seq[String]]): DataFrame = {
+    val (sch, rowCells) = fusedRow(cfg, chains)
     digestKeys match {
       case None => Features.wideFrame(ds, sch)(rowCells)
       case Some(keys) =>

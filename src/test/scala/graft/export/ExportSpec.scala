@@ -70,4 +70,15 @@ class ExportSpec extends SparkSpec {
       .map(r => (r.getLong(0), (0 until 4).map(i => bits(r.get(i))))).sortBy(_._1).map(_._2).toSeq
     assert(back == rows.map(r => (0 until 4).map(i => bits(r.get(i)))))
   }
+
+  test("a local destination holds no checksum sidecar") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("export-nocrc").toString
+    Export.parquetPartFiles((0 until 30).toDF("v").repartition(3), dir, "features")
+    val names = new java.io.File(dir).listFiles().map(_.getName).sorted.toSeq
+    assert(names == Seq("features.0.parquet", "features.1.parquet", "features.2.parquet"))
+    assert(!names.exists(_.endsWith(".crc")), names)
+    assert(spark.read.parquet(s"$dir/features.*.parquet").as[Int].collect().sorted.toSeq ==
+      (0 until 30))
+  }
 }

@@ -275,8 +275,8 @@ class CliSpec extends SparkSpec {
     callers.count()
     val level = callers.storageLevel
     assert(level != org.apache.spark.storage.StorageLevel.NONE)
-    // illumination, population filter, normalization and the shared
-    // parent of the aggregate-bearing branches all cache
+    // illumination and the prepared stream of the population filter
+    // and normalization cache
     val normalizing = Files.createTempFile("cli-caches", ".json")
     Files.writeString(normalizing,
       """{ "load": {"format": "synthetic", "kind": "cells", "n": 8, "channels": 2},
@@ -326,5 +326,82 @@ class CliSpec extends SparkSpec {
     // and the runs left no cache of their own behind
     callers.unpersist(blocking = true)
     assert(cacheManager.isEmpty)
+  }
+
+  /** a JSON config over the synthetic cell source with the population
+    * filter and normalization, one mask branch per entry of `masks` */
+  private def aggregateConfig(masks: String*): java.nio.file.Path = {
+    val config = Files.createTempFile("cli-aggregates", ".json")
+    Files.writeString(config,
+      s"""{ "load": {"format": "synthetic", "kind": "cells", "n": 40, "channels": 2},
+         |  "mask": [${masks.mkString(", ")}],
+         |  "filter": {"population": true},
+         |  "normalization": {"quantile": true},
+         |  "feature_extraction": {"types": ["regions", "intensity"]},
+         |  "export": {"coalesce": 1, "quantiles_csv": true} }""".stripMargin)
+    config
+  }
+
+  test("channel_boundaries.csv and quantiles.csv equal the first branch's rebuild") {
+    val config = aggregateConfig("""{"name": "li", "method": "li", "smooth": [1.0, 1.0]}""",
+      """{"name": "circle", "method": "circle"}""")
+    val out = Files.createTempDirectory("cli-extents").toString
+    Cli.run(spark, out, config.toString)
+    // the old export: branch 0 rebuilt, filtered, and its extents taken
+    val root = YamlConfig.normalize(
+      new com.fasterxml.jackson.databind.ObjectMapper().readTree(Files.readAllBytes(config)))
+    val cfg = Cli.parseConfig(root)
+    val prepared = Pipeline.prepare(spark, Cli.loadSource(spark, root.get("load")), cfg).cache()
+    val first = graft.ops.Masking.branch(prepared, cfg.branches.head.method,
+      cfg.mainChannelIndex, cfg.combinedIndices)
+    val mm = graft.ops.Normalization.groupMinMax(spark, graft.ops.PopulationFilter(spark, first))
+    val ref = Files.createTempDirectory("cli-extents-ref").toString
+    graft.export.Export.channelBoundariesCsv(spark, mm, cfg.channelNames,
+      s"$ref/channel_boundaries.csv")
+    graft.export.Export.quantilesCsv(spark, mm, s"$ref/quantiles.csv")
+    spark.catalog.clearCache()
+    for (f <- Seq("channel_boundaries.csv", "quantiles.csv"))
+      assert(Files.readString(Paths.get(out, f)) == Files.readString(Paths.get(ref, f)), f)
+    assert(mm.size == 8) // 4 groups × 2 channels
+  }
+
+  test("jobs before the export do not depend on the number of branches") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    /** the call site of every job `Cli.run` submits, in order */
+    def jobSites(config: java.nio.file.Path): Seq[String] = {
+      val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val marker = "cli-spec-marker"
+      val listener = new SparkListener {
+        override def onJobStart(j: SparkListenerJobStart): Unit =
+          sites.add(j.stageInfos.maxBy(_.stageId).name) // the result stage's call site
+      }
+      val sc = spark.sparkContext
+      sc.addSparkListener(listener)
+      try {
+        Cli.run(spark, Files.createTempDirectory("cli-jobs").toString, config.toString)
+        sc.setCallSite(marker)
+        try sc.parallelize(Seq(1), 1).count() finally sc.clearCallSite()
+        // the bus delivers in order: once the marker is in, every job of
+        // the run is
+        val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+        while (!sites.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      } finally sc.removeSparkListener(listener)
+      import scala.jdk.CollectionConverters._
+      val all = sites.asScala.toSeq
+      assert(all.contains(marker))
+      all.takeWhile(_ != marker)
+    }
+    def beforeExport(sites: Seq[String]): Int = {
+      val n = sites.indexWhere(_.contains("Export.scala"))
+      assert(n >= 0, sites)
+      n
+    }
+    val one = jobSites(aggregateConfig("""{"name": "circle", "method": "circle"}"""))
+    val four = jobSites(aggregateConfig("""{"name": "circle-1", "method": "circle"}""",
+      """{"name": "circle-2", "method": "circle"}""",
+      """{"name": "li", "method": "li", "smooth": [0.75, 0.75]}""",
+      """{"name": "spot", "method": "spot", "spotsize": 5}"""))
+    assert(beforeExport(one) == beforeExport(four), s"one branch: $one; four: $four")
+    assert(one.length == four.length, s"one branch: $one; four: $four")
   }
 }

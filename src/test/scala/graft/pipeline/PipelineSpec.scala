@@ -83,10 +83,9 @@ class PipelineSpec extends SparkSpec {
       branches = Seq(MaskBranchConfig("a", Masking.Circle),
         MaskBranchConfig("b", Masking.Spot(3))),
       featureTypes = Seq("regions", "bbox", "intensity"))
-    // normalize=true forces the join path; with identity-range images
-    // min=0/max=99 -> normalized pixels differ, so compare structure +
-    // meta + regions only... instead force the join path via a private
-    // replay: population/normalize off but join manually per branch.
+    // the reference: each branch (and raw) extracted on its own and the
+    // tables joined on the event UID; AggregateChainSpec does the same
+    // with the population filter and normalization in every chain
     val fused = Pipeline.run(spark, Synthetic.conftest(spark, 6), cfgFused)
     val a = graft.ops.Features.extract(
       Masking.branch(Synthetic.conftest(spark, 6), Masking.Circle, 0),

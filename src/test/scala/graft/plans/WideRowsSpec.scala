@@ -7,13 +7,13 @@ import graft.pipeline.{MaskBranchConfig, Pipeline, PipelineConfig}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.execution.SerializeFromObjectExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.types._
 
 /** The wide-row plan node against the `Encoders.row` frame it replaced:
   * same schema (nullability included), same rows value for value, no
-  * object serializer in the executed plan, and joins over per-branch
-  * wide frames still planned from the child's size estimate. */
+  * object serializer in the executed plan, and one wide-row pass for
+  * every config, aggregate-bearing ones included. */
 class WideRowsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val channels = Seq("ch0", "ch1", "ch2")
@@ -51,7 +51,7 @@ class WideRowsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   /** the pipeline's wide frame equals the row-encoder frame of the same
     * cells; returns its rows */
   private def assertSameFrame(cfg: PipelineConfig, nEvents: Int): Map[Long, Seq[Any]] = {
-    val (sch, cells) = Pipeline.fusedRow(cfg)
+    val (sch, cells) = Pipeline.fusedRow(cfg, Pipeline.maskSteps(cfg))
     val ds = Pipeline.prepare(spark, Synthetic.conftest(spark, nEvents), cfg)
     val expected = rowEncoderFrame(ds, sch)(cells)
     val wide = Pipeline.run(spark, Synthetic.conftest(spark, nEvents), cfg)
@@ -87,10 +87,9 @@ class WideRowsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(keyed(wide) == keyed(expected))
   }
 
-  test("aggregate-bearing branches: broadcast joins and partition count unchanged") {
-    // the per-branch frames must inherit their child's size estimate (a
-    // plan without statistics would turn these into sort-merge joins
-    // and let AQE coalesce the output)
+  test("aggregate-bearing branches: one wide-row pass, no join, partition count unchanged") {
+    // the population filter and normalization ride in the fused pass:
+    // the output keeps the source's partitions (one .h5ad per partition)
     for ((pop, n) <- Seq((false, 12), (true, 40))) {
       val cfg = PipelineConfig(
         channelNames = channels,
@@ -101,9 +100,9 @@ class WideRowsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       val out = Pipeline.run(spark, Synthetic.conftest(spark, n), cfg)
       assert(out.collect().length == n)
       val plan = out.queryExecution.executedPlan
-      // two branches + raw: two joins, both broadcast
-      assert(collect(plan) { case j: BroadcastHashJoinExec => j }.length == 2, plan)
-      assert(collect(plan) { case w: WideRowsExec => w }.length == 3, plan)
+      // two branches + raw, one pass
+      assert(collect(plan) { case j: BaseJoinExec => j }.isEmpty, plan)
+      assert(collect(plan) { case w: WideRowsExec => w }.length == 1, plan)
       assert(plan.execute().getNumPartitions == 4)
       spark.catalog.clearCache()
     }

@@ -597,8 +597,7 @@ class SimilaritySpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val n = 20000
     val dir = java.nio.file.Files.createTempDirectory("s21clustered").toString
-    // generator shared with graft.tools.S21ClusteredScale (the 100x
-    // scale record) — one fixture definition for both size classes
+    // the generator's first 20k vectors: the same rows at any larger n
     Similarity.clusteredEmbeddings(spark, n)
       .repartition(8)
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
