@@ -87,7 +87,7 @@ class WideRowsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(keyed(wide) == keyed(expected))
   }
 
-  test("aggregate-bearing branches: one wide-row pass, no join, partition count unchanged") {
+  test("aggregate-bearing branches: one pass, no join, partition count unchanged") {
     // the population filter and normalization ride in the fused pass:
     // the output keeps the source's partitions (one .h5ad per partition)
     for ((pop, n) <- Seq((false, 12), (true, 40))) {
