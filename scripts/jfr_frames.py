@@ -3,7 +3,7 @@
 
     python3 scripts/jfr_frames.py REC.jfr [--threads PREFIX] [--skip S]
         [--until U] [--record RUN.json] [--top N] [--match TEXT ...]
-        [--layers]
+        [--layers] [--alloc]
 
 Reads `jdk.ExecutionSample` events with `jfr print --stack-depth 64`
 (jfr's default depth, 5, cuts a sort sample off from its caller), keeps
@@ -19,6 +19,12 @@ TEXT; "A>B" counts samples where a frame containing B is called, at any
 depth, from a frame containing A. --layers splits the samples into the
 pipeline's layers (LAYERS below): each sample goes to the layer of the
 frame nearest the top of its stack that matches one, or to "rest".
+
+--alloc reads `jdk.ObjectAllocationSample` events instead and weighs
+each by its sampled bytes (`weight`), so every share is a share of the
+bytes allocated in the window. Its "self" table keys each sample by the
+first frame from the top outside the JDK (JDK_PREFIXES): the code that
+asked for the bytes, not the `Arrays.copyOf` that took them.
 """
 import argparse
 import collections
@@ -27,9 +33,11 @@ import re
 import subprocess
 import sys
 
-EVENT = re.compile(r"^jdk\.ExecutionSample \{")
 TIME = re.compile(r"^\s*startTime = (\d\d):(\d\d):(\d\d)\.(\d+)")
-THREAD = re.compile(r'^\s*sampledThread = "(.*)" \(')
+THREAD = re.compile(r'^\s*(?:sampledThread|eventThread) = "(.*)" \(')
+WEIGHT = re.compile(r"^\s*weight = ([\d.]+) (bytes?|kB|MB|GB|TB)$")
+UNITS = {"byte": 1, "bytes": 1, "kB": 1 << 10, "MB": 1 << 20, "GB": 1 << 30, "TB": 1 << 40}
+JDK_PREFIXES = ("java.", "javax.", "jdk.", "sun.", "com.sun.")
 FRAME = re.compile(r"^\s+([\w$.<>/\[\]]+)\(.*\)(?:\s+line:.*)?$")
 
 # (layer, frame substrings) in print order
@@ -51,17 +59,27 @@ def layer_of(frames):
     return "rest"
 
 
-def samples(path):
-    """yield (seconds of day, thread name, frames top first)"""
-    out = subprocess.run(["jfr", "print", "--events", "jdk.ExecutionSample",
+def first_own_frame(frames):
+    """the first frame from the top outside the JDK, else the top one"""
+    return next((f for f in frames if not f.startswith(JDK_PREFIXES)), frames[0])
+
+
+def samples(path, event):
+    """yield (seconds of day, thread name, frames top first, weight);
+    the weight is the sampled bytes of an allocation sample, else 1"""
+    out = subprocess.run(["jfr", "print", "--events", event,
                           "--stack-depth", "64", path],
                          check=True, capture_output=True, text=True).stdout
+    start = event + " {"
     t = thread = None
     frames = []
+    weight = 1.0
     inside = False
     for line in out.splitlines():
-        if EVENT.match(line):
-            t, thread, frames, inside = None, None, [], False
+        if line == start:
+            t, thread, frames, weight, inside = None, None, [], 1.0, False
+        elif (m := WEIGHT.match(line)):
+            weight = float(m.group(1)) * UNITS[m.group(2)]
         elif (m := TIME.match(line)):
             h, mi, s, frac = m.groups()
             t = int(h) * 3600 + int(mi) * 60 + int(s) + float("0." + frac)
@@ -74,7 +92,7 @@ def samples(path):
         elif inside and (m := FRAME.match(line)):
             frames.append(m.group(1))
         elif line.strip() == "}" and t is not None:
-            yield t, thread or "", frames
+            yield t, thread or "", frames, weight
             t = None
 
 
@@ -88,6 +106,7 @@ def main():
     ap.add_argument("--top", type=int, default=25)
     ap.add_argument("--match", action="append", default=[])
     ap.add_argument("--layers", action="store_true")
+    ap.add_argument("--alloc", action="store_true")
     a = ap.parse_args()
     if a.record:
         rec = json.load(open(a.record))
@@ -95,20 +114,37 @@ def main():
         settle = sum(x["wall_s"] for x in rec["samples"] if "/settle" in x["out"])
         a.skip, a.until = at["setups"] + settle, at["measured"]
 
-    every = list(samples(a.recording))
-    first = min(t for t, _, _ in every)
-    kept = [frames for t, thread, frames in every
+    event = "jdk.ObjectAllocationSample" if a.alloc else "jdk.ExecutionSample"
+    every = list(samples(a.recording, event))
+    if not every:
+        sys.exit(f"no {event} events")
+    first = min(t for t, _, _, _ in every)
+    kept = [(frames, wt) for t, thread, frames, wt in every
             if thread.startswith(a.threads) and a.skip <= t - first <= a.until and frames]
-    n = len(kept)
-    if n == 0:
+    n = sum(wt for _, wt in kept)
+    if not kept:
         sys.exit("no samples kept")
-    self_counts = collections.Counter(f[0] for f in kept)
-    incl_counts = collections.Counter(x for f in kept for x in set(f))
-    print(f"{n} samples from threads '{a.threads}*', {a.skip}-{a.until} s")
-    for title, counts in (("self", self_counts), ("inclusive", incl_counts)):
-        print(f"\n-- top {a.top} by {title} samples")
+    key = first_own_frame if a.alloc else (lambda f: f[0])
+    self_counts = collections.Counter()
+    incl_counts = collections.Counter()
+    for f, wt in kept:
+        self_counts[key(f)] += wt
+        for x in set(f):
+            incl_counts[x] += wt
+    if a.alloc:
+        print(f"{len(kept)} allocation samples, {n / 2**20:.1f} MB, from threads "
+              f"'{a.threads}*', {a.skip}-{a.until} s")
+    else:
+        print(f"{len(kept)} samples from threads '{a.threads}*', {a.skip}-{a.until} s")
+
+    def row(c, label):
+        amount = f"{c / 2**20:9.1f} MB" if a.alloc else f"{int(c):6d}"
+        print(f"{100.0 * c / n:6.1f}%  {amount}  {label}")
+    titles = ("first non-JDK frame", "inclusive") if a.alloc else ("self", "inclusive")
+    for title, counts in zip(titles, (self_counts, incl_counts)):
+        print(f"\n-- top {a.top} by {title} {'bytes' if a.alloc else 'samples'}")
         for frame, c in counts.most_common(a.top):
-            print(f"{100.0 * c / n:6.1f}%  {c:6d}  {frame}")
+            row(c, frame)
     if a.match:
         print("\n-- matches")
     for m in a.match:
@@ -119,15 +155,14 @@ def main():
                 if callee in f:
                     return not caller or any(caller in g for g in frames[i + 1:])
             return False
-        c = sum(1 for f in kept if hit(f))
-        print(f"{100.0 * c / n:6.1f}%  {c:6d}  {m}")
+        row(sum(wt for f, wt in kept if hit(f)), m)
     if a.layers:
-        counts = collections.Counter(layer_of(f) for f in kept)
+        counts = collections.Counter()
+        for f, wt in kept:
+            counts[layer_of(f)] += wt
         print("\n-- layers")
         for name in [x for x, _ in LAYERS] + ["rest"]:
-            c = counts[name]
-            print(f"{100.0 * c / n:6.1f}%  {c:6d}  {name}")
-
+            row(counts[name], name)
 
 if __name__ == "__main__":
     main()

@@ -34,8 +34,7 @@ object AnnData {
     // would read surviving old partitions alongside the new ones
     locally {
       val dirPath = new org.apache.hadoop.fs.Path(dirB)
-      val fs = org.apache.hadoop.fs.FileSystem.get(dirPath.toUri,
-        df.sparkSession.sparkContext.hadoopConfiguration)
+      val fs = Export.sinkFs(dirPath, df.sparkSession.sparkContext.hadoopConfiguration)
       Export.scrubStale(fs, dirPath, filename, "h5ad")
     }
     df.rdd.mapPartitionsWithIndex { (pid, rows) =>
@@ -44,7 +43,7 @@ object AnnData {
       val dirPath = new org.apache.hadoop.fs.Path(dirB)
       val conf = new org.apache.hadoop.conf.Configuration()
       hadoopEntries.foreach { case (k, v) => conf.set(k, v) }
-      val fs = org.apache.hadoop.fs.FileSystem.get(dirPath.toUri, conf)
+      val fs = Export.sinkFs(dirPath, conf)
       fs.mkdirs(dirPath)
       val out = fs.create(new org.apache.hadoop.fs.Path(dirPath, s"$nameB.$pid.h5ad"), true)
       try out.write(bytes) finally out.close()

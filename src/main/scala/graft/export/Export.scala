@@ -41,6 +41,20 @@ object Export {
         .foreach(st => fs.delete(st.getPath, false))
     }
 
+  /** The filesystem a sink writes `path` through: the one Hadoop
+    * resolves, except that `file:` is written through the raw local
+    * filesystem. The checksummed one Hadoop resolves for `file:` leaves
+    * a `.{name}.crc` sidecar next to every file it writes, which the
+    * reference does not write, and pays a CRC32 on every written byte.
+    * Every sink, on the driver and on the executors, resolves its
+    * filesystem here. */
+  private[graft] def sinkFs(path: org.apache.hadoop.fs.Path,
+      conf: org.apache.hadoop.conf.Configuration): org.apache.hadoop.fs.FileSystem =
+    org.apache.hadoop.fs.FileSystem.get(path.toUri, conf) match {
+      case local: org.apache.hadoop.fs.LocalFileSystem => local.getRaw
+      case other => other
+    }
+
   /** Driver-side text write through the Hadoop FS layer, so the
     * destination may be any filesystem the session resolves (s3a,
     * hdfs, file) — a bare java.nio write would land the small CSV/JSON
@@ -49,9 +63,7 @@ object Export {
   private[export] def writeText(spark: SparkSession, path: String,
       text: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      p.toUri, spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
+    val out = sinkFs(p, spark.sparkContext.hadoopConfiguration).create(p, true)
     try out.write(text.getBytes(StandardCharsets.UTF_8))
     finally out.close()
   }
@@ -80,27 +92,32 @@ object Export {
     * file, the more the dictionary would have saved.
     *
     * A `file:` destination is written and renamed through the raw local
-    * filesystem, for this write only: the checksummed one Hadoop
-    * resolves for `file:` leaves a `.{name}.crc` sidecar next to every
-    * part file, which the reference does not write, and pays a CRC32 on
-    * every written byte. */
+    * filesystem ([[sinkFs]]); Spark's writer is pointed at it through
+    * this write's own options, so the cached `file:` instance everyone
+    * else gets stays checksummed.
+    *
+    * Parquet compresses each page through a codec stream that
+    * allocates a buffer of `io.file.buffer.size` bytes, which Spark sets
+    * to 64 KB: with ~2,700 feature columns that is a fresh 64 KB array
+    * per page, most of the bytes the feature pass allocates. This write
+    * sets it to 4 KB on its own options. Parquet opens its file stream
+    * with a fixed 4 KB buffer, so the option sizes only the codec
+    * stream, and the compressed bytes do not depend on it. */
   def parquetPartFiles(df: DataFrame, outputDir: String, filename: String,
       coalesce: Int = 0): Unit = {
     val scratch = new org.apache.hadoop.fs.Path(s"$outputDir/.${filename}_spark_tmp")
     val out = if (coalesce > 0) df.coalesce(coalesce) else df
     // Path(...).toUri escapes spaces etc.; a raw new URI(path) throws
     // URISyntaxException on them AFTER the parquet write succeeded
-    val (fs, writer) = org.apache.hadoop.fs.FileSystem.get(scratch.toUri,
-      df.sparkSession.sparkContext.hadoopConfiguration) match {
-      case local: org.apache.hadoop.fs.LocalFileSystem =>
-        // set on this write's job configuration only: the cached
-        // `file:` instance everyone else gets stays checksummed
-        (local.getRaw, out.write
-          .option("fs.file.impl", classOf[org.apache.hadoop.fs.RawLocalFileSystem].getName)
-          .option("fs.file.impl.disable.cache", "true"))
-      case other => (other, out.write)
+    val fs = sinkFs(scratch, df.sparkSession.sparkContext.hadoopConfiguration)
+    val writer = fs match {
+      case _: org.apache.hadoop.fs.RawLocalFileSystem =>
+        out.write.option("fs.file.impl", classOf[org.apache.hadoop.fs.RawLocalFileSystem].getName)
+          .option("fs.file.impl.disable.cache", "true")
+      case _ => out.write
     }
-    writer.option("parquet.enable.dictionary", "false").mode("overwrite").parquet(scratch.toString)
+    writer.option("parquet.enable.dictionary", "false").option("io.file.buffer.size", "4096")
+      .mode("overwrite").parquet(scratch.toString)
     val parts = fs.listStatus(scratch)
       .filter(_.getPath.getName.startsWith("part-"))
       .sortBy(_.getPath.getName)
@@ -164,7 +181,7 @@ object Export {
         val conf = new org.apache.hadoop.conf.Configuration()
         hadoopEntries.foreach { case (k, v) => conf.set(k, v) }
         val masksPath = new org.apache.hadoop.fs.Path(dirB, "masks")
-        val f = org.apache.hadoop.fs.FileSystem.get(masksPath.toUri, conf)
+        val f = sinkFs(masksPath, conf)
         f.mkdirs(masksPath)
         f
       }

@@ -87,8 +87,7 @@ object Filters {
     * and the final 1/sqrt(ndim) magnitude normalization of
     * skimage.filters.sobel (sqrt(gx² + gy²)/sqrt(2) in 2-D), reflect
     * boundary (ndi.convolve default). The 8 neighbours are read through
-    * one reflect table per axis; the arithmetic is evaluated in the
-    * same order as the textbook expression, so every output is exact. */
+    * one reflect table per axis. */
   def sobel(img: Array[Float], h: Int, w: Int): Array[Float] = {
     val out = new Array[Float](h * w)
     if (out.length == 0) return out
@@ -99,18 +98,27 @@ object Filters {
       val up = rows(r) * w; val mid = rows(r + 1) * w; val dn = rows(r + 2) * w
       var c = 0
       while (c < w) {
-        val lf = cols(c); val ct = cols(c + 1); val rt = cols(c + 2)
-        val nw: Double = img(up + lf); val n: Double = img(up + ct); val ne: Double = img(up + rt)
-        val west: Double = img(mid + lf); val east: Double = img(mid + rt)
-        val sw: Double = img(dn + lf); val s: Double = img(dn + ct); val se: Double = img(dn + rt)
-        val gy = ((nw + 2 * n + ne) - (sw + 2 * s + se)) / 4.0
-        val gx = ((nw + 2 * west + sw) - (ne + 2 * east + se)) / 4.0
-        out(r * w + c) = (math.sqrt(gx * gx + gy * gy) / math.sqrt(2.0)).toFloat
+        out(r * w + c) = sobelAt(img, up, mid, dn, cols(c), cols(c + 1), cols(c + 2))
         c += 1
       }
       r += 1
     }
     out
+  }
+
+  /** [[sobel]] at one pixel, from the offsets of its row and the rows
+    * above and below (`up`, `mid`, `dn`) and the columns left of, at and
+    * right of it. The centre is not read. The arithmetic is evaluated in
+    * the same order as the textbook expression, so every output is
+    * exact. */
+  @inline private[graft] def sobelAt(img: Array[Float], up: Int, mid: Int, dn: Int,
+      lf: Int, ct: Int, rt: Int): Float = {
+    val nw: Double = img(up + lf); val n: Double = img(up + ct); val ne: Double = img(up + rt)
+    val west: Double = img(mid + lf); val east: Double = img(mid + rt)
+    val sw: Double = img(dn + lf); val s: Double = img(dn + ct); val se: Double = img(dn + rt)
+    val gy = ((nw + 2 * n + ne) - (sw + 2 * s + se)) / 4.0
+    val gx = ((nw + 2 * west + sw) - (ne + 2 * east + se)) / 4.0
+    (math.sqrt(gx * gx + gy * gy) / math.sqrt(2.0)).toFloat
   }
 
   private val halfWidthCache = new java.util.concurrent.ConcurrentHashMap[Int, Array[Int]]()

@@ -36,34 +36,44 @@ object Glcm {
     (math.round(distance * math.sin(angleRad)).toInt,
       math.round(distance * math.cos(angleRad)).toInt)
 
-  /** [[matrix]] for a pixel offset. Offsets (dr, dc) and (-dr, -dc)
-    * pair up the same pixels, and each pair adds 1.0 to both (a, b) and
-    * (b, a), so their matrices are equal bit for bit: the counts are
-    * exact in Double whatever order they are added in. */
+  /** [[matrix]] for a pixel offset. Each valid pair is counted once
+    * as (a, b) in `Int`, and the counts are symmetrized once at the end:
+    * (a, b) and (b, a) each get count(a, b) + count(b, a), over a total
+    * of twice the pairs. Every count is an exact integer, so the
+    * normalized doubles are those of adding 1.0 to both cells per pair.
+    * Offsets (dr, dc) and (-dr, -dc) pair up the same pixels, so their
+    * matrices are equal bit for bit. */
   private def matrixAt(q: Array[Int], h: Int, w: Int, levels: Int,
       dr: Int, dc: Int): Array[Double] = {
-    val m = new Array[Double](levels * levels)
-    var r = 0
-    var total = 0.0
-    while (r < h) {
-      var c = 0
-      while (c < w) {
-        val rr = r + dr; val cc = c + dc
-        if (rr >= 0 && rr < h && cc >= 0 && cc < w) {
-          val a = q(r * w + c); val b = q(rr * w + cc)
-          if (a >= 0 && b >= 0) {
-            m(a * levels + b) += 1.0
-            m(b * levels + a) += 1.0 // symmetric
-            total += 2.0
-          }
-        }
-        c += 1
+    val counts = new Array[Int](levels * levels)
+    var pairs = 0
+    // rows and columns whose partner (r + dr, c + dc) is in the image
+    val r0 = math.max(0, -dr); val r1 = math.min(h, h - dr)
+    val c0 = math.max(0, -dc); val c1 = math.min(w, w - dc)
+    var r = r0
+    while (r < r1) {
+      var i = r * w + c0
+      var j = (r + dr) * w + c0 + dc
+      val end = r * w + c1
+      while (i < end) {
+        val a = q(i); val b = q(j)
+        if (a >= 0 && b >= 0) { counts(a * levels + b) += 1; pairs += 1 }
+        i += 1; j += 1
       }
       r += 1
     }
-    if (total > 0) {
-      var i = 0
-      while (i < m.length) { m(i) /= total; i += 1 }
+    val m = new Array[Double](levels * levels)
+    if (pairs > 0) {
+      val total = 2.0 * pairs
+      var a = 0
+      while (a < levels) {
+        var b = 0
+        while (b < levels) {
+          m(a * levels + b) = (counts(a * levels + b) + counts(b * levels + a)) / total
+          b += 1
+        }
+        a += 1
+      }
     }
     m
   }
@@ -110,22 +120,39 @@ object Glcm {
   val Angles: Array[Double] =
     Array(math.Pi / 4, 3 * math.Pi / 4, 5 * math.Pi / 4, 7 * math.Pi / 4)
 
+  /** the four angles' offsets for one distance, and for each angle the
+    * index of the first angle whose offset equals it or its negation
+    * (itself when none earlier does). Callers take it once per
+    * distance. */
+  final class AnglePlan private[Glcm] (val dr: Array[Int], val dc: Array[Int],
+      val first: Array[Int])
+
+  def anglePlan(distance: Int): AnglePlan = {
+    val offsets = Angles.map(offset(distance, _))
+    val first = Array.tabulate(offsets.length) { i =>
+      val (dr, dc) = offsets(i)
+      offsets.indexWhere(o => o == ((dr, dc)) || o == ((-dr, -dc)))
+    }
+    new AnglePlan(offsets.map(_._1), offsets.map(_._2), first)
+  }
+
   /** mean and std (population) over the four angles for each prop, for
-    * one distance: Array(propIdx) = (mean, std) — the
+    * one distance's [[anglePlan]]: Array(propIdx) = (mean, std) — the
     * glcm_mean_/glcm_std_ columns of features/texture.py:77-94. An
     * angle whose offset negates an earlier angle's (θ + π: 5π/4 after
     * π/4, 7π/4 after 3π/4) reuses that angle's properties, since the
     * symmetric matrices are equal (see `matrixAt`). */
   def meanStdOverAngles(q: Array[Int], h: Int, w: Int, levels: Int,
-      distance: Int): Array[(Double, Double)] = {
-    val offsets = Angles.map(offset(distance, _))
-    val perAngle = new Array[Array[Double]](offsets.length)
-    for (i <- offsets.indices) {
-      val (dr, dc) = offsets(i)
-      val first = offsets.indexWhere(o => o == ((dr, dc)) || o == ((-dr, -dc)))
+      plan: AnglePlan): Array[(Double, Double)] = {
+    val n = plan.first.length
+    val perAngle = new Array[Array[Double]](n)
+    var i = 0
+    while (i < n) {
+      val f = plan.first(i)
       perAngle(i) =
-        if (first < i) perAngle(first)
-        else properties(matrixAt(q, h, w, levels, dr, dc), levels)
+        if (f < i) perAngle(f)
+        else properties(matrixAt(q, h, w, levels, plan.dr(i), plan.dc(i)), levels)
+      i += 1
     }
     Array.tabulate(Props.length) { p =>
       val vals = perAngle.map(_(p))

@@ -107,58 +107,78 @@ object Morphology {
 
   // ---- connected components ---------------------------------------------
 
-  // neighbour offsets as (row, column) pairs in flat arrays
-  private val dr8 = Array(-1, -1, -1, 0, 0, 1, 1, 1)
-  private val dc8 = Array(-1, 0, 1, -1, 1, -1, 0, 1)
-  private val dr4 = Array(-1, 0, 0, 1)
-  private val dc4 = Array(0, -1, 1, 0)
-
   /** connected-component labeling, labels 1..n in scan order of first
     * pixel (skimage.measure.label; connectivity 2 = 8-conn default in
-    * 2-D, connectivity 1 = 4-conn). BFS flood fill. */
+    * 2-D, connectivity 1 = 4-conn), by row runs in two scans. The first
+    * scan cuts each row into runs of set pixels and unites every run
+    * with the runs of the row above that touch it: columns that overlap
+    * (4-conn), or that overlap or meet at a corner (8-conn). A union
+    * hangs the larger root under the smaller, so each component's root
+    * is its smallest run index, the run holding its first pixel in scan
+    * order. The second scan numbers the roots in run order and fills
+    * the runs. */
   def label(mask: Array[Boolean], h: Int, w: Int, connectivity: Int = 2): Array[Int] = {
-    val dro = if (connectivity >= 2) dr8 else dr4
-    val dco = if (connectivity >= 2) dc8 else dc4
-    val out = new Array[Int](h * w)
-    var next = 0
-    // primitive int stack: an ArrayDeque[Int] boxes every pixel index
-    // (several boxed Integers per foreground pixel), and label() runs
-    // ~5x per plane per branch in the fused hot path. Labels are
-    // assigned at seed discovery (scan order), so traversal order
-    // (stack vs queue) cannot change the labeling.
-    var stack = new Array[Int](1024)
-    var top = 0
-    var idx = 0
-    while (idx < mask.length) {
-      if (mask(idx) && out(idx) == 0) {
-        next += 1
-        out(idx) = next
-        stack(0) = idx
-        top = 1
-        while (top > 0) {
-          top -= 1
-          val cur = stack(top)
-          val r = cur / w; val c = cur % w
-          var i = 0
-          while (i < dro.length) {
-            val rr = r + dro(i); val cc = c + dco(i)
-            if (rr >= 0 && rr < h && cc >= 0 && cc < w) {
-              val j = rr * w + cc
-              if (mask(j) && out(j) == 0) {
-                out(j) = next
-                if (top == stack.length)
-                  stack = java.util.Arrays.copyOf(stack, stack.length * 2)
-                stack(top) = j
-                top += 1
-              }
-            }
-            i += 1
+    // a run on the row above at columns [s, e) touches one at [s2, e2)
+    // iff s < e2 + reach && s2 < e + reach
+    val reach = if (connectivity >= 2) 1 else 0
+    // run k covers the flat indices [start(k), end(k))
+    var start = new Array[Int](64); var end = new Array[Int](64)
+    var parent = new Array[Int](64)
+    var n = 0
+    // the runs of the row above are [prevLo, prevHi)
+    var prevLo = 0; var prevHi = 0
+    var r = 0
+    while (r < h) {
+      val base = r * w
+      val rowLo = n
+      var p = prevLo
+      var c = 0
+      while (c < w) {
+        if (mask(base + c)) {
+          val s = c
+          while (c < w && mask(base + c)) c += 1
+          if (n == start.length) {
+            start = java.util.Arrays.copyOf(start, 2 * n)
+            end = java.util.Arrays.copyOf(end, 2 * n)
+            parent = java.util.Arrays.copyOf(parent, 2 * n)
           }
-        }
+          start(n) = base + s; end(n) = base + c; parent(n) = n
+          // runs above that end too far left touch no later run either;
+          // a run above at flat [S, E) has columns [S + w - base, E + w - base)
+          while (p < prevHi && end(p) + w + reach <= base + s) p += 1
+          var q = p
+          while (q < prevHi && start(q) + w < base + c + reach) {
+            val a = find(parent, q); val b = find(parent, n)
+            if (a < b) parent(b) = a else if (b < a) parent(a) = b
+            q += 1
+          }
+          n += 1
+        } else c += 1
       }
-      idx += 1
+      prevLo = rowLo; prevHi = n
+      r += 1
+    }
+    // a root precedes the rest of its component in run order, so it is
+    // numbered before any run that takes its label
+    val out = new Array[Int](h * w)
+    val runLabel = new Array[Int](n)
+    var next = 0
+    var k = 0
+    while (k < n) {
+      val root = find(parent, k)
+      runLabel(k) = if (root == k) { next += 1; next } else runLabel(root)
+      java.util.Arrays.fill(out, start(k), end(k), runLabel(k))
+      k += 1
     }
     out
+  }
+
+  /** the root of run x in the union-find forest `parent`, halving the
+    * path on the way */
+  private def find(parent: Array[Int], x: Int): Int = {
+    var i = x
+    while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
+    i
   }
 
   def labelCount(labels: Array[Int]): Int = {

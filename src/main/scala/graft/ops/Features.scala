@@ -396,6 +396,8 @@ object Features {
 
   val texRowLen: Int = Glcm.Props.length * 2 * GlcmDistances.length + 4
 
+  private val GlcmPlans: Seq[Glcm.AnglePlan] = GlcmDistances.map(Glcm.anglePlan)
+
   private def textureNames(cname: String, prefix: String): Seq[String] =
     Glcm.Props.flatMap(p =>
       GlcmDistances.map(n => s"${prefix}glcm_mean_${p}_${n}_$cname") ++
@@ -405,42 +407,63 @@ object Features {
 
   /** GLCM + sobel stats over a masked view (features/texture.py:52-94):
     * quantize valid pixels to 15 levels (16 with the min-edge level),
-    * invalid = -1 dropped pairwise; sobel stats over masked values */
+    * invalid = -1 dropped pairwise; sobel stats over masked values.
+    * Both work inside the bounding box of the mask: a GLCM pair or a
+    * sobel window that reaches outside it touches an invalid pixel. */
   private[graft] def textureRow(plane: Array[Float], mask: Array[Boolean],
       h: Int, w: Int): Array[Double] = {
     val out = new Array[Double](texRowLen)
-    // range over valid pixels
+    // bounding box [r0, r1) x [c0, c1) of the mask, and the range over
+    // valid pixels
+    var r0 = h; var r1 = 0; var c0 = w; var c1 = 0
     var mn = Double.MaxValue; var mx = Double.MinValue
-    var i = 0
-    while (i < plane.length) {
-      if (mask(i)) { val v = plane(i); if (v < mn) mn = v; if (v > mx) mx = v }
-      i += 1
-    }
-    val levels = TextureBins + 1
-    val q = new Array[Int](plane.length)
-    val step = if (mx > mn) (mx - mn) / TextureBins else 1.0
-    i = 0
-    while (i < plane.length) {
-      q(i) =
-        if (!mask(i)) -1
-        // an in-mask NaN (normalization of a constant/empty-extent
-        // channel) digitizes into the reference's cropped top bin and
-        // is DROPPED (texture.py: digitize right=True → level 16,
-        // glcm[:-1,:-1]); ceil(NaN).toInt would quantize it to level 0
-        // and concentrate the GLCM at (0,0)
-        else if (plane(i).isNaN) -1
-        else if (mx == mn) 0
-        else {
-          // digitize right=True over 16 equal edges: level = #edges < x
-          val lv = math.ceil((plane(i) - mn) / step - 1e-9).toInt
-          if (lv < 0) 0 else if (lv > TextureBins) TextureBins else lv
+    var r = 0
+    while (r < h) {
+      var c = 0
+      while (c < w) {
+        val i = r * w + c
+        if (mask(i)) {
+          if (r < r0) r0 = r
+          r1 = r + 1
+          if (c < c0) c0 = c
+          if (c >= c1) c1 = c + 1
+          val v = plane(i); if (v < mn) mn = v; if (v > mx) mx = v
         }
-      i += 1
+        c += 1
+      }
+      r += 1
+    }
+    val bh = math.max(0, r1 - r0); val bw = math.max(0, c1 - c0)
+    val levels = TextureBins + 1
+    val q = new Array[Int](bh * bw)
+    val step = if (mx > mn) (mx - mn) / TextureBins else 1.0
+    r = 0
+    while (r < bh) {
+      var c = 0
+      while (c < bw) {
+        val i = (r + r0) * w + c + c0
+        q(r * bw + c) =
+          if (!mask(i)) -1
+          // an in-mask NaN (normalization of a constant/empty-extent
+          // channel) digitizes into the reference's cropped top bin and
+          // is DROPPED (texture.py: digitize right=True → level 16,
+          // glcm[:-1,:-1]); ceil(NaN).toInt would quantize it to level 0
+          // and concentrate the GLCM at (0,0)
+          else if (plane(i).isNaN) -1
+          else if (mx == mn) 0
+          else {
+            // digitize right=True over 16 equal edges: level = #edges < x
+            val lv = math.ceil((plane(i) - mn) / step - 1e-9).toInt
+            if (lv < 0) 0 else if (lv > TextureBins) TextureBins else lv
+          }
+        c += 1
+      }
+      r += 1
     }
     // one matrix+properties pass per (distance, angle) — hoisted out of
     // the per-prop loop (recomputing the co-occurrence matrices per
     // property is |Props|× redundant work, O(H·W) each on real images)
-    val perDistAll = GlcmDistances.map(d => Glcm.meanStdOverAngles(q, h, w, levels, d))
+    val perDistAll = GlcmPlans.map(Glcm.meanStdOverAngles(q, bh, bw, levels, _))
     var k = 0
     Glcm.Props.indices.foreach { p =>
       val perDist = perDistAll.map(_(p))
@@ -449,37 +472,47 @@ object Features {
     }
     // sobel over the masked view, exactly as the reference: sobel runs
     // on the NaN-holed image (NaN propagates through the float window
-    // arithmetic just like numpy) and the stats are nan-stats — only
-    // pixels whose whole sobel window sits in-mask contribute
-    // (features/texture.py:82-94, incl. the all-NaN -> NaN branch)
-    val holed = new Array[Float](plane.length)
-    i = 0
-    while (i < plane.length) {
-      holed(i) = if (mask(i)) plane(i) else Float.NaN
-      i += 1
-    }
-    val s = Filters.sobel(holed, h, w)
-    var sSum = 0.0; var sN = 0L; var sMax = Double.MinValue; var sMin = Double.MaxValue
-    i = 0
-    while (i < s.length) {
-      if (!s(i).isNaN) {
-        sSum += s(i); sN += 1
-        if (s(i) > sMax) sMax = s(i)
-        if (s(i) < sMin) sMin = s(i)
+    // arithmetic just like numpy) and the stats are nan-stats
+    // (features/texture.py:82-94, incl. the all-NaN -> NaN branch).
+    // Only a pixel whose 8 reflected neighbours are all in the mask can
+    // give a non-NaN value (the centre is not read), and only an in-box
+    // pixel has them; the rest are NaN and skipped. One pixel of reflect
+    // border repeats the edge row or column. The values are
+    // [[Filters.sobelAt]] on the plane, taken in index order.
+    val s = new Array[Float](bh * bw)
+    var sN = 0
+    r = r0
+    while (r < r1) {
+      val up = math.max(r - 1, 0) * w; val mid = r * w
+      val dn = math.min(r + 1, h - 1) * w
+      var c = c0
+      while (c < c1) {
+        val lf = math.max(c - 1, 0); val rt = math.min(c + 1, w - 1)
+        if (mask(up + lf) && mask(up + c) && mask(up + rt) && mask(mid + lf) &&
+            mask(mid + rt) && mask(dn + lf) && mask(dn + c) && mask(dn + rt)) {
+          val v = Filters.sobelAt(plane, up, mid, dn, lf, c, rt)
+          if (!v.isNaN) { s(sN) = v; sN += 1 }
+        }
+        c += 1
       }
-      i += 1
+      r += 1
     }
     if (sN == 0) {
       out(k) = Double.NaN; out(k + 1) = Double.NaN
       out(k + 2) = Double.NaN; out(k + 3) = Double.NaN
     } else {
+      var sSum = 0.0; var sMax = Double.MinValue; var sMin = Double.MaxValue
+      var i = 0
+      while (i < sN) {
+        sSum += s(i)
+        if (s(i) > sMax) sMax = s(i)
+        if (s(i) < sMin) sMin = s(i)
+        i += 1
+      }
       val sMean = sSum / sN
       var ss = 0.0
       i = 0
-      while (i < s.length) {
-        if (!s(i).isNaN) { val d = s(i) - sMean; ss += d * d }
-        i += 1
-      }
+      while (i < sN) { val d = s(i) - sMean; ss += d * d; i += 1 }
       out(k) = sMean
       out(k + 1) = math.sqrt(ss / sN)
       out(k + 2) = sMax

@@ -153,8 +153,7 @@ object Cli {
     // destination (s3a/hdfs) — java.nio would create a literal local
     // "s3a:/..." directory on the driver
     val outPath = new org.apache.hadoop.fs.Path(outputDir)
-    org.apache.hadoop.fs.FileSystem.get(outPath.toUri,
-      spark.sparkContext.hadoopConfiguration).mkdirs(outPath)
+    Export.sinkFs(outPath, spark.sparkContext.hadoopConfiguration).mkdirs(outPath)
 
     val coalesce = exportNode.flatMap(e => Option(e.get("coalesce"))).map(_.asInt()).getOrElse(0)
     // export.filename names the partition objects, exactly like the

@@ -81,4 +81,50 @@ class ExportSpec extends SparkSpec {
     assert(spark.read.parquet(s"$dir/features.*.parquet").as[Int].collect().sorted.toSeq ==
       (0 until 30))
   }
+
+  test("parts written with a 4 KB and a 64 KB codec buffer decode alike, same chunk sizes") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // pages far larger than either buffer: noise barely compresses,
+    // repeats compress well, and nulls leave short pages
+    val rng = new scala.util.Random(31)
+    val rows = (0 until 30000).map(i => Row(i.toLong, rng.nextGaussian(), (i % 7).toDouble,
+      if (i % 5 == 0) null else java.lang.Double.valueOf(rng.nextDouble())))
+    val schema = StructType(Seq(StructField("id", LongType), StructField("noise", DoubleType),
+      StructField("repeat", DoubleType), StructField("sparse", DoubleType)))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    val small = Files.createTempDirectory("export-4k").toString
+    Export.parquetPartFiles(df, small, "features")
+    val large = Files.createTempDirectory("export-64k").toString
+    df.write.option("parquet.enable.dictionary", "false").option("io.file.buffer.size", "65536")
+      .mode("overwrite").parquet(large)
+    def parts(dir: String, prefix: String) = new java.io.File(dir).listFiles()
+      .filter(f => f.getName.startsWith(prefix) && f.getName.endsWith(".parquet"))
+      .sortBy(_.getName).toSeq
+    val (a, b) = (parts(small, "features."), parts(large, "part-"))
+    assert(a.length == 2 && b.length == 2, (a, b))
+    val conf = spark.sparkContext.hadoopConfiguration
+    def chunkSizes(f: java.io.File): Seq[(String, Long, Long)] = {
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.toString), conf))
+      try reader.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala.map(col =>
+        (col.getPath.toDotString, col.getTotalSize, col.getTotalUncompressedSize)))
+      finally reader.close()
+    }
+    for ((x, y) <- a.zip(b)) {
+      val (sx, sy) = (chunkSizes(x), chunkSizes(y))
+      assert(sx == sy, s"${x.getName} vs ${y.getName}")
+      // more than one 4 KB buffer's worth per chunk
+      assert(sx.exists(_._2 > 65536), sx)
+    }
+    def cells(files: Seq[java.io.File]) = spark.read.parquet(files.map(_.toString): _*).collect()
+      .map(r => (0 until 4).map(i => r.get(i) match {
+        case d: Double => java.lang.Double.doubleToRawLongBits(d)
+        case other => other
+      })).sortBy(_.head.asInstanceOf[Long]).toSeq
+    assert(cells(a) == cells(b))
+  }
 }

@@ -225,8 +225,8 @@ class ImageOpsSpec extends AnyFunSuite {
     // column ramp: the distance-3 diagonal offset (2,2) sees |Δq| = 2
     val ramp = Array.tabulate(64)(i => (i % 8) * 2)
     val flatish = Array.tabulate(64)(_ => 7)
-    val pc = Glcm.meanStdOverAngles(ramp, 8, 8, 15, 3)
-    val pf = Glcm.meanStdOverAngles(flatish, 8, 8, 15, 3)
+    val pc = Glcm.meanStdOverAngles(ramp, 8, 8, 15, Glcm.anglePlan(3))
+    val pf = Glcm.meanStdOverAngles(flatish, 8, 8, 15, Glcm.anglePlan(3))
     assert(pc(0)._1 > pf(0)._1) // contrast mean
     val m = Glcm.matrix(ramp, 8, 8, 15, 3, math.Pi / 4)
     assert(math.abs(m.sum - 1.0) < 1e-9)

@@ -404,4 +404,18 @@ class CliSpec extends SparkSpec {
     assert(beforeExport(one) == beforeExport(four), s"one branch: $one; four: $four")
     assert(one.length == four.length, s"one branch: $one; four: $four")
   }
+
+  test("an anndata output with channel_boundaries.csv holds no checksum sidecar") {
+    val config = Files.createTempFile("cli-anndata-nocrc", ".json")
+    Files.writeString(config,
+      """{ "load": {"format": "synthetic", "kind": "cells", "n": 12, "channels": 2},
+        |  "mask": [{"name": "circle", "method": "circle"}],
+        |  "normalization": {"quantile": true},
+        |  "feature_extraction": {"types": ["regions", "intensity"]},
+        |  "export": {"format": "anndata", "coalesce": 2} }""".stripMargin)
+    val out = Files.createTempDirectory("cli-anndata-nocrc").toString
+    Cli.run(spark, out, config.toString)
+    val names = new java.io.File(out).listFiles().map(_.getName).sorted.toSeq
+    assert(names == Seq("channel_boundaries.csv", "features.0.h5ad", "features.1.h5ad"), names)
+  }
 }
