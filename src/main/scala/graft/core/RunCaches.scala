@@ -5,9 +5,15 @@ import org.apache.spark.storage.StorageLevel
 
 /** The caches one run creates, so that the run can drop exactly those
   * at its end and leave every cache its caller holds in place. A stage
-  * that needs its input twice caches it through [[cache]]; the run
+  * that needs its input twice caches it through [[cache]]: the
+  * pipeline's prepared stream when a config has an aggregate,
+  * illumination correction, and sampling with replacement. The run
   * calls [[release]] once its outputs are written. Thread-safe, so
   * stages built on several threads may share one.
+  *
+  * The standalone per-op forms `PopulationFilter.apply` and
+  * `Normalization.normalize` take no `RunCaches`: they cache their
+  * input themselves and leave it to the caller's scope.
   */
 final class RunCaches {
   private val created = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]

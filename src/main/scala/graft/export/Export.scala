@@ -3,7 +3,6 @@ package graft.export
 import graft.core.ImageEvent
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
 
 /** Sinks — reference K1-K6 (SURVEY.md §2.1).
   *
@@ -215,9 +214,6 @@ object Export {
     data.foreach(bb.putInt)
     bb.array()
   }
-
-  private[export] def writeNpyInt(path: String, data: Array[Int], shape: Seq[Int]): Unit =
-    Files.write(Paths.get(path), npyIntBytes(data, shape))
 
   /** K5: persist per-group correction images as a small keyed parquet
     * (jones_2006.py:102-107,122-128 pickle → parquet here); reload

@@ -88,9 +88,6 @@ object Morphology {
     false
   }
 
-  def closeBinary(mask: Array[Boolean], h: Int, w: Int, radius: Int): Array[Boolean] =
-    erodeBinary(dilateBinary(mask, h, w, radius), h, w, radius)
-
   def openBinary(mask: Array[Boolean], h: Int, w: Int, radius: Int): Array[Boolean] =
     dilateBinary(erodeBinary(mask, h, w, radius), h, w, radius)
 

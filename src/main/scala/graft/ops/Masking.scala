@@ -271,11 +271,6 @@ object Masking {
     e.copy(mask = mask, regions = regions)
   }
 
-  def createMasks(ds: Dataset[ImageEvent], method: Method): Dataset[ImageEvent] = {
-    import graft.core.Codecs._
-    ds.map(ImageEvent.whenPixels(masksRecord(method)))
-  }
-
   /** border-region scrub (masking/__init__.py:132-180): per channel
     * drop components with >25%-side border presence; zero surviving
     * regions in the main channel → tombstone pixels AND mask. */
@@ -297,11 +292,6 @@ object Masking {
     if (regions(mainChannelIndex) == 0)
       e.copy(pixels = null, mask = null, regions = regions)
     else e.copy(mask = newMask, regions = regions)
-  }
-
-  def removeBorderRegions(ds: Dataset[ImageEvent], mainChannelIndex: Int): Dataset[ImageEvent] = {
-    import graft.core.Codecs._
-    ds.map(ImageEvent.whenPixels(scrubRecord(mainChannelIndex)))
   }
 
   /** union bounding box over channel masks
@@ -330,11 +320,6 @@ object Masking {
       if (!any) e // no mask anywhere: keep sentinel bbox
       else e.copy(bboxMinr = minR, bboxMinc = minC, bboxMaxr = maxR, bboxMaxc = maxC)
     }
-  }
-
-  def boundingBox(ds: Dataset[ImageEvent]): Dataset[ImageEvent] = {
-    import graft.core.Codecs._
-    ds.map(ImageEvent.whenPixels(bboxRecord))
   }
 
   /** apply the mask: combined (union) mask over `combinedIndices`,
@@ -385,11 +370,6 @@ object Masking {
     }
   }
 
-  def applyMask(ds: Dataset[ImageEvent], combinedIndices: Seq[Int] = null): Dataset[ImageEvent] = {
-    import graft.core.Codecs._
-    ds.map(ImageEvent.whenPixels(applyRecord(combinedIndices)))
-  }
-
   /** the whole per-branch chain as one per-record function (the fused
     * single-pass path of Pipeline.run) */
   def branchRecord(method: Method, mainChannelIndex: Int,
@@ -405,10 +385,9 @@ object Masking {
   /** full per-branch chain of the reference `mask()` fan-out
     * (masking/__init__.py:33-72): method → border scrub → bbox → apply */
   def branch(ds: Dataset[ImageEvent], method: Method, mainChannelIndex: Int,
-      combinedIndices: Seq[Int] = null): Dataset[ImageEvent] =
+      combinedIndices: Seq[Int] = null): Dataset[ImageEvent] = {
+    import graft.core.Codecs._
     if (method == NoOp) ds // mask: null — pass-through (see NoOp)
-    else applyMask(
-      boundingBox(
-        removeBorderRegions(createMasks(ds, method), mainChannelIndex)),
-      combinedIndices)
+    else ds.map(ImageEvent.whenPixels(branchRecord(method, mainChannelIndex, combinedIndices)))
+  }
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{ImageEvent, RunCaches}
+import graft.core.ImageEvent
 import graft.core.Codecs._
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -107,15 +107,15 @@ object Normalization {
 
   /** [[normalizeRecord]] over `ds` with its own [[groupMinMax]].
     *
-    * Caches `ds` for its two passes (extents + normalize) through
-    * `caches` and cannot release it itself — the second pass is lazy.
-    * Cache scope is the CALLER's run boundary: the CLI releases its
-    * [[RunCaches]] after export, and Verify/Bench clear between
-    * queries; a long-lived session calling this repeatedly should do
-    * the same. */
-  def normalize(spark: SparkSession, ds: Dataset[ImageEvent],
-      caches: RunCaches = new RunCaches): Dataset[ImageEvent] = {
-    val cached = caches.cache(ds) // shared subplan: extents + normalize pass
+    * Caches `ds` for its two passes (extents + normalize) and cannot
+    * release it itself — the second pass is lazy. Cache scope is the
+    * CALLER's: Verify/Bench clear between queries; a long-lived
+    * session calling this repeatedly should do the same. (The
+    * pipeline does not call this: it takes every chain's extents in
+    * [[keyedExtents]] and caches through its run's
+    * [[graft.core.RunCaches]].) */
+  def normalize(spark: SparkSession, ds: Dataset[ImageEvent]): Dataset[ImageEvent] = {
+    val cached = ds.cache() // shared subplan: extents + normalize pass
     val bc = spark.sparkContext.broadcast(groupMinMax(spark, cached))
     cached.map(e => normalizeRecord(bc.value)(e))
   }

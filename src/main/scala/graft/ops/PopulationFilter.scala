@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{ImageEvent, RunCaches}
+import graft.core.ImageEvent
 import graft.core.Codecs._
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -48,12 +48,12 @@ object PopulationFilter {
   def keepRecord(q5: Double)(e: ImageEvent): ImageEvent =
     if (!e.hasPixels || filterSum(e) > q5) e else e.tombstone
 
-  /** `ds` is cached through `caches` for the stats pass and the
-    * predicate pass, released by the caller's run boundary */
-  def apply(spark: SparkSession, ds: Dataset[ImageEvent],
-      caches: RunCaches = new RunCaches): Dataset[ImageEvent] = {
+  /** [[keepRecord]] over `ds` with its own [[thresholds]]. Caches `ds`
+    * for the stats pass and the predicate pass and leaves the cache to
+    * the caller's scope, as [[Normalization.normalize]] does. */
+  def apply(spark: SparkSession, ds: Dataset[ImageEvent]): Dataset[ImageEvent] = {
     import spark.implicits._
-    val cached = caches.cache(ds) // reused: stats pass + predicate pass (main.py:219 persist)
+    val cached = ds.cache() // reused: stats pass + predicate pass (main.py:219 persist)
     val q5 = thresholds(cached.filter(_.hasPixels).map(e => (0, filterSum(e))))
       .getOrElse(0, Double.NegativeInfinity)
     cached.map(keepRecord(q5))

@@ -16,9 +16,6 @@ object Sampling {
     ds.orderBy(rand(seed)).limit(k).as[ImageEvent]
   }
 
-  /** plain limit */
-  def limit(ds: Dataset[ImageEvent], k: Int): Dataset[ImageEvent] = ds.limit(k)
-
   /** L2: exact-k random choices WITH replacement (main.py:193-194
     * `choices(images, k)`): per-record multinomial replication counts
     * from a seeded hash, then explode. Distributed — no driver

@@ -7,6 +7,7 @@ import graft.sources.{Tiff, Zarr}
 import org.apache.spark.sql.SparkSession
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.{JsonNodeFactory, ObjectNode}
 import java.nio.file.{Files, Paths}
 
 /** CLI batch entry point — the reference's `scip OUTPUT CONFIG
@@ -105,25 +106,12 @@ object Cli {
           Files.readAllBytes(Paths.get(configPath)), "UTF-8"))
       else new ObjectMapper().readTree(Files.readAllBytes(Paths.get(configPath)))
     val root = YamlConfig.normalize(raw)
-    // refuse the PRE-RELEASE key shape by name BEFORE the load-stage
-    // require below — a loading:-shaped config has no `load` node, and
-    // "config needs a load stage" would bury the actual problem
-    // (parseConfig re-checks for the paths-in-config entry route)
-    require(!(root.has("loading") || root.has("masking")),
-      "config uses the reference's pre-release key shape " +
-        "(loading:/masking:) which current scip also rejects — " +
-        "rename to load:/mask: (see test/data/scip_zarr.yml for the " +
-        "current shape)")
     // CLI-positional PATHS (the reference's shape — its configs carry
     // no paths key) override/supply load.paths
     if (cliPaths.nonEmpty) {
-      val load = root.get("load")
-      require(load != null && load.isObject, "config needs a load stage")
-      val arr = com.fasterxml.jackson.databind.node
-        .JsonNodeFactory.instance.arrayNode()
+      val arr = JsonNodeFactory.instance.arrayNode()
       cliPaths.foreach(arr.add)
-      load.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-        .set[JsonNode]("paths", arr)
+      loadStage(root).set[JsonNode]("paths", arr)
       ()
     }
     val cfg = parseConfig(root)
@@ -232,17 +220,25 @@ object Cli {
     }
   }
 
-  def parseConfig(root: JsonNode): PipelineConfig = {
-    // the reference tree also carries PRE-RELEASE configs keyed
-    // loading:/masking: (repo-root scip_czi.yml etc.) that current
-    // scip itself rejects ("Config is incomplete", main.py:120-132)
-    // — name the problem instead of tripping over the missing keys
+  /** The config's load stage. The reference tree also carries
+    * PRE-RELEASE configs keyed loading:/masking: (repo-root
+    * scip_czi.yml etc.) that current scip itself rejects ("Config is
+    * incomplete", main.py:120-132): they are refused by name, before
+    * the missing `load` node would bury the actual problem. */
+  private def loadStage(root: JsonNode): ObjectNode = {
     require(!(root.has("loading") || root.has("masking")),
       "config uses the reference's pre-release key shape " +
         "(loading:/masking:) which current scip also rejects — " +
         "rename to load:/mask: (see test/data/scip_zarr.yml for the " +
         "current shape)")
-    val load = root.get("load")
+    root.get("load") match {
+      case load: ObjectNode => load
+      case _ => throw new IllegalArgumentException("config needs a load stage")
+    }
+  }
+
+  def parseConfig(root: JsonNode): PipelineConfig = {
+    val load = loadStage(root)
     val channelNames = Option(load.get("channel_names")).map(strings)
       .getOrElse(Option(load.get("channels")).map(strings).getOrElse(Seq("ch0", "ch1", "ch2")))
 

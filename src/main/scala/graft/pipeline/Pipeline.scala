@@ -4,8 +4,7 @@ import graft.core.{ImageEvent, RunCaches, Synthetic}
 import graft.ops._
 import graft.ops.Normalization.Extents
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 /** The pipeline driver — the Spark re-expression of the reference's
   * `main()` fold (main.py:143-275):
@@ -27,6 +26,11 @@ import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructTy
   * each is taken for every chain in one job over the cached prepared
   * stream, keyed by chain, and its small result rides in that pass's
   * closure.
+  *
+  * The wide table is one [[graft.plans.WideRowsPlan]] node, whatever
+  * the caller does with it next: the CLI exports it, and the registry
+  * reduces it with [[graft.rel.Digest.rows]], which digests inside
+  * that node. The pipeline itself has no digest mode.
   */
 final case class MaskBranchConfig(
     name: String,
@@ -79,17 +83,6 @@ object Pipeline {
       cfg: PipelineConfig): DataFrame =
     runPrepared(spark, prepare(spark, source, cfg), cfg)._1
 
-  /** [[run]] reduced to the registry's digest table `(keys...,
-    * row_digest, schema_digest)`: the fused pass digests each wide row
-    * where it is computed ([[graft.rel.Digest.fusedDigester]]), so the
-    * planned schema is keys + 2 strings and Catalyst never sees the
-    * several-hundred-column digest projection [[graft.rel.Digest.rows]]
-    * would plan (measured at ~2.3 s/cell on p01 in r16). DigestSpec
-    * pins the two digests equal. */
-  def runDigested(spark: SparkSession, source: Dataset[ImageEvent],
-      cfg: PipelineConfig, keyCols: Seq[String]): DataFrame =
-    runPrepared(spark, prepare(spark, source, cfg), cfg, digestKeys = Some(keyCols))._1
-
   /** every pre-branch stage (repartition → project → illumination →
     * segment → sample → mask filters): the stream [[runPrepared]] reads.
     * The caches a stage creates (illumination, sampling with
@@ -135,19 +128,20 @@ object Pipeline {
 
   /** Every branch chain and its features over an already-prepared
     * stream (see [[prepare]]), in one per-record pass → the wide
-    * feature table, or with `digestKeys` its digest table. Also returns
+    * feature table, one [[graft.plans.WideRowsPlan]] node (so
+    * [[graft.rel.Digest.rows]] digests it inside that node). Also returns
     * chain 0's extents (the first mask branch's) when normalization or
     * `withExtents` took them; Cli writes channel_boundaries.csv and
     * quantiles.csv from these. A config with an aggregate caches `ds`
     * through `caches`. */
   def runPrepared(spark: SparkSession, ds: Dataset[ImageEvent],
       cfg: PipelineConfig, caches: RunCaches = new RunCaches,
-      withExtents: Boolean = false, digestKeys: Option[Seq[String]] = None)
-      : (DataFrame, Option[Extents]) = {
+      withExtents: Boolean = false): (DataFrame, Option[Extents]) = {
     val src =
       if (cfg.populationFilter || cfg.normalize || withExtents) caches.cache(ds) else ds
     val (steps, extents) = chains(src, cfg, withExtents)
-    (fusedBranches(src, cfg, steps, digestKeys), extents)
+    val (sch, cells) = fusedRow(cfg, steps)
+    (Features.wideFrame(src, sch)(cells), extents)
   }
 
   /** every chain's masking step: the mask branches in config order,
@@ -211,34 +205,10 @@ object Pipeline {
     (sch, cells)
   }
 
-  /** all chains in one per-record pass → one wide row, or with
-    * `digestKeys` straight to the digest table: the same cells, reduced
-    * inside the pass by [[graft.rel.Digest.fusedDigester]] */
-  private def fusedBranches(ds: Dataset[ImageEvent], cfg: PipelineConfig,
-      chains: Seq[ImageEvent => ImageEvent], digestKeys: Option[Seq[String]]): DataFrame = {
-    val (sch, rowCells) = fusedRow(cfg, chains)
-    digestKeys match {
-      case None => Features.wideFrame(ds, sch)(rowCells)
-      case Some(keys) =>
-        val (schemaDigest, digestFn) = graft.rel.Digest.fusedDigester(sch)
-        val keyIdx = keys.map(sch.fieldIndex).toArray
-        val outSch = StructType(
-          (keys ++ Seq("row_digest", "schema_digest")).map(StructField(_, StringType)))
-        Features.wideFrame(ds, outSch) { e =>
-          val all = rowCells(e)
-          // cast-to-string key semantics of Digest.rows (null stays
-          // null; int/long/string render identically to Spark's cast)
-          keyIdx.map[Any] { i => val v = all(i); if (v == null) null else v.toString } ++
-            Array[Any](digestFn(all), schemaDigest)
-        }.orderBy(keys.map(col): _*)
-    }
-  }
-
   /** the reference's own e2e shape (test/data/scip_zarr.yml): synthetic
     * events through two identical circle branches + li + spot, full
     * feature set — used by the e2e spec and the flagship entry. */
-  def referenceShape(spark: SparkSession, nEvents: Int = 10,
-      digestKeys: Option[Seq[String]] = None): DataFrame = {
+  def referenceShape(spark: SparkSession, nEvents: Int = 10): DataFrame = {
     val cfg = PipelineConfig(
       channelNames = Seq("ch0", "ch1", "ch2"),
       mainChannelIndex = 0,
@@ -249,10 +219,6 @@ object Pipeline {
         MaskBranchConfig("spot", Masking.Spot(5))),
       normalize = false,
       featureTypes = Seq("regions", "bbox", "shape", "intensity", "texture"))
-    digestKeys match {
-      case Some(k) => runDigested(spark, Synthetic.conftest(spark, nEvents),
-        cfg, k)
-      case None => run(spark, Synthetic.conftest(spark, nEvents), cfg)
-    }
+    run(spark, Synthetic.conftest(spark, nEvents), cfg)
   }
 }

@@ -1,6 +1,8 @@
 package graft.rel
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.plans.WideRowsPlan
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -15,6 +17,11 @@ import org.apache.spark.sql.types._
   * assertions (/root/reference/test/test_main.py:42-52): any change to
   * a feature value, column set, or row set flips the hash the driver
   * compares.
+  *
+  * There is one entry, [[rows]], and the frame's plan picks how it
+  * digests: a [[graft.plans.WideRowsPlan]] frame (every imaging
+  * pipeline's wide table) is digested inside that node, anything else
+  * by a Catalyst projection. DigestSpec pins the two equal.
   */
 object Digest {
 
@@ -29,7 +36,14 @@ object Digest {
     * every value (column names included, so a silently-reordered or
     * renamed column cannot alias another).
     */
-  def rows(df: DataFrame, keyCols: Seq[String]): DataFrame = {
+  def rows(df: DataFrame, keyCols: Seq[String]): DataFrame =
+    (df.queryExecution.analyzed match {
+      case w: WideRowsPlan => GraftBridge.ofRows(df.sparkSession, wideDigest(w, keyCols))
+      case _ => projected(df, keyCols)
+    }).orderBy(keyCols.map(col): _*)
+
+  /** [[rows]] for any frame: one planned expression chain per column */
+  private def projected(df: DataFrame, keyCols: Seq[String]): DataFrame = {
     val fields = df.schema.fields.sortBy(_.name)
     val schemaDigest = md5hex(
       fields.map(f => s"${f.name}:${f.dataType.simpleString}").mkString(","))
@@ -49,33 +63,39 @@ object Digest {
       keyCols.map(k => col(k).cast("string").as(k)) ++ Seq(
         md5(concat_ws("|", cells: _*)).as("row_digest"),
         lit(schemaDigest).as("schema_digest")): _*)
-      .orderBy(keyCols.map(col): _*)
   }
 
-  /** Marker for a digestables fn that folded the digest into its own
-    * object map (the fused imaging path, [[graft.pipeline.Pipeline
-    * .runDigested]]) and already returns the final digest table —
-    * identified by the exact output column set the registry wrapper
-    * would otherwise produce. */
-  private[graft] def isDigested(df: DataFrame, keyCols: Seq[String]): Boolean =
-    df.columns.toSeq == keyCols ++ Seq("row_digest", "schema_digest")
+  /** [[rows]] for a wide-row frame: the same node over the same child,
+    * whose cells reduce the original row to its keys and digests. The
+    * planned schema is keys + 2 strings instead of the wide row plus
+    * ~5 expression nodes per column that [[projected]] plans (Catalyst
+    * spent 2.3 s of a 2.9 s p01 cell there; RuleExecutor dump in
+    * OPTIMIZATION_r16.md). */
+  private def wideDigest(w: WideRowsPlan, keyCols: Seq[String]): WideRowsPlan = {
+    val sch = DataTypeUtils.fromAttributes(w.output)
+    val (schemaDigest, digestFn) = fusedDigester(sch)
+    val keyIdx = keyCols.map(sch.fieldIndex).toArray
+    val outSch = StructType(
+      (keyCols ++ Seq("row_digest", "schema_digest")).map(StructField(_, StringType)))
+    val cells = w.cells
+    WideRowsPlan(DataTypeUtils.toAttributes(outSch), { e =>
+      val all = cells(e)
+      // cast-to-string key semantics of [[projected]] (null stays
+      // null; int/long/string render identically to Spark's cast)
+      keyIdx.map[Any] { i => val v = all(i); if (v == null) null else v.toString } ++
+        Array[Any](digestFn(all), schemaDigest)
+    }, w.child)
+  }
 
-  /** [[rows]] as one closure built per wide schema, for a
-    * pass that already holds each row's cells: the fused imaging path
-    * ([[graft.pipeline.Pipeline.runDigested]]) emits the digest string
-    * from its wide-row plan node, so the planned schema is keys + 2
-    * strings instead of the wide row plus ~5 expression nodes per
-    * column that [[rows]] plans (r16: Catalyst spent 2.3 s of a 2.9 s
-    * p01 cell there; RuleExecutor dump in OPTIMIZATION_r16.md).
-    * Semantics replicate [[rows]] bit for bit: fields sorted by name,
+  /** [[projected]]'s row digest as one closure built per wide schema,
+    * for a pass that already holds each row's cells. Semantics
+    * replicate [[projected]] bit for bit: fields sorted by name,
     * `name=value` joined with "|", doubles as %.6g via a Locale.US
     * Formatter (what Spark's format_string uses) after +0.0
     * canonicalization and null/NaN literals, non-doubles via
     * cast-to-string, md5 lowercase hex over UTF-8. Returns
-    * (schema_digest, row-in-SCHEMA-FIELD-ORDER => row_digest).
-    * DigestSpec feeds one frame through both; the committed goldens
-    * compare these digests value for value. */
-  private[graft] def fusedDigester(schema: StructType)
+    * (schema_digest, row-in-SCHEMA-FIELD-ORDER => row_digest). */
+  private def fusedDigester(schema: StructType)
       : (String, Array[Any] => String) = {
     val fields = schema.fields.sortBy(_.name)
     val schemaDigest = md5hex(

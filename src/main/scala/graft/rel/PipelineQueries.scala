@@ -339,21 +339,20 @@ object PipelineQueries {
     }.toString
   }
 
-  /** every digest-checked pipeline query: (name, raw wide-table fn).
-    * The registry wraps each in [[Digest.rows]] keyed on the loader
-    * meta triple; [[graft.tools.GenGoldens]] regenerates the committed
-    * oracle literals from this same list. */
+  /** the loader meta triple every digest-checked pipeline query is
+    * keyed and ordered on by [[Digest.rows]] */
   private[graft] val DigestKeys = Seq("meta_path", "meta_idx", "meta_id")
 
-  /** p07's loaded events + config from the reference's bundled zarr
-    * fixture (None when absent): shared by the registry entry (fused
-    * digest) and ReferenceE2eSpec (which asserts on the WIDE table via
-    * [[p07Wide]]) so the two cannot drift. */
-  private[graft] def p07Fixture(s: org.apache.spark.sql.SparkSession)
-      : Option[(org.apache.spark.sql.Dataset[graft.core.ImageEvent],
-        PipelineConfig)] = {
+  /** The p07 wide feature table: the reference's bundled zarr fixture
+    * through its scip_zarr.yml pipeline, or p01's synthetic reference
+    * shape when the fixture is absent. The registry entry digests it,
+    * and ReferenceE2eSpec asserts on it directly, so the two cannot
+    * drift. */
+  private[graft] def p07Wide(s: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.DataFrame = {
     val fixture = "/root/reference/test/data/test.zarr"
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(fixture))) None
+    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(fixture)))
+      Pipeline.referenceShape(s, nEvents = 10)
     else {
       val meta = graft.sources.Zarr.metaFromDirectory(s, fixture,
         "^.+/(?<group>.+)\\.zarr$")
@@ -372,16 +371,15 @@ object PipelineQueries {
           MaskBranchConfig("li", Masking.Li(Seq(1, 1)),
             featureTypes = Some(Seq("regions", "shape", "intensity")))),
         featureTypes = full)
-      Some((events, cfg))
+      Pipeline.run(s, events, cfg)
     }
   }
 
-  /** The p07 WIDE feature table (pre-digest) — the e2e spec's view. */
-  private[graft] def p07Wide(s: org.apache.spark.sql.SparkSession)
-      : org.apache.spark.sql.DataFrame = p07Fixture(s) match {
-    case None => Pipeline.referenceShape(s, nEvents = 10)
-    case Some((events, cfg)) => Pipeline.run(s, events, cfg)
-  }
+  /** every digest-checked pipeline query: (name, wide-table fn). The
+    * registry reduces each with [[Digest.rows]], which digests a
+    * wide-row frame inside its plan node and any other frame (p15's
+    * parquet read-back) by projection; [[graft.tools.GenGoldens]]
+    * regenerates the committed oracle literals from this same list. */
   private[graft] val digestables: Seq[(String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)] = Seq(
     // Source readers end-to-end: TIFF scan+decode and zarr scan+load
     // through the masking pipeline (deterministic on-disk fixtures).
@@ -406,12 +404,7 @@ object PipelineQueries {
     // events -> wide feature table (one row per input event). The
     // circle-1 ≡ circle-2 determinism check rides in the golden: both
     // branches' columns feed the same row digest.
-    "p01_pipeline_e2e" -> { (s, _) =>
-      // r16: digest fused into the single map pass — the registry
-      // wrapper passes pre-digested frames through (Digest.isDigested);
-      // same committed golden gates the result
-      Pipeline.referenceShape(s, nEvents = 10, digestKeys = Some(DigestKeys))
-    },
+    "p01_pipeline_e2e" -> { (s, _) => Pipeline.referenceShape(s, nEvents = 10) },
 
     // Segmentation: FOVs -> per-cell events -> per-cell feature rows.
     "p02_segment_cells" -> { (s, _) =>
@@ -440,14 +433,7 @@ object PipelineQueries {
     // (circle-1, circle-2, spot, li) with per-branch feature selection.
     // Falls back to the synthetic reference shape if the fixture is
     // absent in the runtime environment.
-    "p07_reference_e2e" -> { (s, _) =>
-      p07Fixture(s) match {
-        case None => Pipeline.referenceShape(s, nEvents = 10,
-          digestKeys = Some(DigestKeys))
-        case Some((events, cfg)) => Pipeline.runDigested(s, events, cfg,
-          DigestKeys)
-      }
-    },
+    "p07_reference_e2e" -> { (s, _) => p07Wide(s) },
 
     // The reference's multiframe-TIFF corpus (11 files × 8 pages,
     // test/loading/test_multiframe_tiff.py:33-37 — S4's loader)
@@ -493,13 +479,8 @@ object PipelineQueries {
   )
 
   val all: Seq[Q] = digestables.map { case (name, fn) =>
-    val wrapped = (s: org.apache.spark.sql.SparkSession, d: String) => {
-      val out = fn(s, d)
-      // a fn may fold the digest into its own fused map (p01/p07 —
-      // Pipeline.runDigested); everything else digests here as before
-      if (Digest.isDigested(out, DigestKeys)) out
-      else Digest.rows(out, DigestKeys)
-    }
+    val wrapped = (s: org.apache.spark.sql.SparkSession, d: String) =>
+      Digest.rows(fn(s, d), DigestKeys)
     Digest.golden(name) match {
       case Some(sql) => Q(name, sql)(wrapped)
       case None      => Q.noOracle(name)(wrapped) // bootstrap: golden not yet generated

@@ -5,8 +5,9 @@ import java.nio.file.{Files, Paths}
 
 /** Regenerates the committed p-query goldens
   * (src/main/resources/graft/goldens/<name>.sql): runs each digest
-  * query's raw plan, folds it through [[graft.rel.Digest.rows]], and
-  * renders the DuckDB `VALUES` oracle. Run after any intentional
+  * query's wide table, reduces it with [[graft.rel.Digest.rows]] (the
+  * same call the registry makes), and renders the DuckDB `VALUES`
+  * oracle. Run after any intentional
   * change to pipeline/kernel semantics, then re-run the suite —
   * PipelineGoldenSpec asserts the committed goldens still match live
   * output under a different parallelism (catching any nondeterminism
@@ -26,15 +27,11 @@ object GenGoldens {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(outDir))
+    val keys = graft.rel.PipelineQueries.DigestKeys
     graft.rel.PipelineQueries.digestables.foreach { case (name, fn) =>
-      val keys = graft.rel.PipelineQueries.DigestKeys
       val out = fn(spark, "/root/testdata/sf0.01")
-      // p01/p07 fold the digest into their fused map (r16) — the same
-      // pass-through rule the registry wrapper applies
-      val digested =
-        if (graft.rel.Digest.isDigested(out, keys)) out
-        else graft.rel.Digest.rows(out, keys)
-      val sql = graft.rel.Digest.goldenSql(digested, graft.rel.PipelineQueries.DigestKeys)
+      val digested = graft.rel.Digest.rows(out, keys)
+      val sql = graft.rel.Digest.goldenSql(digested, keys)
       Files.writeString(Paths.get(s"$outDir/$name.sql"), sql)
       println(s"[gen-goldens] $name: ${sql.linesIterator.size - 3} rows")
     }

@@ -136,7 +136,7 @@ class OpsSpec extends SparkSpec {
         m(c * ps + col) = 1 // row 0 strip: full border presence
       e.copy(mask = m)
     }
-    val out = Masking.removeBorderRegions(ds, 0).collect()
+    val out = ds.map(ImageEvent.whenPixels(Masking.scrubRecord(0))).collect()
     assert(out.forall(e => !e.hasPixels && !e.hasMask))
     assert(out.forall(_.regions.forall(_ == 0)))
   }

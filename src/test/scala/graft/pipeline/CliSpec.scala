@@ -22,6 +22,26 @@ class CliSpec extends SparkSpec {
     assert(q.linesIterator.size > 1, q)
   }
 
+  test("a pre-release config and a config without load are refused by name") {
+    def config(json: String) = {
+      val f = Files.createTempFile("cli-refused", ".json")
+      Files.writeString(f, json)
+      f.toString
+    }
+    def refusal(json: String, paths: Seq[String]) = intercept[IllegalArgumentException] {
+      Cli.run(spark, Files.createTempDirectory("cli-refused").toString, config(json), paths)
+    }.getMessage
+    val preRelease =
+      """{ "loading": {"format": "synthetic", "n": 2},
+        |  "masking": [{"name": "circle", "method": "circle"}] }""".stripMargin
+    for (paths <- Seq(Nil, Seq("/data/a.zarr"))) {
+      val e = refusal(preRelease, paths)
+      assert(e.contains("loading:/masking:") && e.contains("pre-release"), e)
+      val noLoad = refusal("""{ "mask": [{"name": "circle", "method": "circle"}] }""", paths)
+      assert(noLoad.contains("config needs a load stage"), noLoad)
+    }
+  }
+
   test("yaml config in graft key shape runs the same pipeline as json") {
     val out = Files.createTempDirectory("cli-yaml").toString
     val config = Files.createTempFile("cli", ".yml")

@@ -4,8 +4,10 @@ import graft.SparkSpec
 import graft.core.{ImageEvent, Synthetic}
 import graft.ops.{Features, Masking}
 import graft.pipeline.{MaskBranchConfig, Pipeline, PipelineConfig}
+import graft.rel.{Digest, PipelineQueries}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
-import org.apache.spark.sql.execution.SerializeFromObjectExec
+import org.apache.spark.sql.catalyst.expressions.Md5
+import org.apache.spark.sql.execution.{ProjectExec, SerializeFromObjectExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.types._
@@ -13,7 +15,8 @@ import org.apache.spark.sql.types._
 /** The wide-row plan node against the `Encoders.row` frame it replaced:
   * same schema (nullability included), same rows value for value, no
   * object serializer in the executed plan, and one wide-row pass for
-  * every config, aggregate-bearing ones included. */
+  * every config, aggregate-bearing ones included. Digesting a wide-row
+  * frame keeps that one pass and plans no per-column projection. */
 class WideRowsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val channels = Seq("ch0", "ch1", "ch2")
@@ -130,6 +133,31 @@ class WideRowsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         .collect()
     }
     assert(bad.getMessage.contains("wide row field f has type float"))
+  }
+
+  /** the executed plan's wide-row nodes and md5-computing projections */
+  private def digestPlan(df: DataFrame): (Int, Int) = {
+    val plan = df.queryExecution.executedPlan
+    (collect(plan) { case w: WideRowsExec => w }.length,
+      collect(plan) {
+        case p: ProjectExec if p.projectList.exists(_.exists(_.isInstanceOf[Md5])) => p
+      }.length)
+  }
+
+  test("a wide-row frame is digested inside its one node; a parquet frame by projection") {
+    val fns = PipelineQueries.digestables.toMap
+    for (name <- Seq("p01_pipeline_e2e", "p02_segment_cells")) {
+      val digested = Digest.rows(fns(name)(spark, sfDir), PipelineQueries.DigestKeys)
+      assert(digestPlan(digested) == ((1, 0)), s"$name: ${digested.queryExecution.executedPlan}")
+      assert(digested.columns.toSeq ==
+        PipelineQueries.DigestKeys ++ Seq("row_digest", "schema_digest"))
+    }
+    val dir = java.nio.file.Files.createTempDirectory("wide-digest").resolve("t").toString
+    Features.extract(Synthetic.conftest(spark, 4), channels, Seq("regions", "bbox"))
+      .write.parquet(dir)
+    val fromParquet = Digest.rows(spark.read.parquet(dir), PipelineQueries.DigestKeys)
+    assert(digestPlan(fromParquet) == ((0, 1)), fromParquet.queryExecution.executedPlan)
+    assert(fromParquet.collect().length == 4)
   }
 
   test("setup installs the strategy once") {

@@ -1,14 +1,20 @@
 package graft.rel
 
 import graft.SparkSpec
-import org.apache.spark.sql.Row
+import graft.core.Synthetic
+import graft.ops.Features
+import graft.plans.{WideRowsExec, WideRowsPlan}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 /** Edge cases of the p-query digest fold: null vs NaN vs -0.0, column
   * renames, and value drift must all flip (or preserve) the row digest
   * exactly as intended — this is what makes the committed goldens a
-  * real value gate. */
-class DigestSpec extends SparkSpec {
+  * real value gate. A wide-row frame is digested inside its plan node,
+  * any other by projection; the two must give the same table. */
+class DigestSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val schema = StructType(Seq(
     StructField("k", StringType), StructField("a", DoubleType),
@@ -59,6 +65,8 @@ class DigestSpec extends SparkSpec {
   }
 
   test("fusedDigester equals Digest.rows on one wide frame") {
+    // the same cells as a wide-row frame (digested inside its plan
+    // node) and as a plain frame (digested by the projection)
     val wide = StructType(Seq(
       StructField("meta_path", StringType), StructField("meta_idx", LongType),
       StructField("meta_group", StringType), StructField("meta_id", IntegerType),
@@ -70,17 +78,40 @@ class DigestSpec extends SparkSpec {
       Row("p/ü|y=z", Long.MaxValue, "g|2", -3, 0.0, 1.0 / 3, null),
       Row(null, -7L, "", Int.MinValue, Double.NaN, null, -0.0))
     val keys = Seq("meta_path", "meta_idx", "meta_id")
-    val frame = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), wide)
-    val viaRows = Digest.rows(frame, keys).collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2)) ->
-        (r.getString(3), r.getString(4))).toMap
-    val (schemaDigest, digestFn) = Digest.fusedDigester(wide)
-    val fused = frame.collect().map { r =>
-      val cells = r.toSeq.toArray[Any]
-      def key(i: Int) = Option(cells(i)).map(_.toString).orNull
-      (key(0), key(1), key(3)) -> (digestFn(cells), schemaDigest)
-    }.toMap
-    assert(viaRows.size == rows.length)
-    assert(fused == viaRows)
+    val plain = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), wide)
+    val wideRows = Features.wideFrame(Synthetic.conftest(spark, rows.length), wide)(
+      e => rows(e.idx.toInt).toSeq.toArray)
+    val fused = Digest.rows(wideRows, keys)
+    val projected = Digest.rows(plain, keys)
+    assert(wideExecs(fused) == 1 && wideExecs(projected) == 0)
+    assert(fused.columns.toSeq == projected.columns.toSeq)
+    val got = fused.collect().toSeq
+    assert(got.length == rows.length)
+    assert(got == projected.collect().toSeq)
+  }
+
+  private def wideExecs(df: DataFrame): Int =
+    collect(df.queryExecution.executedPlan) { case w: WideRowsExec => w }.length
+
+  // every digestable whose frame is one wide-row plan node (p07 is
+  // p01's shape or the reference fixture's, p15 a parquet read-back)
+  for (name <- Seq("p01_pipeline_e2e", "p02_segment_cells", "p03_full_stack",
+      "p05_sources_roundtrip", "p06_segment_cellpose")) {
+    test(s"$name: the wide-row digest equals the projection's") {
+      val fn = PipelineQueries.digestables.toMap.apply(name)
+      val frame = fn(spark, sfDir)
+      assert(frame.queryExecution.analyzed.isInstanceOf[WideRowsPlan])
+      val keys = PipelineQueries.DigestKeys
+      val fused = Digest.rows(frame, keys)
+      // a projection over the node: Digest.rows takes the Catalyst path
+      val projected = Digest.rows(frame.select(frame.columns.map(c => col(s"`$c`")): _*), keys)
+      assert(wideExecs(fused) == 1 && wideExecs(projected) == 1)
+      val (a, b) = (fused.collect().toSeq, projected.collect().toSeq)
+      assert(a.nonEmpty && a == b)
+      val schemaDigests = a.map(_.getString(keys.length + 1)).distinct
+      assert(schemaDigests.length == 1 &&
+        schemaDigests == b.map(_.getString(keys.length + 1)).distinct)
+      spark.catalog.clearCache()
+    }
   }
 }

@@ -16,12 +16,7 @@ class PipelineGoldenSpec extends SparkSpec {
     test(s"$name digest matches committed golden at shuffle.partitions=17") {
       val s2 = spark.newSession()
       s2.conf.set("spark.sql.shuffle.partitions", "17")
-      val out = fn(s2, sfDir)
-      // p01/p07 fold the digest into their fused map (r16) — the same
-      // pass-through rule the registry wrapper and GenGoldens apply
-      val digested =
-        if (Digest.isDigested(out, PipelineQueries.DigestKeys)) out
-        else Digest.rows(out, PipelineQueries.DigestKeys)
+      val digested = Digest.rows(fn(s2, sfDir), PipelineQueries.DigestKeys)
       val live = Digest.goldenSql(digested, PipelineQueries.DigestKeys)
       val committed = Digest.golden(name)
         .getOrElse(fail(s"no committed golden for $name — run graft.tools.GenGoldens"))
