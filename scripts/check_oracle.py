@@ -7,13 +7,17 @@ sorted, values hashed). Usage: check_oracle.py [sfdir] [outdir] [--skip-verify]
 import json, sys, subprocess, glob, os
 import duckdb
 
+# the checkout this script sits in: sbt compiles and runs that tree, so
+# two checkouts give two independent gates
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 sfdir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 outdir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
 
 if "--skip-verify" not in sys.argv:
     r = subprocess.run(
         ["sbt", "-batch", f'runMain graft.Verify {sfdir} {outdir}'],
-        cwd="/root/repo", capture_output=True, text=True, timeout=1800)
+        cwd=ROOT, capture_output=True, text=True, timeout=1800)
     tail = "\n".join((r.stdout + r.stderr).splitlines()[-30:])
     if r.returncode != 0:
         print(tail); sys.exit(1)

@@ -1,6 +1,8 @@
 package graft.export
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.types._
 
 /** AnnData sink — reference K2 (export/anndata.py:12-60): one `.h5ad`
@@ -8,8 +10,11 @@ import org.apache.spark.sql.types._
   * `obs` = the columns matching "meta" (pandas `filter(regex=...)` is a
   * substring match), row index = the partition-local row number as a
   * string, `var` index = the X column names. Files are written by the
-  * executors through [[Hdf5]] (no driver collect); each partition's
-  * write is one sequential buffer flush.
+  * executors through [[Export.partFiles]] (no driver collect), from the
+  * plan's `InternalRow`s; each partition's write is one sequential
+  * buffer flush. The bytes are the ones the earlier `Row`-based writer
+  * produced for every column type (its code is kept as the spec's
+  * reference), e.g. the 32 parts of the tiff segmentation benchmark.
   */
 object AnnData {
 
@@ -17,65 +22,48 @@ object AnnData {
   private val EncV = "encoding-version"
   import Hdf5.{Attr, StrV, StrArrV}
 
-  /** write `<dir>/<filename>.<partition>.h5ad` per partition. Output
-    * goes through the Hadoop FS layer (like the parquet sink), so the
-    * destination may be any filesystem the executors can resolve —
-    * directory creation happens on the executors, not the driver. */
+  /** write `<dir>/<filename>.<partition>.h5ad` per partition, through
+    * the Hadoop FS layer (like the parquet sink), so the destination
+    * may be any filesystem the executors can resolve */
   def export(df: DataFrame, dir: String, filename: String = "features"): Unit = {
     val schema = df.schema
-    val featCols = schema.fields.filter(_.name.contains("feat")).map(_.name)
-    val metaCols = schema.fields.filter(_.name.contains("meta")).map(_.name)
-    val fieldType = schema.fields.map(f => f.name -> f.dataType).toMap
-    val dirB = dir; val nameB = filename
-    val hadoopEntries = Export.hadoopConfEntries(df.sparkSession)
-    // scrub stale {filename}.{pid}.h5ad from a previous (possibly
-    // larger) run BEFORE writing: a re-run with fewer partitions
-    // overwrites only the low indices and a consumer globbing *.h5ad
-    // would read surviving old partitions alongside the new ones
-    locally {
-      val dirPath = new org.apache.hadoop.fs.Path(dirB)
-      val fs = Export.sinkFs(dirPath, df.sparkSession.sparkContext.hadoopConfiguration)
-      Export.scrubStale(fs, dirPath, filename, "h5ad")
+    Export.partFiles(df, dir, filename, "h5ad", df.sparkSession.sparkContext.hadoopConfiguration) {
+      (rows, _, fs, path) =>
+        // the plan reuses one row object per partition
+        val bytes = partitionBytes(rows.map(_.copy()).toArray, schema)
+        val out = fs.create(path, true)
+        try out.write(bytes) finally out.close()
     }
-    df.rdd.mapPartitionsWithIndex { (pid, rows) =>
-      val mat = rows.toArray
-      val bytes = partitionBytes(mat, schema, featCols, metaCols, fieldType)
-      val dirPath = new org.apache.hadoop.fs.Path(dirB)
-      val conf = new org.apache.hadoop.conf.Configuration()
-      hadoopEntries.foreach { case (k, v) => conf.set(k, v) }
-      val fs = Export.sinkFs(dirPath, conf)
-      fs.mkdirs(dirPath)
-      val out = fs.create(new org.apache.hadoop.fs.Path(dirPath, s"$nameB.$pid.h5ad"), true)
-      try out.write(bytes) finally out.close()
-      Iterator.single(pid)
-    }.count()
-    ()
   }
 
-  private def partitionBytes(
-      rows: Array[org.apache.spark.sql.Row], schema: StructType,
-      featCols: Array[String], metaCols: Array[String],
-      fieldType: Map[String, DataType]): Array[Byte] = {
+  /** One cell of a numeric column as the double pandas would hold:
+    * null → NaN, booleans 0/1, timestamps epoch millis, dates epoch
+    * days. Timestamps and dates go through the same conversions as a
+    * `Row` would (`java.sql.Timestamp.getTime`, `java.sql.Date`), so
+    * the values do not depend on the row representation. */
+  private def numeric(row: InternalRow, i: Int, t: DataType): Double =
+    if (row.isNullAt(i)) Double.NaN
+    else t match {
+      case DoubleType => row.getDouble(i)
+      case FloatType => row.getFloat(i).toDouble
+      case LongType => row.getLong(i).toDouble
+      case IntegerType => row.getInt(i).toDouble
+      case ShortType => row.getShort(i).toDouble
+      case ByteType => row.getByte(i).toDouble
+      case BooleanType => if (row.getBoolean(i)) 1.0 else 0.0
+      case TimestampType => DateTimeUtils.toJavaTimestamp(row.getLong(i)).getTime.toDouble
+      case DateType => DateTimeUtils.toJavaDate(row.getInt(i)).toLocalDate.toEpochDay.toDouble
+      case d: DecimalType => row.getDecimal(i, d.precision, d.scale).toJavaBigDecimal.doubleValue
+      case other => throw new IllegalArgumentException(
+        s"unsupported type for anndata numeric column: $other")
+    }
+
+  private def partitionBytes(rows: Array[InternalRow], schema: StructType): Array[Byte] = {
     val n = rows.length
     val f = new Hdf5.File
-    val colIdx = schema.fieldNames.zipWithIndex.toMap
-
-    def numeric(row: org.apache.spark.sql.Row, i: Int): Double =
-      row.get(i) match {
-        case null => Double.NaN
-        case d: Double => d
-        case fl: Float => fl.toDouble
-        case l: Long => l.toDouble
-        case x: Int => x.toDouble
-        case s: Short => s.toDouble
-        case b: java.lang.Byte => b.toDouble
-        case b: Boolean => if (b) 1.0 else 0.0
-        case t: java.sql.Timestamp => t.getTime.toDouble // epoch millis
-        case dt: java.sql.Date => dt.toLocalDate.toEpochDay.toDouble
-        case dec: java.math.BigDecimal => dec.doubleValue
-        case other => throw new IllegalArgumentException(
-          s"unsupported value type for anndata numeric column: ${other.getClass}")
-      }
+    val fields = schema.fields
+    val featCols = fields.indices.filter(fields(_).name.contains("feat")).toArray
+    val metaCols = fields.indices.filter(fields(_).name.contains("meta"))
 
     // X: n × d float32, row-major (C order, like the reference's numpy)
     val d = featCols.length
@@ -86,7 +74,7 @@ object AnnData {
     while (r < n) {
       var c = 0
       while (c < d) {
-        x(r * d + c) = numeric(rows(r), colIdx(featCols(c))).toFloat
+        x(r * d + c) = numeric(rows(r), featCols(c), fields(featCols(c)).dataType).toFloat
         c += 1
       }
       r += 1
@@ -109,28 +97,26 @@ object AnnData {
     }
 
     // obs: the partition-local row number as the index (reset_index)
-    val obsCols = metaCols.toSeq
-    val obsAddrs = obsCols.map { name =>
-      fieldType(name) match {
+    val obsAddrs = metaCols.map { i =>
+      fields(i).dataType match {
         case StringType =>
-          strArray(rows.map(r => Option(r.getAs[String](colIdx(name))).getOrElse("")).toSeq)
-        case LongType | IntegerType | ShortType | ByteType | BooleanType |
-            TimestampType | DateType
-            if !rows.exists(_.isNullAt(colIdx(name))) =>
+          strArray(rows.map(r => if (r.isNullAt(i)) "" else r.getUTF8String(i).toString).toSeq)
+        case t @ (LongType | IntegerType | ShortType | ByteType | BooleanType |
+            TimestampType | DateType) if !rows.exists(_.isNullAt(i)) =>
           // pandas float-promotes an int column holding any NaN; the
           // I64 path is only faithful when the column has no nulls
-          val vals = rows.map(r => numeric(r, colIdx(name)).toLong)
+          val vals = rows.map(r => numeric(r, i, t).toLong)
           f.dataset(Seq(n.toLong), Hdf5.I64, Hdf5.i64Raw(vals),
             Seq(Attr(Enc, StrV("array")), Attr(EncV, StrV("0.2.0"))))
-        case _ =>
-          val vals = rows.map(numeric(_, colIdx(name)))
+        case t =>
+          val vals = rows.map(numeric(_, i, t))
           f.dataset(Seq(n.toLong), Hdf5.F64, Hdf5.f64Raw(vals),
             Seq(Attr(Enc, StrV("array")), Attr(EncV, StrV("0.2.0"))))
       }
     }
-    val obsAddr = dataframeGroup((0 until n).map(_.toString), obsCols, obsAddrs)
+    val obsAddr = dataframeGroup((0 until n).map(_.toString), metaCols.map(fields(_).name), obsAddrs)
     // var: index = X's column names, no further columns
-    val varAddr = dataframeGroup(featCols.toSeq, Seq.empty, Seq.empty)
+    val varAddr = dataframeGroup(featCols.toSeq.map(fields(_).name), Seq.empty, Seq.empty)
     val root = f.group(
       Seq("X" -> xAddr, "obs" -> obsAddr, "var" -> varAddr),
       Seq(Attr(Enc, StrV("anndata")), Attr(EncV, StrV("0.1.0"))))

@@ -1,36 +1,46 @@
 package graft.export
 
 import graft.core.ImageEvent
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetOutputFormat, ParquetWriter}
+import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.hadoop.util.{HadoopOutputFile, HadoopStreams}
+import org.apache.parquet.io.{OutputFile, PositionOutputStream}
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetReadSupport, ParquetUtils, ParquetWriteSupport}
 import java.nio.charset.StandardCharsets
 
 /** Sinks — reference K1-K6 (SURVEY.md §2.1).
   *
-  * K1 (parquet) is the built-in writer; K2 (AnnData `.h5ad`, one per
-  * partition like the reference's side write, export/anndata.py:12-60)
-  * is [[AnnData.export]] over the HDF5 writer in [[Hdf5]]; K3-K6 (the
-  * extent CSVs, `.npy` masks, correction images and timing JSON) are
-  * below.
+  * K1 (parquet, [[parquetPartFiles]]) and K2 (AnnData `.h5ad`,
+  * [[AnnData.export]] over the HDF5 writer in [[Hdf5]]) are one
+  * `{filename}.{partition}.{ext}` file per partition, written by the
+  * executors through [[partFiles]], like the reference's per-partition
+  * writes (export/parquet.py:24-27, export/anndata.py:12-60); K3-K6
+  * (the extent CSVs, `.npy` masks, correction images and timing JSON)
+  * are below.
   */
 object Export {
 
-  /** The session's hadoop configuration entries as a serializable
-    * array, for executor-side FileSystem construction (credentials,
-    * defaultFS — Configuration itself is not serializable; a fresh one
-    * would silently drop s3a/hdfs settings). Shared by every sink that
-    * writes from executors. */
-  private[export] def hadoopConfEntries(
-      spark: SparkSession): Array[(String, String)] = {
-    val it = spark.sparkContext.hadoopConfiguration.iterator()
+  /** A configuration's entries as a serializable array, for
+    * executor-side FileSystem construction (credentials, defaultFS —
+    * Configuration itself is not serializable; a fresh one would
+    * silently drop s3a/hdfs settings). Shared by every sink that writes
+    * from executors. */
+  private[export] def confEntries(conf: Configuration): Array[(String, String)] = {
+    val it = conf.iterator()
     val buf = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     while (it.hasNext) { val e = it.next(); buf += ((e.getKey, e.getValue)) }
     buf.toArray
   }
 
   /** Delete stale `{name}.{i}.{ext}` part files from a previous
-    * (possibly larger) run: rename-onto-existing fails on HDFS, and
-    * survivors with higher indices would be read alongside new files.
-    * Shared by the parquet and h5ad part-file sinks. */
+    * (possibly larger) run: survivors with higher indices would be read
+    * alongside the new files. */
   private[export] def scrubStale(fs: org.apache.hadoop.fs.FileSystem,
       dir: org.apache.hadoop.fs.Path, name: String, ext: String): Unit =
     if (fs.exists(dir)) {
@@ -54,6 +64,128 @@ object Export {
       case other => other
     }
 
+  /** The part-file runner both table sinks share: after deleting stale
+    * parts ([[scrubStale]]), one task per partition of `df` writes
+    * `{outputDir}/{filename}.{partition}.{ext}` with `write`, which
+    * gets the partition's rows, `conf` rebuilt on the executor, the
+    * [[sinkFs]] filesystem and the part's path. An empty partition gets
+    * its part too, so part `i` always holds partition `i`.
+    *
+    * The rows are the executed plan's own `InternalRow`s
+    * (`queryExecution.toRdd`: for a feature table, the rows
+    * `WideRowsExec` writes), so no row is converted to a `Row`. The job
+    * runs as one SQL execution of `df`'s query, so listeners see it as
+    * that query's execution. No write command is planned and there is
+    * no commit protocol: each task writes its final file in place, and
+    * a retried task overwrites it. */
+  private[export] def partFiles(df: DataFrame, outputDir: String, filename: String,
+      ext: String, conf: Configuration)(
+      write: (Iterator[InternalRow], Configuration, FileSystem, Path) => Unit): Unit = {
+    val spark = df.sparkSession
+    // Path(...).toUri escapes spaces etc.; a raw new URI(path) throws on them
+    val dir = new Path(outputDir)
+    scrubStale(sinkFs(dir, spark.sparkContext.hadoopConfiguration), dir, filename, ext)
+    val entries = confEntries(conf)
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some(s"write $ext")) {
+      spark.sparkContext.runJob(qe.toRdd, (task: TaskContext, rows: Iterator[InternalRow]) => {
+        val conf = new Configuration()
+        entries.foreach { case (k, v) => conf.set(k, v) }
+        write(rows, conf, sinkFs(dir, conf), new Path(dir, s"$filename.${task.partitionId}.$ext"))
+      })
+    }
+    ()
+  }
+
+  /** K1, the feature table → parquet (export/parquet.py:6-31), with
+    * the reference's file naming: one `{filename}.{partition}.parquet`
+    * per partition directly in the output directory
+    * (export/parquet.py:24-27 name_function, no _metadata file),
+    * written through [[partFiles]] by parquet-mr's writer with Spark's
+    * own write support, so the schema, encodings and column chunks are
+    * the ones `df.write.parquet` writes with the same options. Parquet
+    * properties are parquet-mr's defaults, except:
+    *
+    *  - No dictionary encoding: with it, every value pays a hash-map put
+    *    and lookup in parquet's dictionary writer (~8% of the executor
+    *    samples of a settled zarr run), while it saves few bytes on the
+    *    double feature columns; the larger the part, the more it would
+    *    have saved.
+    *  - A 4 KB codec buffer: parquet compresses each page through a
+    *    codec stream that allocates a buffer of `io.file.buffer.size`
+    *    bytes, 64 KB in Spark's configuration, a fresh array per page of
+    *    ~2,700 feature columns. The compressed bytes do not depend on it.
+    *  - The footer holds no `org.apache.spark.sql.parquet.row.metadata`
+    *    key ([[PartWriteSupport]]). Spark reads the schema back from the
+    *    parquet schema alone: the same names and types, all nullable,
+    *    as a read of Spark's own parts gives.
+    *
+    * The codec is the session's (`spark.sql.parquet.compression.codec`,
+    * snappy by default). No memory manager shrinks the row groups of
+    * concurrent writers: a part of the feature table is far smaller
+    * than one 128 MB row group.
+    *
+    * Bytes on the zarr reference shape (4 parts, 2,733 columns): the
+    * row-metadata value is 248,446 bytes of JSON, so each part is a
+    * fixed 248,494 bytes (~243 KB) smaller than Spark's, whatever its
+    * row count. At 160 events (40 rows a part) the output falls from
+    * 6,104,350 to 5,110,374 bytes (-16.3%); at 1,600 events (400 rows a
+    * part) from 26,307,496 to 25,313,520 (-3.8%). */
+  def parquetPartFiles(df: DataFrame, outputDir: String, filename: String): Unit = {
+    val state = df.sparkSession.sessionState
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(
+      state.newHadoopConfWithOptions(Map("io.file.buffer.size" -> "4096")))
+    // the configuration Spark's writer gives its write support
+    ParquetUtils.prepareWrite(state.conf, job, df.schema,
+      new ParquetOptions(Map.empty[String, String], state.conf))
+    val codec = ParquetOutputFormat.getCompression(job.getConfiguration)
+    partFiles(df, outputDir, filename, "parquet", job.getConfiguration) { (rows, conf, fs, path) =>
+      val writer = new PartWriter(new SinkOutputFile(fs, path)).withConf(conf)
+        .withCompressionCodec(codec).withDictionaryEncoding(false)
+        .withWriteMode(ParquetFileWriter.Mode.OVERWRITE).build()
+      try rows.foreach(writer.write) finally writer.close()
+    }
+  }
+
+  /** Spark's parquet write support, minus one footer key: the
+    * row-metadata JSON repeats the whole Spark schema (248,446 bytes
+    * for the 2,733 columns of the zarr reference shape), and the parquet schema already
+    * carries its names, types and nullability. */
+  private final class PartWriteSupport extends ParquetWriteSupport {
+    override def init(conf: Configuration): WriteSupport.WriteContext = {
+      val ctx = super.init(conf)
+      val meta = new java.util.LinkedHashMap[String, String](ctx.getExtraMetaData)
+      meta.remove(ParquetReadSupport.SPARK_METADATA_KEY)
+      new WriteSupport.WriteContext(ctx.getSchema, meta)
+    }
+  }
+
+  private final class PartWriter(file: OutputFile)
+      extends ParquetWriter.Builder[InternalRow, PartWriter](file) {
+    override protected def self(): PartWriter = this
+    override protected def getWriteSupport(conf: Configuration): WriteSupport[InternalRow] =
+      new PartWriteSupport
+  }
+
+  /** parquet-mr's `HadoopOutputFile` (same create arguments, same
+    * block-size answers), over the [[sinkFs]] filesystem instead of the
+    * one `Path.getFileSystem` resolves. `ParquetOutputFormat` opens its
+    * files through the latter, which for `file:` is the checksummed
+    * filesystem, so the parts are written by parquet-mr's
+    * `ParquetWriter` over this file. */
+  private final class SinkOutputFile(fs: FileSystem, path: Path) extends OutputFile {
+    private def open(overwrite: Boolean, blockSizeHint: Long): PositionOutputStream =
+      HadoopStreams.wrap(fs.create(path, overwrite, 4096, fs.getDefaultReplication(path),
+        math.max(fs.getDefaultBlockSize(path), blockSizeHint)))
+    override def create(blockSizeHint: Long): PositionOutputStream = open(false, blockSizeHint)
+    override def createOrOverwrite(blockSizeHint: Long): PositionOutputStream =
+      open(true, blockSizeHint)
+    override def supportsBlockSize(): Boolean =
+      HadoopOutputFile.getBlockFileSystems.contains(fs.getUri.getScheme)
+    override def defaultBlockSize(): Long = fs.getDefaultBlockSize(path)
+    override def getPath(): String = path.toString
+  }
+
   /** Driver-side text write through the Hadoop FS layer, so the
     * destination may be any filesystem the session resolves (s3a,
     * hdfs, file) — a bare java.nio write would land the small CSV/JSON
@@ -73,60 +205,6 @@ object Export {
     if (s.exists(c => c == ',' || c == '"' || c == '\n' || c == '\r'))
       "\"" + s.replace("\"", "\"\"") + "\""
     else s
-
-  /** K1, the feature table → parquet (export/parquet.py:6-31), with
-    * the reference's file naming: one `{filename}.{partition}.parquet`
-    * per partition directly in the output directory
-    * (export/parquet.py:24-27 name_function, no _metadata file). Spark
-    * writes its part files to a scratch dir and the driver renames
-    * them — same bytes, reference layout.
-    *
-    * Written without dictionary encoding: with it, every value pays a
-    * hash-map put and lookup in parquet's dictionary writer (~8% of the
-    * executor samples of a settled zarr run), while it saves few bytes
-    * on the double feature columns. The trade is in the bytes, measured
-    * on the zarr reference shape (4 part files): 160 events write
-    * 6,104,364 bytes instead of 6,140,902 (-0.6%), 1,600 events
-    * 26,114,890 instead of 25,499,175 (+2.4%); the larger the part
-    * file, the more the dictionary would have saved.
-    *
-    * A `file:` destination is written and renamed through the raw local
-    * filesystem ([[sinkFs]]); Spark's writer is pointed at it through
-    * this write's own options, so the cached `file:` instance everyone
-    * else gets stays checksummed.
-    *
-    * Parquet compresses each page through a codec stream that
-    * allocates a buffer of `io.file.buffer.size` bytes, which Spark sets
-    * to 64 KB: with ~2,700 feature columns that is a fresh 64 KB array
-    * per page, most of the bytes the feature pass allocates. This write
-    * sets it to 4 KB on its own options. Parquet opens its file stream
-    * with a fixed 4 KB buffer, so the option sizes only the codec
-    * stream, and the compressed bytes do not depend on it. */
-  def parquetPartFiles(df: DataFrame, outputDir: String, filename: String,
-      coalesce: Int = 0): Unit = {
-    val scratch = new org.apache.hadoop.fs.Path(s"$outputDir/.${filename}_spark_tmp")
-    val out = if (coalesce > 0) df.coalesce(coalesce) else df
-    // Path(...).toUri escapes spaces etc.; a raw new URI(path) throws
-    // URISyntaxException on them AFTER the parquet write succeeded
-    val fs = sinkFs(scratch, df.sparkSession.sparkContext.hadoopConfiguration)
-    val writer = fs match {
-      case _: org.apache.hadoop.fs.RawLocalFileSystem =>
-        out.write.option("fs.file.impl", classOf[org.apache.hadoop.fs.RawLocalFileSystem].getName)
-          .option("fs.file.impl.disable.cache", "true")
-      case _ => out.write
-    }
-    writer.option("parquet.enable.dictionary", "false").option("io.file.buffer.size", "4096")
-      .mode("overwrite").parquet(scratch.toString)
-    val parts = fs.listStatus(scratch)
-      .filter(_.getPath.getName.startsWith("part-"))
-      .sortBy(_.getPath.getName)
-    scrubStale(fs, new org.apache.hadoop.fs.Path(outputDir), filename, "parquet")
-    parts.zipWithIndex.foreach { case (st, i) =>
-      val target = new org.apache.hadoop.fs.Path(s"$outputDir/$filename.$i.parquet")
-      require(fs.rename(st.getPath, target), s"rename ${st.getPath} -> $target failed")
-    }
-    fs.delete(scratch, true)
-  }
 
   /** channel_boundaries.csv exactly as the reference writes it
     * (main.py:49-60): one row per group, wide `{channel}_min`/
@@ -174,7 +252,7 @@ object Export {
   def npyMasks(ds: Dataset[ImageEvent], dir: String): Dataset[ImageEvent] = {
     import graft.core.Codecs._
     val dirB = dir
-    val hadoopEntries = hadoopConfEntries(ds.sparkSession)
+    val hadoopEntries = confEntries(ds.sparkSession.sparkContext.hadoopConfiguration)
     ds.mapPartitions { events =>
       lazy val fs = {
         val conf = new org.apache.hadoop.conf.Configuration()

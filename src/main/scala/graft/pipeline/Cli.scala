@@ -148,12 +148,10 @@ object Cli {
     // reference ({filename}.{partition}.parquet / .h5ad, main.py:271)
     val filename = exportNode.flatMap(e => Option(e.get("filename")))
       .map(_.asText()).getOrElse("features")
+    val parts = if (coalesce > 0) table.coalesce(coalesce) else table
     exportNode.flatMap(e => Option(e.get("format"))).map(_.asText()).getOrElse("parquet") match {
-      case "anndata" => // K2: one .h5ad per partition
-        val t = if (coalesce > 0) table.coalesce(coalesce) else table
-        graft.export.AnnData.export(t, outputDir, filename)
-      case _ =>
-        Export.parquetPartFiles(table, outputDir, filename, coalesce)
+      case "anndata" => graft.export.AnnData.export(parts, outputDir, filename)
+      case _ => Export.parquetPartFiles(parts, outputDir, filename)
     }
 
     extents.foreach { mm =>

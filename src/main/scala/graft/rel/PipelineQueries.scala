@@ -343,17 +343,32 @@ object PipelineQueries {
     * keyed and ordered on by [[Digest.rows]] */
   private[graft] val DigestKeys = Seq("meta_path", "meta_idx", "meta_id")
 
+  /** The reference fixture each reference-data cell reads when it is
+    * present. Without it the cell reads a stand-in (p01's synthetic
+    * shape for p07, a self-written multipage TIFF set for p15). */
+  private val referenceFixtures = Map(
+    "p07_reference_e2e" -> "/root/reference/test/data/test.zarr",
+    "p15_multiframe_cli" -> "/root/reference/test/data/images")
+
+  private def referenceFixture(name: String): Option[String] =
+    referenceFixtures.get(name).filter(p => java.nio.file.Files.exists(java.nio.file.Paths.get(p)))
+
+  /** The committed golden a digest-checked cell is compared with:
+    * `<name>` for the data it is named after, `<name>.fallback` when it
+    * read its stand-in. */
+  private[graft] def goldenName(name: String): String =
+    if (referenceFixtures.contains(name) && referenceFixture(name).isEmpty) s"$name.fallback"
+    else name
+
   /** The p07 wide feature table: the reference's bundled zarr fixture
     * through its scip_zarr.yml pipeline, or p01's synthetic reference
     * shape when the fixture is absent. The registry entry digests it,
     * and ReferenceE2eSpec asserts on it directly, so the two cannot
     * drift. */
   private[graft] def p07Wide(s: org.apache.spark.sql.SparkSession)
-      : org.apache.spark.sql.DataFrame = {
-    val fixture = "/root/reference/test/data/test.zarr"
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(fixture)))
-      Pipeline.referenceShape(s, nEvents = 10)
-    else {
+      : org.apache.spark.sql.DataFrame = referenceFixture("p07_reference_e2e") match {
+    case None => Pipeline.referenceShape(s, nEvents = 10)
+    case Some(fixture) =>
       val meta = graft.sources.Zarr.metaFromDirectory(s, fixture,
         "^.+/(?<group>.+)\\.zarr$")
       val events = graft.sources.Zarr.loadPixels(meta, Seq(0, 1))
@@ -372,7 +387,6 @@ object PipelineQueries {
             featureTypes = Some(Seq("regions", "shape", "intensity")))),
         featureTypes = full)
       Pipeline.run(s, events, cfg)
-    }
   }
 
   /** every digest-checked pipeline query: (name, wide-table fn). The
@@ -446,10 +460,7 @@ object PipelineQueries {
     // fixture when the reference data is absent (p07 precedent).
     "p15_multiframe_cli" -> { (s, _) =>
       import java.nio.file.{Files, Paths}
-      val refImages = "/root/reference/test/data/images"
-      val imagesDir =
-        if (Files.isDirectory(Paths.get(refImages))) refImages
-        else multiframeFallbackDir
+      val imagesDir = referenceFixture("p15_multiframe_cli").getOrElse(multiframeFallbackDir)
       val out = p15OutPath
       val cfgPath = Paths.get(out + ".json")
       Files.createDirectories(cfgPath.getParent)
@@ -481,7 +492,7 @@ object PipelineQueries {
   val all: Seq[Q] = digestables.map { case (name, fn) =>
     val wrapped = (s: org.apache.spark.sql.SparkSession, d: String) =>
       Digest.rows(fn(s, d), DigestKeys)
-    Digest.golden(name) match {
+    Digest.golden(goldenName(name)) match {
       case Some(sql) => Q(name, sql)(wrapped)
       case None      => Q.noOracle(name)(wrapped) // bootstrap: golden not yet generated
     }

@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Regenerates the committed p-query goldens
-  * (src/main/resources/graft/goldens/<name>.sql): runs each digest
+  * (src/main/resources/graft/goldens/<name>.sql, or
+  * <name>.fallback.sql for a cell that read its stand-in for absent
+  * reference data — see PipelineQueries.goldenName): runs each digest
   * query's wide table, reduces it with [[graft.rel.Digest.rows]] (the
   * same call the registry makes), and renders the DuckDB `VALUES`
   * oracle. Run after any intentional
@@ -32,7 +34,7 @@ object GenGoldens {
       val out = fn(spark, "/root/testdata/sf0.01")
       val digested = graft.rel.Digest.rows(out, keys)
       val sql = graft.rel.Digest.goldenSql(digested, keys)
-      Files.writeString(Paths.get(s"$outDir/$name.sql"), sql)
+      Files.writeString(Paths.get(s"$outDir/${graft.rel.PipelineQueries.goldenName(name)}.sql"), sql)
       println(s"[gen-goldens] $name: ${sql.linesIterator.size - 3} rows")
     }
     spark.stop()

@@ -127,4 +127,95 @@ class ExportSpec extends SparkSpec {
       })).sortBy(_.head.asInstanceOf[Long]).toSeq
     assert(cells(a) == cells(b))
   }
+
+  /** double, bigint, int and string columns with nulls, over `parts` partitions */
+  private def mixed(n: Int, parts: Int) = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val rng = new scala.util.Random(7)
+    val rows = (0 until n).map { i =>
+      def orNull(v: Any) = if (i % 7 == 3) null else v
+      Row(orNull(rng.nextGaussian()), i.toLong, orNull(i % 11), orNull(s"k${i % 13}"))
+    }
+    val schema = StructType(Seq(StructField("feat_v", DoubleType),
+      StructField("meta_id", LongType, nullable = false), StructField("meta_n", IntegerType),
+      StructField("meta_path", StringType)))
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, parts), schema)
+  }
+
+  private def footer(f: java.io.File) = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(f.toString), spark.sparkContext.hadoopConfiguration))
+    try reader.getFooter finally reader.close()
+  }
+
+  private def parquetParts(dir: String, prefix: String) = new java.io.File(dir).listFiles()
+    .filter(f => f.getName.startsWith(prefix) && f.getName.endsWith(".parquet"))
+    .sortBy(_.getName).toSeq
+
+  test("no part footer holds Spark's row-metadata schema JSON") {
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("export-footer").toString
+    Export.parquetPartFiles(mixed(300, 3), dir, "features")
+    val parts = parquetParts(dir, "features.")
+    assert(parts.length == 3)
+    for (f <- parts) {
+      val keys = footer(f).getFileMetaData.getKeyValueMetaData.asScala.keySet
+      assert(!keys.contains("org.apache.spark.sql.parquet.row.metadata"), s"${f.getName}: $keys")
+      assert(keys == Set("org.apache.spark.version"), s"${f.getName}: $keys")
+    }
+  }
+
+  test("parts read back with the written names, types and empty field metadata") {
+    val df = mixed(300, 3)
+    val (ours, sparks) = (Files.createTempDirectory("export-schema-ours").toString,
+      Files.createTempDirectory("export-schema-spark").toString)
+    Export.parquetPartFiles(df, ours, "features")
+    df.write.mode("overwrite").parquet(sparks)
+    val back = spark.read.parquet(parquetParts(ours, "features.").map(_.toString): _*)
+    assert(back.schema.fields.map(f => (f.name, f.dataType, f.metadata)).toSeq ==
+      df.schema.fields.map(f => (f.name, f.dataType, f.metadata)).toSeq)
+    assert(back.schema.forall(_.metadata.json == "{}"))
+    // Spark's own parts read back all nullable too: the same schema
+    assert(back.schema == spark.read.parquet(sparks).schema)
+    def cells(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.toSeq).sortBy(_(1).asInstanceOf[Long]).toSeq
+    assert(cells(back) == cells(df))
+  }
+
+  test("column chunks equal df.write.parquet's: sizes, value counts, statistics") {
+    import scala.jdk.CollectionConverters._
+    val df = mixed(30000, 3)
+    val (ours, sparks) = (Files.createTempDirectory("export-chunks-ours").toString,
+      Files.createTempDirectory("export-chunks-spark").toString)
+    Export.parquetPartFiles(df, ours, "features")
+    df.write.option("parquet.enable.dictionary", "false").option("io.file.buffer.size", "4096")
+      .mode("overwrite").parquet(sparks)
+    val (a, b) = (parquetParts(ours, "features."), parquetParts(sparks, "part-"))
+    assert(a.length == 3 && b.length == 3, (a, b))
+    def chunks(f: java.io.File) = footer(f).getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala.map(c =>
+      (c.getPath.toDotString, c.getStartingPos, c.getTotalSize, c.getTotalUncompressedSize,
+        c.getValueCount, c.getStatistics, c.getEncodings.asScala.toSet, c.getCodec)))
+    for ((x, y) <- a.zip(b)) {
+      val (cx, cy) = (chunks(x), chunks(y))
+      assert(cx.length == 4 && cx == cy, s"${x.getName} vs ${y.getName}")
+      assert(footer(x).getFileMetaData.getSchema == footer(y).getFileMetaData.getSchema)
+    }
+  }
+
+  test("an empty partition writes a 0-row part named by its partition id") {
+    val df = mixed(2, 4)
+    val dir = Files.createTempDirectory("export-empty").toString
+    Export.parquetPartFiles(df, dir, "features")
+    val parts = parquetParts(dir, "features.")
+    assert(parts.map(_.getName) == (0 until 4).map(i => s"features.$i.parquet"))
+    val sizes = df.rdd.mapPartitions(it => Iterator.single(it.size)).collect().toSeq
+    assert(sizes.count(_ == 0) == 2, sizes)
+    for ((f, n) <- parts.zip(sizes)) {
+      val back = spark.read.parquet(f.toString)
+      assert(back.count() == n, f.getName)
+      assert(back.schema.map(_.name) == df.schema.map(_.name))
+    }
+  }
 }

@@ -18,8 +18,9 @@ class PipelineGoldenSpec extends SparkSpec {
       s2.conf.set("spark.sql.shuffle.partitions", "17")
       val digested = Digest.rows(fn(s2, sfDir), PipelineQueries.DigestKeys)
       val live = Digest.goldenSql(digested, PipelineQueries.DigestKeys)
-      val committed = Digest.golden(name)
-        .getOrElse(fail(s"no committed golden for $name — run graft.tools.GenGoldens"))
+      val golden = PipelineQueries.goldenName(name)
+      val committed = Digest.golden(golden)
+        .getOrElse(fail(s"no committed golden $golden — run graft.tools.GenGoldens"))
       assert(live == committed,
         s"$name digest drifted from the committed golden")
     }
