@@ -17,8 +17,10 @@ anywhere in the stack, counted once per sample). Each --match TEXT adds
 a line with the share of samples whose stack holds a frame containing
 TEXT; "A>B" counts samples where a frame containing B is called, at any
 depth, from a frame containing A. --layers splits the samples into the
-pipeline's layers (LAYERS below): each sample goes to the layer of the
-frame nearest the top of its stack that matches one, or to "rest".
+pipeline's layers: a sample whose first graft frame from the top writes
+wide-row cells (ROW_PATH below) goes to "row path"; any other sample goes
+to the layer (LAYERS below) of the frame nearest the top of its stack
+that matches one, or to "rest".
 
 --alloc reads `jdk.ObjectAllocationSample` events instead and weighs
 each by its sampled bytes (`weight`), so every share is a share of the
@@ -40,9 +42,17 @@ UNITS = {"byte": 1, "bytes": 1, "kB": 1 << 10, "MB": 1 << 20, "GB": 1 << 30, "TB
 JDK_PREFIXES = ("java.", "javax.", "jdk.", "sun.", "com.sun.")
 FRAME = re.compile(r"^\s+([\w$.<>/\[\]]+)\(.*\)(?:\s+line:.*)?$")
 
-# (layer, frame substrings) in print order
+# the row path: writing the wide-row cells, not computing them. A sample
+# is charged to it when the first graft frame from the top of its stack
+# holds one of these (so boxing, the row writer and array copies called
+# from them count, and a kernel called from the same code does not)
+ROW_PATH = ("graft.plans.", "graft.ops.Features$.emit", "graft.ops.Features$.metaCells",
+            "graft.ops.Features$.featureCells", "graft.pipeline.Pipeline$.$anonfun$fusedRow")
+
+# (layer, frame substrings) in print order, after the row path
 LAYERS = [
-    ("sink", ("org.apache.parquet", "ParquetWriteSupport")),
+    ("sink", ("org.apache.parquet", "ParquetWriteSupport", "graft.export.Export$Part",
+              "graft.export.Export$BlockStream")),
     ("mask branches", ("graft.ops.Masking$.branchRecord",)),
     ("shape", ("graft.ops.Features$.shapeRow",)),
     ("texture", ("graft.ops.Features$.textureRow",)),
@@ -52,6 +62,9 @@ LAYERS = [
 
 
 def layer_of(frames):
+    own = next((f for f in frames if f.startswith("graft.")), "")
+    if any(x in own for x in ROW_PATH):
+        return "row path"
     for f in frames:
         for name, subs in LAYERS:
             if any(x in f for x in subs):
@@ -161,7 +174,7 @@ def main():
         for f, wt in kept:
             counts[layer_of(f)] += wt
         print("\n-- layers")
-        for name in [x for x, _ in LAYERS] + ["rest"]:
+        for name in ["row path"] + [x for x, _ in LAYERS] + ["rest"]:
             row(counts[name], name)
 
 if __name__ == "__main__":

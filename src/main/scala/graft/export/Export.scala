@@ -1,17 +1,22 @@
 package graft.export
 
 import graft.core.ImageEvent
+import graft.plans.WideTypes
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetOutputFormat, ParquetWriter}
 import org.apache.parquet.hadoop.api.WriteSupport
-import org.apache.parquet.hadoop.util.{HadoopOutputFile, HadoopStreams}
+import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.io.{OutputFile, PositionOutputStream}
+import org.apache.parquet.io.api.{Binary, RecordConsumer}
+import org.apache.parquet.schema.MessageType
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.SQLExecution
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetReadSupport, ParquetUtils, ParquetWriteSupport}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetReadSupport, ParquetUtils, ParquetWriteSupport, SparkToParquetSchemaConverter}
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import org.apache.spark.util.SerializableConfiguration
 import java.nio.charset.StandardCharsets
 
 /** Sinks — reference K1-K6 (SURVEY.md §2.1).
@@ -25,18 +30,6 @@ import java.nio.charset.StandardCharsets
   * are below.
   */
 object Export {
-
-  /** A configuration's entries as a serializable array, for
-    * executor-side FileSystem construction (credentials, defaultFS —
-    * Configuration itself is not serializable; a fresh one would
-    * silently drop s3a/hdfs settings). Shared by every sink that writes
-    * from executors. */
-  private[export] def confEntries(conf: Configuration): Array[(String, String)] = {
-    val it = conf.iterator()
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    while (it.hasNext) { val e = it.next(); buf += ((e.getKey, e.getValue)) }
-    buf.toArray
-  }
 
   /** Delete stale `{name}.{i}.{ext}` part files from a previous
     * (possibly larger) run: survivors with higher indices would be read
@@ -67,9 +60,14 @@ object Export {
   /** The part-file runner both table sinks share: after deleting stale
     * parts ([[scrubStale]]), one task per partition of `df` writes
     * `{outputDir}/{filename}.{partition}.{ext}` with `write`, which
-    * gets the partition's rows, `conf` rebuilt on the executor, the
-    * [[sinkFs]] filesystem and the part's path. An empty partition gets
-    * its part too, so part `i` always holds partition `i`.
+    * gets the partition's rows, `conf`, the [[sinkFs]] filesystem and
+    * the part's path. An empty partition gets its part too, so part `i`
+    * always holds partition `i`. `conf` goes to the executors in one
+    * broadcast of a `SerializableConfiguration`, as Spark's file
+    * readers send theirs: it is read once per executor and shared by
+    * its tasks, which must not change it. (Spark's write command sends
+    * its configuration in every task's closure instead, ~900 entries a
+    * task.)
     *
     * The rows are the executed plan's own `InternalRow`s
     * (`queryExecution.toRdd`: for a feature table, the rows
@@ -85,15 +83,14 @@ object Export {
     // Path(...).toUri escapes spaces etc.; a raw new URI(path) throws on them
     val dir = new Path(outputDir)
     scrubStale(sinkFs(dir, spark.sparkContext.hadoopConfiguration), dir, filename, ext)
-    val entries = confEntries(conf)
+    val shipped = spark.sparkContext.broadcast(new SerializableConfiguration(conf))
     val qe = df.queryExecution
-    SQLExecution.withNewExecutionId(qe, Some(s"write $ext")) {
+    try SQLExecution.withNewExecutionId(qe, Some(s"write $ext")) {
       spark.sparkContext.runJob(qe.toRdd, (task: TaskContext, rows: Iterator[InternalRow]) => {
-        val conf = new Configuration()
-        entries.foreach { case (k, v) => conf.set(k, v) }
+        val conf = shipped.value.value
         write(rows, conf, sinkFs(dir, conf), new Path(dir, s"$filename.${task.partitionId}.$ext"))
       })
-    }
+    } finally shipped.destroy()
     ()
   }
 
@@ -101,10 +98,14 @@ object Export {
     * the reference's file naming: one `{filename}.{partition}.parquet`
     * per partition directly in the output directory
     * (export/parquet.py:24-27 name_function, no _metadata file),
-    * written through [[partFiles]] by parquet-mr's writer with Spark's
-    * own write support, so the schema, encodings and column chunks are
-    * the ones `df.write.parquet` writes with the same options. Parquet
-    * properties are parquet-mr's defaults, except:
+    * written through [[partFiles]] by parquet-mr's writer. The job
+    * configuration is the one Spark's writer prepares for its write
+    * support (`ParquetUtils.prepareWrite`), and the parquet schema is
+    * Spark's conversion of `df.schema`, so the schema, encodings and
+    * column chunks are the ones `df.write.parquet` writes with the same
+    * options. The fields must be of the [[WideTypes]] (double, bigint,
+    * int or string: the cells a feature table holds); any other type
+    * fails before a task runs. Parquet properties are parquet-mr's defaults, except:
     *
     *  - No dictionary encoding: with it, every value pays a hash-map put
     *    and lookup in parquet's dictionary writer (~8% of the executor
@@ -125,6 +126,10 @@ object Export {
     * concurrent writers: a part of the feature table is far smaller
     * than one 128 MB row group.
     *
+    * What the parts share ([[PartSchema]]) and the configuration go to
+    * each executor once, in broadcasts; each part's bytes go through
+    * one 64 KB array ([[SinkOutputFile]]).
+    *
     * Bytes on the zarr reference shape (4 parts, 2,733 columns): the
     * row-metadata value is 248,446 bytes of JSON, so each part is a
     * fixed 248,494 bytes (~243 KB) smaller than Spark's, whatever its
@@ -138,33 +143,96 @@ object Export {
     // the configuration Spark's writer gives its write support
     ParquetUtils.prepareWrite(state.conf, job, df.schema,
       new ParquetOptions(Map.empty[String, String], state.conf))
-    val codec = ParquetOutputFormat.getCompression(job.getConfiguration)
-    partFiles(df, outputDir, filename, "parquet", job.getConfiguration) { (rows, conf, fs, path) =>
-      val writer = new PartWriter(new SinkOutputFile(fs, path)).withConf(conf)
+    val conf = job.getConfiguration
+    val codec = ParquetOutputFormat.getCompression(conf)
+    val part = df.sparkSession.sparkContext.broadcast(new PartSchema(df.schema, sparkFooter(conf)))
+    // what the schema JSON was for: no task reads it
+    conf.unset(ParquetWriteSupport.SPARK_ROW_SCHEMA)
+    try partFiles(df, outputDir, filename, "parquet", conf) { (rows, conf, fs, path) =>
+      val writer = new PartWriter(new SinkOutputFile(fs, path), part.value).withConf(conf)
         .withCompressionCodec(codec).withDictionaryEncoding(false)
         .withWriteMode(ParquetFileWriter.Mode.OVERWRITE).build()
       try rows.foreach(writer.write) finally writer.close()
+    } finally part.destroy()
+  }
+
+  /** The footer key-values Spark's write support puts in a part under
+    * `conf` (the Spark version, and the rebase markers of the session's
+    * datetime modes), minus the row-metadata JSON. Spark's own write
+    * support computes them, initialized on a one-column schema so that
+    * the feature table's JSON is neither parsed nor converted here. */
+  private def sparkFooter(conf: Configuration): Map[String, String] = {
+    import scala.jdk.CollectionConverters._
+    val probe = new Configuration(conf)
+    ParquetWriteSupport.setSchema(StructType(Seq(StructField("probe", IntegerType))), probe)
+    new ParquetWriteSupport().init(probe).getExtraMetaData.asScala.toMap -
+      ParquetReadSupport.SPARK_METADATA_KEY
+  }
+
+  /** What every part of one parquet export shares, read by the
+    * executors from a broadcast: the frame's schema, each field's name
+    * and type code, and the footer key-values. The parquet schema is
+    * converted from it once per executor, by the converter Spark's own
+    * write support uses. */
+  private final class PartSchema(schema: StructType, val footer: Map[String, String])
+      extends Serializable {
+    val names: Array[String] = schema.fieldNames
+    val codes: Array[Int] = schema.fields.map(f => WideTypes.code(f.name, f.dataType))
+    @transient private var converted: MessageType = _
+    /** on the executor, under `conf` (the parts' own configuration) */
+    def messageType(conf: Configuration): MessageType = synchronized {
+      if (converted == null) converted = new SparkToParquetSchemaConverter(conf).convert(schema)
+      converted
     }
   }
 
-  /** Spark's parquet write support, minus one footer key: the
-    * row-metadata JSON repeats the whole Spark schema (248,446 bytes
-    * for the 2,733 columns of the zarr reference shape), and the parquet schema already
-    * carries its names, types and nullability. */
-  private final class PartWriteSupport extends ParquetWriteSupport {
+  /** Spark's parquet write support for the four [[WideTypes]]: each non-null field is written as Spark's writer
+    * writes it (`addDouble`, `addLong`, `addInteger`, or the UTF-8
+    * bytes through `Binary.fromReusedByteArray`), chosen by its type
+    * code instead of through a boxed per-field writer closure. The
+    * footer carries Spark's key-values minus the row-metadata JSON: the
+    * row-metadata value repeats the whole Spark schema (248,446 bytes
+    * for the 2,733 columns of the zarr reference shape), and the
+    * parquet schema already carries its names, types and nullability. */
+  private final class PartWriteSupport(part: PartSchema) extends WriteSupport[InternalRow] {
+    private var consumer: RecordConsumer = _
+    private val names = part.names
+    private val codes = part.codes
+
     override def init(conf: Configuration): WriteSupport.WriteContext = {
-      val ctx = super.init(conf)
-      val meta = new java.util.LinkedHashMap[String, String](ctx.getExtraMetaData)
-      meta.remove(ParquetReadSupport.SPARK_METADATA_KEY)
-      new WriteSupport.WriteContext(ctx.getSchema, meta)
+      import scala.jdk.CollectionConverters._
+      new WriteSupport.WriteContext(part.messageType(conf), part.footer.asJava)
+    }
+
+    override def prepareForWrite(recordConsumer: RecordConsumer): Unit =
+      consumer = recordConsumer
+
+    override def write(row: InternalRow): Unit = {
+      consumer.startMessage()
+      var i = 0
+      while (i < codes.length) {
+        if (!row.isNullAt(i)) {
+          consumer.startField(names(i), i)
+          (codes(i): @scala.annotation.switch) match {
+            case WideTypes.DoubleCode => consumer.addDouble(row.getDouble(i))
+            case WideTypes.LongCode => consumer.addLong(row.getLong(i))
+            case WideTypes.IntCode => consumer.addInteger(row.getInt(i))
+            case WideTypes.StringCode =>
+              consumer.addBinary(Binary.fromReusedByteArray(row.getUTF8String(i).getBytes))
+          }
+          consumer.endField(names(i), i)
+        }
+        i += 1
+      }
+      consumer.endMessage()
     }
   }
 
-  private final class PartWriter(file: OutputFile)
+  private final class PartWriter(file: OutputFile, part: PartSchema)
       extends ParquetWriter.Builder[InternalRow, PartWriter](file) {
     override protected def self(): PartWriter = this
     override protected def getWriteSupport(conf: Configuration): WriteSupport[InternalRow] =
-      new PartWriteSupport
+      new PartWriteSupport(part)
   }
 
   /** parquet-mr's `HadoopOutputFile` (same create arguments, same
@@ -172,10 +240,10 @@ object Export {
     * one `Path.getFileSystem` resolves. `ParquetOutputFormat` opens its
     * files through the latter, which for `file:` is the checksummed
     * filesystem, so the parts are written by parquet-mr's
-    * `ParquetWriter` over this file. */
+    * `ParquetWriter` over this file. Its stream is a [[BlockStream]]. */
   private final class SinkOutputFile(fs: FileSystem, path: Path) extends OutputFile {
     private def open(overwrite: Boolean, blockSizeHint: Long): PositionOutputStream =
-      HadoopStreams.wrap(fs.create(path, overwrite, 4096, fs.getDefaultReplication(path),
+      new BlockStream(fs.create(path, overwrite, 4096, fs.getDefaultReplication(path),
         math.max(fs.getDefaultBlockSize(path), blockSizeHint)))
     override def create(blockSizeHint: Long): PositionOutputStream = open(false, blockSizeHint)
     override def createOrOverwrite(blockSizeHint: Long): PositionOutputStream =
@@ -184,6 +252,48 @@ object Export {
       HadoopOutputFile.getBlockFileSystems.contains(fs.getUri.getScheme)
     override def defaultBlockSize(): Long = fs.getDefaultBlockSize(path)
     override def getPath(): String = path.toString
+  }
+
+  /** A part's stream: bytes gather in one 64 KB array and go to the
+    * filesystem stream `out` a whole block at a time (a write at least
+    * that long goes straight through), and the position is counted
+    * here. parquet-mr writes the footer and every page header as many
+    * small thrift writes; through Hadoop's `FSDataOutputStream` each of
+    * them passed a `DataOutputStream`, a per-write statistics lookup
+    * and a `BufferedOutputStream`. The bytes written are the same. */
+  private final class BlockStream(out: java.io.OutputStream) extends PositionOutputStream {
+    private val buf = new Array[Byte](1 << 16)
+    private var count = 0 // bytes in buf
+    private var drained = 0L // bytes handed to out
+
+    override def getPos: Long = drained + count
+
+    override def write(b: Int): Unit = {
+      if (count == buf.length) drain()
+      buf(count) = b.toByte
+      count += 1
+    }
+
+    override def write(b: Array[Byte], off: Int, len: Int): Unit =
+      if (len >= buf.length) {
+        drain()
+        out.write(b, off, len)
+        drained += len
+      } else {
+        if (len > buf.length - count) drain()
+        System.arraycopy(b, off, buf, count, len)
+        count += len
+      }
+
+    private def drain(): Unit = if (count > 0) {
+      out.write(buf, 0, count)
+      drained += count
+      count = 0
+    }
+
+    override def flush(): Unit = { drain(); out.flush() }
+
+    override def close(): Unit = try drain() finally out.close()
   }
 
   /** Driver-side text write through the Hadoop FS layer, so the
@@ -252,13 +362,13 @@ object Export {
   def npyMasks(ds: Dataset[ImageEvent], dir: String): Dataset[ImageEvent] = {
     import graft.core.Codecs._
     val dirB = dir
-    val hadoopEntries = confEntries(ds.sparkSession.sparkContext.hadoopConfiguration)
+    // the session's configuration (credentials, defaultFS), in the
+    // closure: a fresh Configuration would drop s3a/hdfs settings
+    val shipped = new SerializableConfiguration(ds.sparkSession.sparkContext.hadoopConfiguration)
     ds.mapPartitions { events =>
       lazy val fs = {
-        val conf = new org.apache.hadoop.conf.Configuration()
-        hadoopEntries.foreach { case (k, v) => conf.set(k, v) }
         val masksPath = new org.apache.hadoop.fs.Path(dirB, "masks")
-        val f = sinkFs(masksPath, conf)
+        val f = sinkFs(masksPath, shipped.value)
         f.mkdirs(masksPath)
         f
       }

@@ -40,32 +40,48 @@ object Filters {
     i = 0
     while (i < kernel.length) { kernel(i) /= s; i += 1 }
 
+    // Each pass sums kernel(k + radius) * v over k = -radius .. radius, in
+    // that order, from 0.0, into one accumulator per pixel of a row; a
+    // row's accumulators take one tap at a time, so the loop over the
+    // row's pixels reads no clamp where the tap stays inside the row.
     val tmp = new Array[Float](h * w)
     val out = new Array[Float](h * w)
+    val acc = new Array[Double](w)
     // horizontal
     var r = 0
     while (r < h) {
-      var c = 0
-      while (c < w) {
-        var acc = 0.0; var k = -radius
-        while (k <= radius) {
-          acc += kernel(k + radius) * img(r * w + clampIdx(c + k, w)); k += 1
-        }
-        tmp(r * w + c) = acc.toFloat; c += 1
+      val base = r * w
+      java.util.Arrays.fill(acc, 0.0)
+      var k = -radius
+      while (k <= radius) {
+        val kv = kernel(k + radius)
+        // c + k lies in the row for c in [lo, hi)
+        val lo = math.min(w, math.max(0, -k)); val hi = math.max(lo, math.min(w, w - k))
+        var c = 0
+        while (c < lo) { acc(c) += kv * img(base); c += 1 }
+        while (c < hi) { acc(c) += kv * img(base + c + k); c += 1 }
+        while (c < w) { acc(c) += kv * img(base + w - 1); c += 1 }
+        k += 1
       }
+      var c = 0
+      while (c < w) { tmp(base + c) = acc(c).toFloat; c += 1 }
       r += 1
     }
     // vertical
     r = 0
     while (r < h) {
-      var c = 0
-      while (c < w) {
-        var acc = 0.0; var k = -radius
-        while (k <= radius) {
-          acc += kernel(k + radius) * tmp(clampIdx(r + k, h) * w + c); k += 1
-        }
-        out(r * w + c) = acc.toFloat; c += 1
+      java.util.Arrays.fill(acc, 0.0)
+      var k = -radius
+      while (k <= radius) {
+        val kv = kernel(k + radius)
+        val src = clampIdx(r + k, h) * w
+        var c = 0
+        while (c < w) { acc(c) += kv * tmp(src + c); c += 1 }
+        k += 1
       }
+      val dst = r * w
+      var c = 0
+      while (c < w) { out(dst + c) = acc(c).toFloat; c += 1 }
       r += 1
     }
     out
@@ -121,24 +137,30 @@ object Filters {
     (math.sqrt(gx * gx + gy * gy) / math.sqrt(2.0)).toFloat
   }
 
-  private val halfWidthCache = new java.util.concurrent.ConcurrentHashMap[Int, Array[Int]]()
-
   /** disk structuring element (skimage.morphology.disk: all (dr, dc)
     * with dr² + dc² <= r²) as per-row half-widths: entry dr + radius is
-    * ⌊√(radius² − dr²)⌋, the largest |dc| on row dr. Built once per
-    * radius and shared (callers must not mutate it); later calls for a
-    * radius allocate nothing. */
+    * ⌊√(radius² − dr²)⌋, the largest |dc| on row dr. Radii up to 32 come
+    * from a table built once (callers must not mutate it); a larger
+    * radius is built per call. */
   def diskHalfWidths(radius: Int): Array[Int] = {
     require(radius >= 0, s"disk radius $radius < 0")
-    halfWidthCache.computeIfAbsent(radius, { r =>
-      Array.tabulate(2 * r + 1) { i =>
-        val dr = i - r
-        var d = 0
-        while ((d + 1) * (d + 1) + dr * dr <= r * r) d += 1
-        d
-      }
-    })
+    if (radius < HalfWidths.length) HalfWidths(radius) else halfWidths(radius)
   }
+
+  private def halfWidths(r: Int): Array[Int] = {
+    val out = new Array[Int](2 * r + 1)
+    var i = 0
+    while (i < out.length) {
+      val dr = i - r
+      var d = 0
+      while ((d + 1) * (d + 1) + dr * dr <= r * r) d += 1
+      out(i) = d
+      i += 1
+    }
+    out
+  }
+
+  private val HalfWidths: Array[Array[Int]] = Array.tabulate(33)(halfWidths)
 
   /** median filter with a disk footprint, skimage.filters.rank.median
     * semantics (the reference's otsu.py:27,35): out-of-image pixels are
@@ -245,7 +267,7 @@ object Filters {
     // numpy.pad mode='reflect': edge NOT duplicated (d c b | a b c d | c b a)
     if (n == 1) return 0
     val period = 2 * n - 2
-    var x = ((i % period) + period) % period
+    val x = ((i % period) + period) % period
     if (x >= n) period - x else x
   }
 
@@ -380,8 +402,10 @@ object Filters {
             val src = (r + radius + dr) * pw + radius; val dst = r * w
             var c = 0
             while (c < w) {
-              val v = span(src + c)
-              if (v < out(dst + c)) out(dst + c) = v
+              // a select, not a conditional store: the same value, and
+              // no branch to mispredict
+              val v = span(src + c); val o = out(dst + c)
+              out(dst + c) = if (v < o) v else o
               c += 1
             }
             r += 1

@@ -110,11 +110,18 @@ object Stats {
   }
 
   /** The 11-stat row of features/intensity.py:25-37, in its order:
-    * mean, median, max, min, std, mad, q25, q75, sum, skew, kurtosis. */
+    * mean, median, max, min, std, mad, q25, q75, sum, skew, kurtosis.
+    * A vector of finite values takes its order statistics from a sorted
+    * copy ([[sortedRow]]); one holding a NaN or an infinity, by
+    * selection. Both give the row of the sort-based definition. */
   def intensityRow(xs: Array[Float]): Array[Double] = {
     if (xs.length == 0) return Array.fill(11)(0.0) // empty-view default (missing_masks contract)
-    val s = xs.clone()
-    intensityRow(xs, orderStats(s), s)
+    val sorted = sortedIfFinite(xs)
+    if (sorted != null) sortedRow(xs, sorted)
+    else {
+      val s = xs.clone()
+      intensityRow(xs, orderStats(s), s)
+    }
   }
 
   /** [[intensityRow]] of `xs` given its order statistics `os` (the
@@ -124,9 +131,61 @@ object Stats {
   def intensityRow(xs: Array[Float], os: Array[Float], scratch: Array[Float]): Array[Double] = {
     val n = xs.length
     if (n == 0) return Array.fill(11)(0.0)
+    val med = fromRanks(50, n, os(4), os(5))
+    val dev = scratch
+    var i = 0
+    while (i < n) { dev(i) = math.abs(xs(i) - med).toFloat; i += 1 }
+    row(xs, med, os(1), os(0), selectPercentile(dev, 50),
+      fromRanks(25, n, os(2), os(3)), fromRanks(75, n, os(6), os(7)))
+  }
+
+  /** [[intensityRow]] of `xs` (n >= 1 finite values) from `sorted`, the
+    * same values in ascending order. Each order statistic is read at
+    * its rank. MAD is the median of d(x) = |x - median|, and d only
+    * grows walking down from the largest value at or below the median
+    * (x - median falls, and is at most zero) and walking up from the
+    * smallest value above it (x - median rises, and is positive): both
+    * walks are monotone, as rounding is. Merging the two walks gives
+    * the deviations in ascending order, up to the median's ranks. */
+  private def sortedRow(xs: Array[Float], sorted: Array[Float]): Array[Double] = {
+    val n = xs.length
+    def at(q: Double): Double = {
+      val pos = q / 100.0 * (n - 1)
+      val k = math.floor(pos).toInt
+      fromRanks(q, n, sorted(k), sorted(math.ceil(pos).toInt))
+    }
+    val med = at(50)
+    // deviations: below from `down` towards 0, above from `up` towards n
+    var up = 0
+    while (up < n && sorted(up) <= med) up += 1
+    var down = up - 1
+    val pos = 0.5 * (n - 1)
+    val k = math.floor(pos).toInt
+    var rank = 0
+    var lo = 0f; var hi = 0f
+    val last = math.ceil(pos).toInt
+    while (rank <= last) {
+      val d =
+        if (up >= n || (down >= 0 &&
+            math.abs(sorted(down) - med).toFloat <= math.abs(sorted(up) - med).toFloat)) {
+          down -= 1; math.abs(sorted(down + 1) - med).toFloat
+        } else {
+          up += 1; math.abs(sorted(up - 1) - med).toFloat
+        }
+      if (rank == k) lo = d
+      hi = d
+      rank += 1
+    }
+    row(xs, med, sorted(n - 1), sorted(0), fromRanks(50, n, lo, hi), at(25), at(75))
+  }
+
+  /** the row from its order statistics; the mean, sum and moments are
+    * summed over `xs` in its own order */
+  private def row(xs: Array[Float], med: Double, max: Float, min: Float, mad: Double,
+      q25: Double, q75: Double): Array[Double] = {
+    val n = xs.length
     val m = mean(xs)
-    // one fused pass for m2/m3/m4 (std, skew, kurtosis all derive from
-    // them), and mad reuses the median instead of selecting it again
+    // one fused pass for m2/m3/m4 (std, skew, kurtosis all derive from them)
     var m2 = 0.0; var m3 = 0.0; var m4 = 0.0
     var i = 0
     while (i < n) {
@@ -136,22 +195,77 @@ object Stats {
       i += 1
     }
     m2 /= n; m3 /= n; m4 /= n
-    val med = fromRanks(50, n, os(4), os(5))
-    val dev = scratch
-    i = 0
-    while (i < n) { dev(i) = math.abs(xs(i) - med).toFloat; i += 1 }
     Array(
       m,
       med,
-      os(1).toDouble,
-      os(0).toDouble,
+      max.toDouble,
+      min.toDouble,
       math.sqrt(m2),
-      selectPercentile(dev, 50),
-      fromRanks(25, n, os(2), os(3)),
-      fromRanks(75, n, os(6), os(7)),
+      mad,
+      q25,
+      q75,
       sum(xs),
       if (zeroVariance(m2, m)) Double.NaN else m3 / math.pow(m2, 1.5),
       if (zeroVariance(m2, m)) Double.NaN else m4 / (m2 * m2) - 3.0)
+  }
+
+  /** A copy of `xs` in ascending order ([[sortedNaNFree]]) when every
+    * value is finite, else null. */
+  private[graft] def sortedIfFinite(xs: Array[Float]): Array[Float] = {
+    var i = 0
+    while (i < xs.length) {
+      if ((java.lang.Float.floatToRawIntBits(xs(i)) & 0x7F800000) == 0x7F800000) return null
+      i += 1
+    }
+    sortedNaNFree(xs)
+  }
+
+  /** A NaN-free array in `java.util.Arrays.sort` order (-0.0 before
+    * +0.0), by an LSD radix sort of the sign-flipped float bits: a
+    * negative value's bits are inverted and a non-negative value's sign
+    * bit is set, which orders the keys as unsigned ints exactly as the
+    * floats compare. Four 8-bit passes, each stable; a pass whose digit
+    * is the same in every key is skipped. */
+  private[graft] def sortedNaNFree(xs: Array[Float]): Array[Float] = {
+    val n = xs.length
+    var keys = new Array[Int](n)
+    var other = new Array[Int](n)
+    var i = 0
+    while (i < n) {
+      val b = java.lang.Float.floatToRawIntBits(xs(i))
+      keys(i) = b ^ ((b >> 31) | Int.MinValue)
+      i += 1
+    }
+    val count = new Array[Int](256)
+    var shift = 0
+    while (shift < 32) {
+      java.util.Arrays.fill(count, 0)
+      i = 0
+      while (i < n) { count((keys(i) >>> shift) & 0xFF) += 1; i += 1 }
+      if (n > 0 && count((keys(0) >>> shift) & 0xFF) != n) {
+        var sum = 0
+        var d = 0
+        while (d < 256) { val c = count(d); count(d) = sum; sum += c; d += 1 }
+        i = 0
+        while (i < n) {
+          val k = keys(i)
+          val d = (k >>> shift) & 0xFF
+          other(count(d)) = k
+          count(d) += 1
+          i += 1
+        }
+        val t = keys; keys = other; other = t
+      }
+      shift += 8
+    }
+    val out = new Array[Float](n)
+    i = 0
+    while (i < n) {
+      val k = keys(i)
+      out(i) = java.lang.Float.intBitsToFloat(if (k < 0) k ^ Int.MinValue else ~k)
+      i += 1
+    }
+    out
   }
 
   // ---- order statistics by selection -------------------------------------

@@ -67,8 +67,8 @@ object Thresholds {
     val (mn, mx) = Stats.minMax(img)
     if (mx == mn) return mn
     // tolerance = min(diff(unique(shifted))) / 2, like skimage float path
-    val sortedVals = img.clone()
-    java.util.Arrays.sort(sortedVals)
+    // (sorting the plane was most of li's cost: a radix sort, not Arrays.sort)
+    val sortedVals = Stats.sortedNaNFree(img)
     var tol = Double.MaxValue
     var i = 1
     while (i < sortedVals.length) {

@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.core.ImageEvent
 import graft.kernels._
-import graft.plans.{WideRowsPlan, WideRowsStrategy}
+import graft.plans.{WideCells, WideRowsPlan, WideRowsStrategy}
 import org.apache.spark.sql.{DataFrame, Dataset, GraftBridge}
 import org.apache.spark.sql.catalyst.plans.logical.CatalystSerde
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
@@ -131,53 +131,65 @@ object Features {
       names.length)
   }
 
-  /** the per-record feature cells in schema order (shared by the
-    * per-branch extract and the fused single-pass pipeline) */
+  /** One record's feature cells: slot `k` of the layout goes to field
+    * `at + k` of `out`, each as a double. A tombstone (no pixels) gets
+    * its regions only, so every other slot stays null; a missing region
+    * count is null too, never NaN. Shared by the per-branch extract and
+    * the fused single-pass pipeline. */
   def featureCells(e: ImageEvent, channelNames: Seq[String],
-      lay: CellLayout): Array[Any] = {
-    val feats = new Array[Any](lay.nSlots)
+      lay: CellLayout, out: WideCells, at: Int): Unit = {
     // regions always available (survives tombstoning)
     var c = 0
     while (c < lay.regionsIdx.length) {
-      feats(lay.regionsIdx(c)) =
-        (if (e.regions != null && c < e.regions.length) e.regions(c).toDouble
-         else null): Any
+      if (e.regions != null && c < e.regions.length)
+        out.setDouble(at + lay.regionsIdx(c), e.regions(c).toDouble)
+      else out.setNull(at + lay.regionsIdx(c))
       c += 1
     }
     if (e.hasPixels)
       // canonical order so raw never clobbers intensity's shared names
-      computeFeatures(e, channelNames, lay.typesOrdered, feats, lay.emitIdx)
-    feats
+      computeFeatures(e, channelNames, lay.typesOrdered, out, at, lay.emitIdx)
   }
 
-  /** the loader meta cells every wide row starts with, in [[schema]]
-    * order */
-  def metaCells(e: ImageEvent): Array[Any] = Array[Any](e.path, e.idx, e.group, e.id)
+  /** the loader meta cells every wide row starts with, fields 0..3 in
+    * [[schema]] order */
+  def metaCells(e: ImageEvent, out: WideCells): Unit = {
+    out.setString(0, e.path)
+    out.setLong(1, e.idx)
+    out.setString(2, e.group)
+    out.setInt(3, e.id)
+  }
 
   /** extract features for one branch → DataFrame with the declared
     * schema */
   def extract(ds: Dataset[ImageEvent], channelNames: Seq[String],
       types: Seq[String], prefix: String = null): DataFrame = {
     val lay = layout(channelNames, types)
-    wideFrame(ds, schema(channelNames, types, prefix))(e =>
-      metaCells(e) ++ featureCells(e, channelNames, lay))
+    val sch = schema(channelNames, types, prefix)
+    require(4 + lay.nSlots == sch.length,
+      s"wide row layout has ${4 + lay.nSlots} cells, schema has ${sch.length} fields")
+    wideFrame(ds, sch) { (e, out) =>
+      metaCells(e, out)
+      featureCells(e, channelNames, lay, out, 4)
+    }
   }
 
-  /** One row of `schema` per event: `cells` returns the row's values in
-    * schema field order (Scala values: String, Long, Int, Double or
-    * null), and [[graft.plans.WideRowsPlan]] writes them straight into
-    * unsafe rows — no `Row` per record and no per-field serializer
-    * expressions for Catalyst to analyze. */
+  /** One row of `schema` per event: `fill` writes the row's cells
+    * through [[graft.plans.WideCells]] (its scaladoc is the contract),
+    * and [[graft.plans.WideRowsPlan]] backs them with unsafe rows — no
+    * `Row` per record, no boxed value per cell and no per-field
+    * serializer expressions for Catalyst to analyze. */
   def wideFrame(ds: Dataset[ImageEvent], schema: StructType)(
-      cells: ImageEvent => Array[Any]): DataFrame = {
+      fill: (ImageEvent, WideCells) => Unit): DataFrame = {
     val spark = ds.sparkSession
     WideRowsStrategy.setup(spark)
-    GraftBridge.ofRows(spark, WideRowsPlan(DataTypeUtils.toAttributes(schema), cells,
+    GraftBridge.ofRows(spark, WideRowsPlan(DataTypeUtils.toAttributes(schema), fill,
       CatalystSerde.deserialize(ds.queryExecution.analyzed)(ds.encoder)))
   }
 
   /** all requested non-regions families for a pixel-bearing event,
-    * written straight into `feats` through the layout's slot plan
+    * written straight into `out` (from field `at`) through the
+    * layout's slot plan
     * (emission order per family == [[familyNames]] order — the
     * contract [[layout]] documents; later families overwrite shared
     * slots).
@@ -197,10 +209,10 @@ object Features {
     * differ from the combined rows of an empty combined mask. Every
     * value is the one the per-channel computation gives, bit for bit. */
   private def computeFeatures(e: ImageEvent, channelNames: Seq[String],
-      types: Array[String], feats: Array[Any], emitIdx: Array[Int]): Unit = {
+      types: Array[String], out: WideCells, at: Int, emitIdx: Array[Int]): Unit = {
     val h = e.height; val w = e.width
     var k = 0
-    def emit(v: Double): Unit = { feats(emitIdx(k)) = v; k += 1 }
+    def emit(v: Double): Unit = { out.setDouble(at + emitIdx(k), v); k += 1 }
     def emitAll(row: Array[Double]): Unit = {
       var i = 0
       while (i < row.length) { emit(row(i)); i += 1 }
@@ -356,11 +368,8 @@ object Features {
     // a view's row into out(at), its background-subtracted twin's into
     // out(at + 1)
     def viewAndTwin(px: Array[Float], b: Double, at: Int): Unit = {
-      val s = px.clone()
-      val os = Stats.orderStats(s)
-      out(at) = Stats.intensityRow(px, os, s)
-      val twin = px.map(x => (x - b).toFloat)
-      out(at + 1) = Stats.intensityRow(twin, twinOrderStats(os, b, twin), s)
+      out(at) = Stats.intensityRow(px)
+      out(at + 1) = Stats.intensityRow(px.map(x => (x - b).toFloat))
     }
 
     if (Morphology.any(mp)) {
@@ -378,21 +387,6 @@ object Features {
     }
     out
   }
-
-  /** Order statistics of a background-subtracted twin `twin(i) = (px(i)
-    * - b).toFloat`, from those of the view `px` ([[Stats.orderStats]]).
-    * The map x ↦ (x - b).toFloat never reverses two values in
-    * `Arrays.sort(float[])`'s order for a finite or NaN `b`: the double
-    * subtraction and the rounding to float are both monotone, a NaN
-    * stays NaN (sorted last), -0.0 maps to a value no greater than
-    * +0.0's, and a difference that rounds to zero keeps its sign. So the
-    * twin's sorted array is the view's sorted array mapped value by
-    * value, and each of its order statistics is the view's mapped.
-    * An infinite `b` breaks that (-Inf - -Inf is NaN, which sorts last),
-    * so the twin's statistics are then selected afresh. */
-  private[graft] def twinOrderStats(os: Array[Float], b: Double, twin: Array[Float]): Array[Float] =
-    if (b.isInfinite) Stats.orderStats(twin.clone())
-    else os.map(x => (x - b).toFloat)
 
   val texRowLen: Int = Glcm.Props.length * 2 * GlcmDistances.length + 4
 

@@ -3,7 +3,7 @@ package graft.ops
 import graft.core.{ImageEvent, RunCaches}
 import graft.core.Codecs._
 import graft.kernels.Filters
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 
 /** Retrospective illumination correction (Jones 2006 / Singh 2014) —
@@ -78,7 +78,6 @@ object Illumination {
     * jones_2006.py:38-55) */
   def correctionImages(spark: SparkSession, ds: Dataset[ImageEvent],
       medianSize: Int = 50): Map[String, Array[Float]] = {
-    import spark.implicits._
     // Aggregator via groupByKey.agg: partial aggregation per partition
     // (ObjectHashAggregate), only ngroups image-sized buffers shuffle.
     // The O(C·H·W·window) median-filter finish runs in the same

@@ -81,15 +81,7 @@ object Masking {
       case NoOp =>
         throw new IllegalStateException(
           "NoOp never reaches maskChannel — branch/branchRecord pass through")
-      case Circle =>
-        // centered disk, radius min(h,w)/3 (masking/circle.py:4-26)
-        val cy = h / 2; val cx = w / 2
-        val radius = math.min(w, h) / 3
-        val m = Array.tabulate(h * w) { i =>
-          val r = i / w; val c = i % w
-          math.sqrt((c - cx).toDouble * (c - cx) + (r - cy).toDouble * (r - cy)) <= radius
-        }
-        (m, 1)
+      case Circle => (circleMask(h, w), 1)
 
       case Otsu =>
         // digitize(512) if bright; median(disk5); subtract; gaussian .5;
@@ -224,6 +216,28 @@ object Masking {
     (asBool, n)
   }
 
+  /** The circle method's mask (masking/circle.py:4-26): the centered
+    * disk of radius min(h, w) / 3, the pixels whose distance from
+    * (h / 2, w / 2) is at most the radius. It depends only on the
+    * shape, so [[masksRecord]] builds it once per event for all of the
+    * event's channels. */
+  private[ops] def circleMask(h: Int, w: Int): Array[Boolean] = {
+    val cy = h / 2; val cx = w / 2
+    val radius = math.min(w, h) / 3
+    val m = new Array[Boolean](h * w)
+    var r = 0
+    while (r < h) {
+      var c = 0
+      while (c < w) {
+        m(r * w + c) =
+          math.sqrt((c - cx).toDouble * (c - cx) + (r - cy).toDouble * (r - cy)) <= radius
+        c += 1
+      }
+      r += 1
+    }
+    m
+  }
+
   private def liChannel(x: Array[Float], h: Int, w: Int, sigma: Double): (Array[Boolean], Int) = {
     val g1 = Filters.gaussian(x, h, w, sigma)
     val edges = Filters.sobel(g1, h, w)
@@ -257,11 +271,14 @@ object Masking {
     val mask = new Array[Int](e.channels * ps)
     val regions = new Array[Int](e.channels)
     val gate = honorsMaskFilter(method)
+    // the circle mask is every channel's: built once, for the event
+    lazy val circle = (circleMask(e.height, e.width), 1)
     var c = 0
     while (c < e.channels) {
       val allowed = !gate || e.maskFilter == null || e.maskFilter(c)
       if (allowed) {
-        val (m, cc) = maskChannel(method, e.plane(c), e.height, e.width, c)
+        val (m, cc) =
+          if (method == Circle) circle else maskChannel(method, e.plane(c), e.height, e.width, c)
         var i = 0
         while (i < ps) { if (m(i)) mask(c * ps + i) = 1; i += 1 }
         regions(c) = cc

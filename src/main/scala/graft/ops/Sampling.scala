@@ -12,7 +12,6 @@ object Sampling {
     * At scale this is a TakeOrderedAndProject (per-partition top-k,
     * k rows to the driver stage), not a full sort. */
   def sampleExact(ds: Dataset[ImageEvent], k: Int, seed: Long = 42): Dataset[ImageEvent] = {
-    import ds.sparkSession.implicits._
     ds.orderBy(rand(seed)).limit(k).as[ImageEvent]
   }
 
@@ -22,7 +21,6 @@ object Sampling {
     * collection; the oversample+limit trims the (tiny, whp) surplus. */
   def sampleWithReplacement(ds: Dataset[ImageEvent], k: Int, seed: Long = 42,
       caches: RunCaches = new RunCaches): Dataset[ImageEvent] = {
-    import ds.sparkSession.implicits._
     // cache: the count, the draw(s), and the final trim each execute
     // the full upstream plan otherwise (released at the run boundary —
     // Cli's RunCaches / Verify's per-query scope)

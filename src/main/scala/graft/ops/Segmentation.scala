@@ -310,26 +310,6 @@ object Segmentation {
     n
   }
 
-  /** mask subtraction P6 (segmentation/__init__.py:11-13): channel k's
-    * mask becomes mask(i) − mask(j) (set difference). Like the
-    * reference's _substract_mask, `regions` is deliberately NOT
-    * recomputed — the reference reassigns the mask channel only. */
-  def subtractMask(ds: Dataset[ImageEvent], k: Int, i: Int, j: Int): Dataset[ImageEvent] =
-    ds.map(ImageEvent.whenPixels { e =>
-      if (!e.hasMask) e
-      else {
-        val ps = e.planeSize
-        val mask = e.mask.clone()
-        var p = 0
-        while (p < ps) {
-          mask(k * ps + p) =
-            if (e.mask(i * ps + p) > 0 && e.mask(j * ps + p) == 0) e.mask(i * ps + p) else 0
-          p += 1
-        }
-        e.copy(mask = mask)
-      }
-    })
-
   /** X1 `to_events` (segmentation/__init__.py:70-119): one event per
     * detected region in the parent channel — pixels and mask cropped
     * to the region bbox, per-channel regions flags, zeroed backgrounds,

@@ -3,6 +3,7 @@ package graft.pipeline
 import graft.core.{ImageEvent, RunCaches, Synthetic}
 import graft.ops._
 import graft.ops.Normalization.Extents
+import graft.plans.WideCells
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
@@ -140,8 +141,8 @@ object Pipeline {
     val src =
       if (cfg.populationFilter || cfg.normalize || withExtents) caches.cache(ds) else ds
     val (steps, extents) = chains(src, cfg, withExtents)
-    val (sch, cells) = fusedRow(cfg, steps)
-    (Features.wideFrame(src, sch)(cells), extents)
+    val (sch, fill) = fusedRow(cfg, steps)
+    (Features.wideFrame(src, sch)(fill), extents)
   }
 
   /** every chain's masking step: the mask branches in config order,
@@ -182,12 +183,13 @@ object Pipeline {
   }
 
   /** the fused wide row: its declared schema (meta ++ every branch's
-    * feature columns ++ raw) and the per-record cells in that order,
-    * each chain's cells from its record under `chains` ([[maskSteps]]
+    * feature columns ++ raw) and the per-record cell writer, which
+    * writes each chain's cells, in that order, from its record under
+    * `chains` ([[maskSteps]]
     * for a config without aggregates); each branch may select its own
     * feature types (the reference's per-branch feature_extraction map) */
   private[graft] def fusedRow(cfg: PipelineConfig,
-      chains: Seq[ImageEvent => ImageEvent]): (StructType, ImageEvent => Array[Any]) = {
+      chains: Seq[ImageEvent => ImageEvent]): (StructType, (ImageEvent, WideCells) => Unit) = {
     val channelNames = cfg.channelNames
     val perChain =
       cfg.branches.map(b => (branchPrefix(b), b.featureTypes.getOrElse(cfg.featureTypes))) ++
@@ -198,11 +200,21 @@ object Pipeline {
     val sch = StructType(
       Features.schema(channelNames, cfg.featureTypes, null).fields.take(4) ++
         featNames.map(StructField(_, DoubleType)))
-    val layouts = perChain.map { case (_, types) => Features.layout(channelNames, types) }
-    val cells = (e: ImageEvent) =>
-      Features.metaCells(e) ++ chains.indices.iterator.flatMap(i =>
-        Features.featureCells(chains(i)(e), channelNames, layouts(i)))
-    (sch, cells)
+    val layouts = perChain.map { case (_, types) => Features.layout(channelNames, types) }.toArray
+    // chain i's cells start at field starts(i), after the 4 meta fields
+    val starts = layouts.scanLeft(4)(_ + _.nSlots)
+    require(starts.last == sch.length,
+      s"wide row layout has ${starts.last} cells, schema has ${sch.length} fields")
+    val steps = chains.toArray
+    val fill = (e: ImageEvent, out: WideCells) => {
+      Features.metaCells(e, out)
+      var i = 0
+      while (i < steps.length) {
+        Features.featureCells(steps(i)(e), channelNames, layouts(i), out, starts(i))
+        i += 1
+      }
+    }
+    (sch, fill)
   }
 
   /** the reference's own e2e shape (test/data/scip_zarr.yml): synthetic

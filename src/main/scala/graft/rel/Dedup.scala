@@ -1,7 +1,7 @@
 package graft.rel
 
 import graft.core.Overlap
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for large-scale training-data pipelines —

@@ -1,6 +1,6 @@
 package graft.rel
 
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{Files, Path}
 
 /** Crash/concurrency-safe on-disk fixture creation. The old
   * exists-check-then-write-in-place pattern had a trap: a killed JVM

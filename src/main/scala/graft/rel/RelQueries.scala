@@ -1,6 +1,6 @@
 package graft.rel
 
-import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 

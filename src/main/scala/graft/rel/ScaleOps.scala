@@ -177,7 +177,7 @@ object ScaleOps {
     * stored id qualifies; a generated row index does NOT — that
     * re-opens the SPARK-23207 hole this hash exists to close). */
   private def contentSalt(df: DataFrame, saltBuckets: Int,
-      saltCols: Seq[String] = Nil): Column = {
+      saltCols: Seq[String]): Column = {
     val src = if (saltCols.nonEmpty) saltCols else df.columns.toSeq
     pmod(xxhash64(src.map(col): _*), lit(saltBuckets.toLong))
   }

@@ -881,7 +881,6 @@ object Similarity {
     * shortlist per query, still broadcast-sized). */
   def knnPq(spark: SparkSession, dir: String, nQueries: Int, k: Int,
       m: Int = 16, ks: Int = 32, shortlist: Int = 0): DataFrame = {
-    import spark.implicits._
     val e = Tables.embeddings(spark, dir)
     val shortlistN =
       if (shortlist > 0) shortlist
@@ -977,7 +976,6 @@ object Similarity {
   def knnIvfPq(spark: SparkSession, dir: String, nQueries: Int, k: Int,
       nList: Int = 16, nProbe: Int = 8, m: Int = 16, ks: Int = 32,
       shortlist: Int = 0): DataFrame = {
-    import spark.implicits._
     val e = Tables.embeddings(spark, dir)
     // adaptive default 4·√n (vs s05's 2·√n): the compound index stacks
     // TWO approximation stages, so both need slack — measured at sf0.1
@@ -1228,7 +1226,6 @@ object Similarity {
   def knnIvfCompacted(spark: SparkSession, dir: String, nQueries: Int,
       k: Int, nList: Int = 16, nProbe: Int = 14)
       : (DataFrame, Boolean, Boolean, Boolean) = {
-    import spark.implicits._
     val e = Tables.embeddings(spark, dir)
     val idxPath = ivfIndexPath(dir) + "_compact"
     // the full pre-compaction lifecycle: v1 build on 4/5 of the
@@ -1464,7 +1461,6 @@ object Similarity {
     * no seed, no iteration order (spec-pinned). */
   def knnSq8(spark: SparkSession, dir: String, nQueries: Int, k: Int,
       shortlist: Int = 0): DataFrame = {
-    import spark.implicits._
     val e = Tables.embeddings(spark, dir)
     val unitized = e.select(col("vec_id"), unitUdf(col("embedding")).as("u"))
     // the corpus size rides the bounds aggregate for free (count of

@@ -1492,7 +1492,7 @@ object TextOps {
     * a pre-materialized (doc_id, ts) frame, so the parquet scan +
     * tokenize pass is paid once instead of once per subplan leg. */
   private def lmFrames(s: SparkSession, d: String,
-      toksOverride: Option[DataFrame] = None)
+      toksOverride: Option[DataFrame])
       : (DataFrame, DataFrame, DataFrame) = {
     val toks = toksOverride.getOrElse(Tables.documents(s, d)
       .select(col("doc_id"), tokens(col("text")).as("ts")))
@@ -1839,7 +1839,6 @@ object TextOps {
     * symbolized frame. */
   private[rel] def bpeTrainMerges(s: SparkSession, d: String,
       merges: Int): Seq[(String, String, Long, Long, Long)] = {
-    import s.implicits._
     val wc = Tables.documents(s, d)
       .select(explode(tokens(col("text"))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("f"))

@@ -1,12 +1,13 @@
 package graft.sources
 
 import graft.core.{Codecs, ImageEvent}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.types.{IntegerType, MapType, StringType, StructField, StructType}
 import java.io.{IOException, RandomAccessFile}
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Paths, StandardOpenOption}
 
 /** Carl Zeiss Image (CZI / ZISRAW) source — reference S8
   * (loading/czi.py:65-102: scenes × mosaic tiles → events, pixels
@@ -296,7 +297,6 @@ object Czi {
   def metaFromDirectory(spark: SparkSession, path: String,
       scenes: Seq[String] = null, scenesRegex: String = null,
       regex: String = null): DataFrame = {
-    import spark.implicits._
     val index = readIndex(path)
     val sceneIdxs = index.entries.map(_.start("S")).distinct.sorted
     val names = sceneIdxs.map(i => i -> index.sceneNames.getOrElse(i, s"S$i")).toMap
@@ -341,9 +341,20 @@ object Czi {
         }
       (path, name, s, t, meta)
     }
-    rows.zipWithIndex.map { case ((p, name, s, t, m), id) => (p, name, s, t, id, m) }
-      .toDF("path", "scene", "scene_index", "tile", "id", "meta")
+    val metaRows = rows.zipWithIndex.map { case ((p, name, s, t, m), id) => Row(p, name, s, t, id, m) }
+    spark.createDataFrame(java.util.Arrays.asList(metaRows: _*), MetaSchema)
   }
+
+  /** the meta relation's schema: the one a `(String, String, Int, Int,
+    * Int, Map[String, String])` tuple encoder derives, nullability
+    * included, without deriving that encoder on every scan */
+  private val MetaSchema = StructType(Seq(
+    StructField("path", StringType),
+    StructField("scene", StringType),
+    StructField("scene_index", IntegerType, nullable = false),
+    StructField("tile", IntegerType, nullable = false),
+    StructField("id", IntegerType, nullable = false),
+    StructField("meta", MapType(StringType, StringType))))
 
   // ---- S8 pixel load ------------------------------------------------------
 

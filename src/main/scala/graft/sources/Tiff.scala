@@ -2,7 +2,6 @@ package graft.sources
 
 import graft.core.{Codecs, ImageEvent}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path, Paths}
 import javax.imageio.ImageIO
 import scala.jdk.CollectionConverters._

@@ -770,7 +770,7 @@ object Streaming {
     * [[eventsStream]] (same two-layout handling; no ts column, so no
     * nanos normalization). */
   private def docsStream(s: SparkSession, dir: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+      maxFilesPerTrigger: Option[Int]): DataFrame =
     tableStream(s, dir, "documents.parquet", maxFilesPerTrigger)
 
   /** INCREMENTAL curation (p27) — the batch curation DAG (p26) run

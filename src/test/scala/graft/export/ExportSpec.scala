@@ -218,4 +218,17 @@ class ExportSpec extends SparkSpec {
       assert(back.schema.map(_.name) == df.schema.map(_.name))
     }
   }
+
+  test("a field of another type fails on the driver, before any part is scrubbed or written") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("export-type").toString
+    Export.parquetPartFiles((0 until 4).toDF("v").repartition(2), dir, "features")
+    val before = new java.io.File(dir).listFiles().map(f => (f.getName, f.lastModified)).toSet
+    val df = (0 until 4).map(i => (i.toDouble, i % 2 == 0)).toDF("d", "flag").repartition(3)
+    // thrown as it is, not as the cause of a failed job's SparkException
+    val bad = intercept[UnsupportedOperationException](Export.parquetPartFiles(df, dir, "features"))
+    assert(bad.getMessage.contains("field flag has type boolean"), bad.getMessage)
+    // the earlier parts are neither scrubbed nor overwritten
+    assert(new java.io.File(dir).listFiles().map(f => (f.getName, f.lastModified)).toSet == before)
+  }
 }

@@ -4,11 +4,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Proves the selection-based order statistics (Stats.select,
   * orderStats, selectPercentile and the intensity row built on them)
-  * equal to the sort-based code they replaced, which is kept here
-  * verbatim as the reference. The background-subtracted twins of
-  * Features.intensityViews, whose order statistics are the view's
-  * mapped by x ↦ (x - b).toFloat, are checked against the reference
-  * row of the subtracted array.
+  * and the radix-sorted intensity row of finite vectors equal to the
+  * sort-based code they replaced, which is kept here verbatim as the
+  * reference. The background-subtracted twins of
+  * Features.intensityViews, x ↦ (x - b).toFloat of a view, are checked
+  * against the reference row of the subtracted array.
   *
   * Doubles compare by `doubleToLongBits` (so -0.0 differs from +0.0,
   * and every NaN equals every NaN), floats by `floatToIntBits`. */
@@ -137,13 +137,30 @@ class StatsEquivalenceSpec extends AnyFunSuite {
       val pixel = if (xs.nonEmpty) xs(xs.length / 2).toDouble else 3.0
       val bs = Seq(0.0, -0.0, 1e-30, -1e-30, pixel, 1e6, -1e6,
         Double.PositiveInfinity, Double.NegativeInfinity, Double.NaN)
-      val s = xs.clone()
-      val os = Stats.orderStats(s)
       for (b <- bs) {
         val twin = xs.map(x => (x - b).toFloat)
-        val got = Stats.intensityRow(twin,
-          graft.ops.Features.twinOrderStats(os, b, twin), new Array[Float](twin.length))
-        assertSameRow(got, refIntensityRow(twin), s"b=$b n=${xs.length}")
+        assertSameRow(Stats.intensityRow(twin), refIntensityRow(twin), s"b=$b n=${xs.length}")
+      }
+    }
+  }
+
+  test("the selection row equals the sorted row on finite vectors") {
+    // the two ways intensityRow takes order statistics, on the inputs
+    // that can take either: finite values of every length and spread,
+    // signed zeros, extremes whose deviations overflow to infinity
+    val rng = new scala.util.Random(11)
+    val finite = specials.filter(v => !v.isNaN && !v.isInfinite)
+    for (n <- Seq(1, 2, 3, 4, 63, 64, 65, 66, 200, 2304); _ <- 0 until 4) {
+      for (xs <- Seq(
+          Array.fill(n)(rng.nextGaussian().toFloat * 100f),
+          Array.fill(n)(rng.nextInt(6).toFloat - 2f),
+          Array.fill(n)(finite(rng.nextInt(finite.length))),
+          Array.fill(n)(if (rng.nextBoolean()) 0.0f else -0.0f),
+          Array.fill(n)(if (rng.nextBoolean()) Float.MaxValue else -Float.MaxValue))) {
+        val s = xs.clone()
+        val bySelection = Stats.intensityRow(xs, Stats.orderStats(s), s)
+        assertSameRow(Stats.intensityRow(xs), bySelection, s"n=$n ${xs.take(4).mkString(",")}")
+        assertSameRow(Stats.intensityRow(xs), refIntensityRow(xs), s"n=$n reference")
       }
     }
   }

@@ -72,7 +72,9 @@ class FeatureReuseSpec extends AnyFunSuite {
 
   private def assertSameCells(e: ImageEvent, channelNames: Seq[String], what: String,
       types: Seq[String] = AllTypes): Unit = {
-    val got = Features.featureCells(e, channelNames, Features.layout(channelNames, types))
+    val lay = Features.layout(channelNames, types)
+    val got = graft.plans.ArrayCells.of(lay.nSlots, e,
+      Features.featureCells(_, channelNames, lay, _, 0))
     val want = reference(e, channelNames, types)
     val names = Features.featureNames(channelNames, types)
     assert(got.length == want.length, what)

@@ -37,10 +37,12 @@ class WideRowsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     maskFilters = Seq(Masking.StdFilter(Seq(0), threshold = 1e9)))
 
   /** the mechanism WideRowsPlan replaced: a `Row` per record through
-    * the row encoder of the declared schema */
+    * the row encoder of the declared schema, over the same cells */
   private def rowEncoderFrame(ds: Dataset[ImageEvent], sch: StructType)(
-      cells: ImageEvent => Array[Any]): DataFrame =
-    ds.map(e => Row.fromSeq(cells(e).toSeq))(Encoders.row(sch))
+      fill: (ImageEvent, WideCells) => Unit): DataFrame = {
+    val n = sch.length
+    ds.map(e => Row.fromSeq(ArrayCells.of(n, e, fill).toSeq))(Encoders.row(sch))
+  }
 
   /** rows keyed by meta_idx, NaN made comparable to itself */
   private def keyed(df: DataFrame): Map[Long, Seq[Any]] =
@@ -54,9 +56,9 @@ class WideRowsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   /** the pipeline's wide frame equals the row-encoder frame of the same
     * cells; returns its rows */
   private def assertSameFrame(cfg: PipelineConfig, nEvents: Int): Map[Long, Seq[Any]] = {
-    val (sch, cells) = Pipeline.fusedRow(cfg, Pipeline.maskSteps(cfg))
+    val (sch, fill) = Pipeline.fusedRow(cfg, Pipeline.maskSteps(cfg))
     val ds = Pipeline.prepare(spark, Synthetic.conftest(spark, nEvents), cfg)
-    val expected = rowEncoderFrame(ds, sch)(cells)
+    val expected = rowEncoderFrame(ds, sch)(fill)
     val wide = Pipeline.run(spark, Synthetic.conftest(spark, nEvents), cfg)
     assert(wide.schema == expected.schema) // StructType equality covers nullability
     val (a, b) = (keyed(wide), keyed(expected))
@@ -73,8 +75,9 @@ class WideRowsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("tombstoned events: null feature cells equal the row-encoder frame") {
     val rows = assertSameFrame(tombstoneCfg, 6)
-    // meta and regions survive; every feature cell is null
+    // meta and regions survive; every other feature cell is null, not NaN
     assert(rows.values.forall(r => r.take(4).forall(_ != null) && r.contains(null)))
+    assert(rows.values.forall(!_.contains("NaN")))
   }
 
   test("per-branch extract equals the row-encoder frame") {
@@ -84,8 +87,10 @@ class WideRowsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val lay = Features.layout(channels, types)
     val ds = Masking.branch(Synthetic.conftest(spark, 5), Masking.Spot(3), 0)
     val wide = Features.extract(ds, channels, types, "b")
-    val expected = rowEncoderFrame(ds, sch)(e =>
-      Features.metaCells(e) ++ Features.featureCells(e, channels, lay))
+    val expected = rowEncoderFrame(ds, sch) { (e, out) =>
+      Features.metaCells(e, out)
+      Features.featureCells(e, channels, lay, out, 4)
+    }
     assert(wide.schema == expected.schema)
     assert(keyed(wide) == keyed(expected))
   }
@@ -113,13 +118,25 @@ class WideRowsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("nulls of every field type and a non-ASCII string equal the row-encoder frame") {
     val sch = StructType(Seq(StructField("k", LongType), StructField("s", StringType),
-      StructField("l", LongType), StructField("i", IntegerType), StructField("d", DoubleType)))
-    val cells = (e: ImageEvent) =>
-      if (e.idx % 2 == 0) Array[Any](e.idx, null, null, null, null)
-      else Array[Any](e.idx, "Zellkern · 細胞 · ядро ✓", -e.idx, e.id, -0.0)
+      StructField("l", LongType), StructField("i", IntegerType), StructField("d", DoubleType),
+      StructField("n", DoubleType)))
+    val fill = (e: ImageEvent, out: WideCells) => {
+      out.setLong(0, e.idx)
+      // a later double write replaces an earlier one
+      out.setDouble(5, 1.0)
+      // field 4 of an even row gets no write at all, so it is null
+      if (e.idx % 2 == 0) (1 to 3).foreach(out.setNull)
+      else {
+        out.setString(1, "Zellkern · 細胞 · ядро ✓")
+        out.setLong(2, -e.idx)
+        out.setInt(3, e.id)
+        out.setDouble(4, -0.0)
+      }
+      out.setDouble(5, Double.NaN)
+    }
     val ds = Synthetic.conftest(spark, 6)
-    val wide = Features.wideFrame(ds, sch)(cells)
-    val expected = rowEncoderFrame(ds, sch)(cells)
+    val wide = Features.wideFrame(ds, sch)(fill)
+    val expected = rowEncoderFrame(ds, sch)(fill)
     assert(wide.schema == expected.schema)
     def rows(df: DataFrame) = df.collect().map(_.toSeq.map {
       case d: java.lang.Double => java.lang.Double.doubleToRawLongBits(d)
@@ -127,12 +144,32 @@ class WideRowsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }).sortBy(_.head.asInstanceOf[Long]).toSeq
     val got = rows(wide)
     assert(got == rows(expected))
-    assert(got.count(_.tail.forall(_ == null)) == 3 && got.exists(_.contains("Zellkern · 細胞 · ядро ✓")))
+    val (negZero, nan) = (java.lang.Double.doubleToRawLongBits(-0.0),
+      java.lang.Double.doubleToRawLongBits(Double.NaN))
+    assert(got.count(_.slice(1, 5).forall(_ == null)) == 3)
+    assert(got.count(r => r(1) == "Zellkern · 細胞 · ядро ✓" && r(4) == negZero) == 3)
+    assert(got.forall(_(5) == nan))
     val bad = intercept[UnsupportedOperationException] {
-      Features.wideFrame(ds, StructType(Seq(StructField("f", FloatType))))(_ => Array[Any](1.0f))
-        .collect()
+      Features.wideFrame(ds, StructType(Seq(StructField("f", FloatType))))((_, out) =>
+        out.setDouble(0, 1.0)).collect()
     }
     assert(bad.getMessage.contains("wide row field f has type float"))
+  }
+
+  test("a write past the last field or of the wrong type fails the task") {
+    val sch = StructType(Seq(StructField("d", DoubleType), StructField("s", StringType)))
+    val ds = Synthetic.conftest(spark, 2)
+    for ((write, what) <- Seq[((ImageEvent, WideCells) => Unit, String)](
+        ((_, out) => out.setDouble(2, 1.0), "write to field 2; the row has 2 fields"),
+        ((_, out) => out.setNull(-1), "write to field -1; the row has 2 fields"),
+        ((_, out) => out.setLong(0, 1L), "write of a bigint to field 0, a double field"),
+        ((_, out) => out.setDouble(1, 1.0), "write of a double to field 1, a string field"))) {
+      val failed = intercept[org.apache.spark.SparkException](
+        Features.wideFrame(ds, sch)(write).collect())
+      val causes = Iterator.iterate[Throwable](failed)(_.getCause).takeWhile(_ != null).toSeq
+      assert(causes.exists(c => c.isInstanceOf[IllegalStateException] &&
+        c.getMessage == s"wide row $what"), failed)
+    }
   }
 
   /** the executed plan's wide-row nodes and md5-computing projections */
@@ -158,6 +195,30 @@ class WideRowsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val fromParquet = Digest.rows(spark.read.parquet(dir), PipelineQueries.DigestKeys)
     assert(digestPlan(fromParquet) == ((0, 1)), fromParquet.queryExecution.executedPlan)
     assert(fromParquet.collect().length == 4)
+  }
+
+  test("a zarr-shape export renders its plan compactly and logs no truncation warning") {
+    // Spark logs the warning once per JVM, when it first cuts a plan
+    // string at maxToStringFields, and records that in this flag
+    val warned = {
+      val f = Class.forName("org.apache.spark.util.SparkStringUtils$")
+        .getDeclaredField("truncationWarningPrinted")
+      f.setAccessible(true)
+      f.get(null).asInstanceOf[java.util.concurrent.atomic.AtomicBoolean]
+    }
+    val wide = Pipeline.run(spark, Synthetic.conftest(spark, 4), referenceCfg)
+    assert(wide.schema.length > 2700)
+    val dir = java.nio.file.Files.createTempDirectory("wide-plan").toString
+    val before = warned.getAndSet(false)
+    try {
+      graft.export.Export.parquetPartFiles(wide, dir, "features")
+      val plan = wide.queryExecution.executedPlan.toString
+      assert(plan.contains(s"WideRows[${wide.schema.length} fields: meta_path, …]"), plan)
+      assert(plan.length < 2000, plan)
+      assert(wide.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode).length < 4000)
+      assert(!warned.get())
+    } finally warned.compareAndSet(false, before)
   }
 
   test("setup installs the strategy once") {

@@ -79,8 +79,16 @@ class DigestSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       Row(null, -7L, "", Int.MinValue, Double.NaN, null, -0.0))
     val keys = Seq("meta_path", "meta_idx", "meta_id")
     val plain = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), wide)
-    val wideRows = Features.wideFrame(Synthetic.conftest(spark, rows.length), wide)(
-      e => rows(e.idx.toInt).toSeq.toArray)
+    val wideRows = Features.wideFrame(Synthetic.conftest(spark, rows.length), wide) { (e, out) =>
+      val r = rows(e.idx.toInt)
+      for (i <- 0 until r.length) r.get(i) match {
+        case null => out.setNull(i)
+        case s: String => out.setString(i, s)
+        case l: Long => out.setLong(i, l)
+        case n: Int => out.setInt(i, n)
+        case d: Double => out.setDouble(i, d)
+      }
+    }
     val fused = Digest.rows(wideRows, keys)
     val projected = Digest.rows(plain, keys)
     assert(wideExecs(fused) == 1 && wideExecs(projected) == 0)
